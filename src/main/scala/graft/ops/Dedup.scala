@@ -73,13 +73,14 @@ object Dedup {
     * so a near-identical-heavy corpus cannot blow one task up
     * quadratically; drops are counted in a named accumulator.
     *
-    * The shingle computation executes once over the corpus (banding)
-    * plus twice over the PAIR-SURVIVING ids only: the verification
-    * lookup is pruned by a semi join against the materialized pair
-    * set's ids before shingling, so the join-back branches recompute
-    * (and potentially shuffle) shingles for O(pairs) rows, not
-    * O(corpus) — the recompute-over-shuffle trade now applies to the
-    * sliver that actually needs verification.
+    * At threshold 1.0 the shingle computation executes once over the
+    * corpus (banding) plus twice over the PAIR-SURVIVING ids only: the
+    * verification lookup is pruned by a semi join against the
+    * materialized pair set's ids before shingling
+    * ([[LshPairs.joinPayloadsPruned]]), so the join-back branches
+    * recompute (and potentially shuffle) shingles for O(pairs) rows, not
+    * O(corpus). Below 1.0 every row is shingled for an unpruned join:
+    * that mode expects a bounded input (the contract is in [[LshPairs]]).
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b.
     */
@@ -124,54 +125,44 @@ object Dedup {
         posexplode(HashOps.band_buckets_col(col("sig"), rowsPerBand))
           .as(Seq("band", "bucket")): _*)
 
-    // Verification strategy splits on the mode:
-    //  - exactOnly (the at-scale/pipeline setting): the pair set is
-    //    pinned once (localCheckpoint: candidate generation must not
-    //    re-execute per consumer) and COUNTED, then the verification
-    //    lookup is PRUNED to ids that actually appear in a surviving
-    //    pair — shingle arrays are recomputed (and, under a
-    //    non-broadcast plan, shuffled) only for that sliver of the
-    //    corpus instead of every row, twice. Both the id set (semi
-    //    join) and the pair set (verify joins) carry a measured-size
-    //    broadcast guard: when they fit the session threshold every
-    //    corpus touch stays map-side.
-    //  - threshold < 1.0 (bounded-subset similarity search): no tag
-    //    prefilter exists, so the candidate set is O(bucket overlap) of
-    //    the input and the pruning machinery's extra actions (eager
-    //    checkpoint + count) cost more than shingling the corpus once.
-    //    One action, the capped-pair exchange reused across both verify
-    //    joins — the measured fixture-scale shape.
-    val candRaw = LshPairs.cappedIdPairs(banded, maxBucket, acc,
-                                         matchTag = exactOnly)
-    val (pairSide, lookup) =
-      if (exactOnly) {
-        val cand = candRaw.localCheckpoint()
-        val nCand = cand.count()
-        val pairIds = cand
-          .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-        val idsSide = LshPairs.broadcastIfFits(pairIds, 2L * nCand, 24L)
-        val lk = df
-          .select(col(idCol).cast("long").as("id"), col(textCol).as("__mnd_text"))
-          .join(idsSide, Seq("id"), "left_semi")
-          .select(col("id"), shingles(col("__mnd_text"), shingleN).as("sh"))
-        (LshPairs.broadcastIfFits(cand, nCand, 48L), lk)
-      } else {
-        val lk = df
-          .select(col(idCol).cast("long").as("id"),
-                  shingles(col(textCol), shingleN).as("sh"))
-          .filter(size(col("sh")) > 0)
-        (candRaw, lk)
-      }
-    pairSide
-      .join(lookup.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(lookup.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
+    // Verification shape splits on the mode (see LshPairs): exactOnly
+    // is the at-scale/pipeline setting and takes the pruned join — the
+    // shingle arrays are computed only for the pair-surviving sliver of
+    // the corpus; below 1.0 no tag prefilter exists and the one-action
+    // unpruned join is the measured shape for the bounded inputs this
+    // mode expects.
+    val candidates = LshPairs.cappedIdPairs(banded, maxBucket, acc,
+                                            matchTag = exactOnly)
+    jaccardAbove(
+      if (exactOnly)
+        LshPairs.joinPayloadsPruned(
+          candidates,
+          df.select(col(idCol).cast("long").as("id"),
+                    col(textCol).as("__mnd_text")),
+          shingles(col("__mnd_text"), shingleN).as("sh"))
+      else
+        LshPairs.joinPayloads(
+          candidates,
+          df.select(col(idCol).cast("long").as("id"),
+                    shingles(col(textCol), shingleN).as("sh"))
+            .filter(size(col("sh")) > 0)),
+      threshold)
+  }
+
+  /** (id_a, id_b, jaccard) of verify-joined shingle pairs
+    * (payload_a, payload_b) whose exact Jaccard reaches `threshold` —
+    * the one verification of [[minhashNearDups]] and
+    * [[IncrementalLsh.roundPairs]]. The threshold applies to the
+    * unrounded value; rounding is output-only.
+    */
+  private[ops] def jaccardAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .withColumn("inter", size(array_intersect(col("payload_a"), col("payload_b"))).cast("double"))
+      .withColumn("uni", size(array_union(col("payload_a"), col("payload_b"))).cast("double"))
       .withColumn("jaccard_raw", col("inter") / greatest(col("uni"), lit(1.0)))
-      .filter(col("jaccard_raw") >= threshold) // filter BEFORE rounding
+      .filter(col("jaccard_raw") >= threshold)
       .withColumn("jaccard", round(col("jaccard_raw"), 4))
       .select("id_a", "id_b", "jaccard")
-  }
 
   /** 64-bit SimHash over word tokens, computed in one pass by the
     * codegen'd [[graft.ops.SimHash64Expression]]. Row-local.
@@ -192,10 +183,8 @@ object Dedup {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("sim"), b * 16).bitwiseAND(lit(0xffffL))): _*))
         .as(Seq("band", "bucket")))
-    LshPairs.cappedIdPairs(banded, maxBucket)
-      .join(base.select(col("id").as("id_a"), col("sim").as("sim_a")), "id_a")
-      .join(base.select(col("id").as("id_b"), col("sim").as("sim_b")), "id_b")
-      .withColumn("hamming", bit_count(col("sim_a").bitwiseXOR(col("sim_b"))))
+    LshPairs.joinPayloads(LshPairs.cappedIdPairs(banded, maxBucket), base)
+      .withColumn("hamming", bit_count(col("payload_a").bitwiseXOR(col("payload_b"))))
       .filter(col("hamming") <= maxHamming)
       .select("id_a", "id_b", "hamming")
   }

@@ -2,9 +2,10 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
-import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells, signatureAt}
+import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells}
 
 /** Incremental maintenance for the EMBEDDING indexes — the vector-side
   * analogue of [[IncrementalLsh]] (which maintains the text MinHash
@@ -40,9 +41,9 @@ import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells, signatureA
   */
 object IncrementalAnn {
 
-  /** Skinny hyperplane posting rows (band, bucket, id) — identical
-    * banding to [[Similarity.cosineNearDups]] so incremental and batch
-    * bucket membership agree by construction.
+  /** Skinny hyperplane posting rows (band, bucket, id) — the banding of
+    * [[Similarity.cosineNearDups]] too, so incremental and batch bucket
+    * membership agree by construction.
     */
   def bands(emb: DataFrame, idCol: String, vecCol: String,
             tables: Int = 8, bits: Int = 10, seed: Long = 7L): DataFrame =
@@ -56,51 +57,31 @@ object IncrementalAnn {
                 .as(Seq("band", "bucket")))
       .select(col("band"), col("bucket"), col("id"))
 
-  // table dirs live inside the ACTIVE generation (RoundSlots'
-  // compaction layer — same LSM fold as [[IncrementalLsh.compact]])
-  private def bandsDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/bands"
-  private def vecsDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/vecs"
+  /** The index: postings (band, bucket, id) + vectors (id, vec). */
+  private def index(indexDir: String) = new RoundSlots.BandIndex(
+    indexDir, StructType.fromDDL("band INT, bucket BIGINT, id BIGINT"),
+    "vecs", StructType.fromDDL("id BIGINT, vec ARRAY<FLOAT>"))
 
   /** Fold all complete rounds into a fresh single-slot generation and
     * drop superseded generations (crash-safe, marker-committed).
     */
-  def compact(spark: SparkSession, indexDir: String): Boolean = {
-    val folded = RoundSlots.compactTables(spark, indexDir,
-                                          Seq("bands", "vecs"))
-    if (folded) RoundSlots.gcOldGenerations(indexDir)
-    folded
-  }
-
-  private def completeRounds(indexDir: String): Seq[Int] =
-    RoundSlots.completeRounds(Seq(bandsDir(indexDir), vecsDir(indexDir)))
-
-  private def readRounds(spark: SparkSession, dir: String, rounds: Seq[Int],
-                         empty: DataFrame): DataFrame =
-    if (rounds.isEmpty) empty
-    // explicit schema (from the caller's empty frame): a committed slot
-    // whose round held zero rows has a _SUCCESS marker and no part
-    // files, and schema INFERENCE over such slots throws — wedging
-    // every later read of the index. An empty round is valid state.
-    else spark.read.schema(empty.schema)
-      .parquet(rounds.map(k => s"$dir/r$k"): _*)
+  def compact(spark: SparkSession, indexDir: String): Boolean =
+    index(indexDir).compact(spark)
 
   /** One maintenance round: verified cosine near-dup pairs of `newEmb`
     * against the persisted index (and among themselves), then the index
-    * is appended with the round's postings + vectors.
+    * is appended with the round's postings + vectors
+    * ([[RoundSlots.BandIndex.round]]). `slot` has the same
+    * replay-idempotency contract as [[IncrementalLsh.roundPairs]]: pin
+    * the round slot to an external round number so an at-least-once
+    * driver's retry re-reads exactly rounds 0..k-1 and overwrites slot k
+    * instead of appending a duplicate beside its own earlier attempt.
     *
     * Returns (id_a, id_b, cosine) with id_a < id_b — the same output
     * contract as [[Similarity.cosineNearDups]]. Vectors never ride the
     * banded exchange (ids only); they join back once per surviving
     * capped candidate pair, broadcast-guarded by measured pair count
-    * ([[IncrementalLsh.joinPairsToLookup]]).
-    */
-  /** `slot`: same replay-idempotency contract as
-    * [[IncrementalLsh.roundPairs]] — pin the round slot to an external
-    * round number so an at-least-once driver's retry re-reads exactly
-    * rounds 0..k-1 and overwrites slot k instead of appending a
-    * duplicate beside its own earlier attempt.
+    * ([[LshPairs.joinPayloadsPruned]]).
     */
   def roundPairs(spark: SparkSession, indexDir: String, newEmb: DataFrame,
                  idCol: String, vecCol: String, threshold: Double,
@@ -108,66 +89,12 @@ object IncrementalAnn {
                  maxBucket: Int = 1024,
                  acc: Option[LongAccumulator] = None,
                  compactEvery: Int = 0,
-                 slot: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    require(slot.isEmpty || compactEvery == 0,
-            "slot-pinned rounds cannot combine with compactEvery " +
-              "(generation folds renumber slots)")
-    val newVecs = newEmb
-      .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-      .persist()
-    // bands from the PERSISTED (id, vec) slice, not the caller's
-    // source plan — one source scan per round, and bands/vecs cannot
-    // disagree if the source is nondeterministic. The banding itself is
-    // ALSO persisted: it has three consumers (pair generation's grouped
-    // side, its touched-bucket semi-join build side, and the index
-    // append below), each of which would otherwise re-run the signature
-    // pass over the round's slice.
-    val newBands = bands(newVecs, "id", "vec", tables, bits, seed).persist()
-    val complete = slot match {
-      case None => completeRounds(indexDir)
-      case Some(k) =>
-        val prior = completeRounds(indexDir).filter(_ < k)
-        require(prior == (0 until k),
-                s"slot $k requires committed rounds 0..${k - 1}, found $prior")
-        prior
-    }
-    val oldBands = readRounds(spark, bandsDir(indexDir), complete,
-                              Seq.empty[(Int, Long, Long)].toDF("band", "bucket", "id")
-                                .select(col("band"), col("bucket"), col("id")))
-    val oldVecs = readRounds(spark, vecsDir(indexDir), complete,
-                             spark.emptyDataset[(Long, Array[Float])]
-                               .toDF("id", "vec"))
-    val pairsRaw = IncrementalLsh
-      .cappedNewPairs(oldBands, newBands, maxBucket, acc)
-      .localCheckpoint()
-    val nPairRows = pairsRaw.count()
-    // vector lookup: old store + this round's slice (ids are globally
-    // unique across rounds — enforced by the caller's round partition),
-    // PRUNED to pair-surviving ids so untouched index vectors are
-    // dropped right after the scan instead of riding the verify join
-    val pairIds = IncrementalLsh.broadcastPairIds(pairsRaw, nPairRows)
-    val lookup = oldVecs.select(col("id"), col("vec")).unionByName(newVecs)
-      .join(pairIds, Seq("id"), "left_semi")
-    // codegen'd verify kernel (HashOps.cosineRint4 — Similarity.cosine's
-    // exact fold + the rint rounding): no per-pair external decode of
-    // two float arrays across the candidate set
-    val pairs = IncrementalLsh
-      .joinPairsToLookup(spark, pairsRaw, nPairRows, lookup)
-      .select(col("id_a"), col("id_b"),
-              HashOps.cosine_rint4_col(col("payload_a"), col("payload_b"))
-                .as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .localCheckpoint() // force BEFORE the append mutates the index
-    val k = slot.getOrElse(complete.size)
-    newBands.write.mode("overwrite").parquet(s"${bandsDir(indexDir)}/r$k")
-    newVecs.write.mode("overwrite").parquet(s"${vecsDir(indexDir)}/r$k")
-    newBands.unpersist()
-    newVecs.unpersist()
-    // LSM fold on the caller's cadence: bounded slot count, same data
-    if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark, indexDir)
-    pairs
-  }
+                 slot: Option[Int] = None): DataFrame =
+    index(indexDir).round(
+      newEmb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
+      bands(_, "id", "vec", tables, bits, seed),
+      maxBucket, acc, matchTag = false, slot, compactEvery)(
+      Similarity.cosineAbove(_, threshold))
 
   // ------------------------------------------------------------------
   // persisted IVF postings (frozen centroids + re-train cadence)

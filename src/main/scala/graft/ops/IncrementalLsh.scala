@@ -1,9 +1,8 @@
 package graft.ops
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
 /** Incremental near-duplicate maintenance: check each crawl round's NEW
@@ -92,9 +91,9 @@ object IncrementalLsh {
     * row. `oldBands`/`newBands` carry (band, bucket, id); ids must be
     * disjoint between the two (arrival rounds partition the corpus).
     *
-    * Mirrors [[LshPairs.cappedIdPairs]] (cap smallest ids per bucket,
-    * deterministic, O(cap) task memory, counted drops) but suppresses
-    * old-old pairs — they were emitted in an earlier round.
+    * Same emitter as [[LshPairs.cappedIdPairs]] (cap smallest ids per
+    * bucket, deterministic, O(cap) task memory, counted drops) but
+    * suppresses old-old pairs — they were emitted in an earlier round.
     *
     * `matchTag`: when true, both inputs must carry a long `tag` column
     * and a pair is emitted only when the tags are EQUAL — the
@@ -106,15 +105,12 @@ object IncrementalLsh {
   def cappedNewPairs(oldBands: DataFrame, newBands: DataFrame, cap: Int,
                      acc: Option[LongAccumulator] = None,
                      matchTag: Boolean = false): DataFrame = {
-    require(cap > 1, s"cap must be > 1, got $cap")
     val spark = newBands.sparkSession
     import spark.implicits._
-    val dropped = acc.getOrElse(
-      spark.sparkContext.longAccumulator("lsh_capped_dropped_rows"))
     def norm(df: DataFrame, isNew: Boolean) = df
       .select(col("band").cast("int"), col("bucket").cast("long"),
               col("id").cast("long"), lit(isNew).as("is_new"),
-              (if (matchTag) col("tag").cast("long") else lit(0L)).as("tag"))
+              LshPairs.tagOrZero(matchTag))
     // buckets untouched by new rows contribute nothing: semi-join the
     // old postings down to touched buckets BEFORE grouping, so the
     // grouped exchange carries O(|new| + |old in touched buckets|)
@@ -125,91 +121,28 @@ object IncrementalLsh {
                            col("bucket").as("t_bucket")).distinct(),
             col("band") === col("t_band") && col("bucket") === col("t_bucket"),
             "left_semi")
-    touched.unionByName(oldTouched)
-      .as[(Int, Long, Long, Boolean, Long)]
-      .groupByKey(t => (t._1, t._2))
-      .flatMapGroups { (_: (Int, Long), it: Iterator[(Int, Long, Long, Boolean, Long)]) =>
-        // bounded max-heap over (id, is_new, tag), keeping the cap
-        // smallest ids — same cap semantics as LshPairs.cappedIdPairs
-        implicit val ord: Ordering[(Long, Boolean, Long)] = Ordering.by(_._1)
-        val buf = new mutable.ArrayBuffer[(Long, Boolean, Long)](4)
-        var heap: mutable.PriorityQueue[(Long, Boolean, Long)] = null
-        it.foreach { t =>
-          val e = (t._3, t._4, t._5)
-          if (heap == null) {
-            buf += e
-            if (buf.length > cap) {
-              heap = mutable.PriorityQueue.empty[(Long, Boolean, Long)]
-              heap ++= buf
-              heap.dequeue()
-              dropped.add(1L)
-            }
-          } else if (e._1 < heap.head._1) {
-            heap.dequeue(); heap.enqueue(e); dropped.add(1L)
-          } else dropped.add(1L)
-        }
-        val ids: scala.collection.Seq[(Long, Boolean, Long)] =
-          if (heap == null) {
-            val a = buf.toArray; java.util.Arrays.sort(a, ord); a
-          } else heap.dequeueAll.reverse
-        ids.indices.iterator.flatMap { i =>
-          (i + 1 until ids.length).iterator
-            .filter(j => (ids(i)._2 || ids(j)._2) && // >= 1 new member
-              ids(i)._3 == ids(j)._3) // tags equal (0 == 0 untagged)
-            .map(j => (ids(i)._1, ids(j)._1))
-        }
-      }
-      .toDF("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+    LshPairs.emitCapped(
+      touched.unionByName(oldTouched).as[(Int, Long, Long, Boolean, Long)],
+      cap, acc)(t => (t._1, t._2), t => LshPairs.Member(t._3, t._5, t._4))
   }
 
-  // table dirs live inside the ACTIVE generation (see RoundSlots'
-  // generation layer: compaction folds all rounds into g<j+1>/…/r0, so
-  // slot count stays bounded instead of growing one per ingest round)
-  private def bandsDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/bands"
-  private def shinglesDir(indexDir: String) =
-    s"${RoundSlots.genDir(indexDir, RoundSlots.activeGen(indexDir))}/shingles"
+  /** The index: postings (band, bucket, id, tag) + shingles (id, sh). */
+  private def index(indexDir: String) = new RoundSlots.BandIndex(
+    indexDir, StructType.fromDDL("band INT, bucket BIGINT, id BIGINT, tag BIGINT"),
+    "shingles", StructType.fromDDL("id BIGINT, sh ARRAY<STRING>"))
 
   /** Fold all complete rounds into a fresh single-slot generation
     * (crash-safe: committed by marker, old generation serves until
     * then) and drop superseded generations. Call on the same cadence
     * as the crawl's seen-state compaction.
     */
-  def compact(spark: SparkSession, indexDir: String): Boolean = {
-    val folded = RoundSlots.compactTables(spark, indexDir,
-                                          Seq("bands", "shingles"))
-    if (folded) RoundSlots.gcOldGenerations(indexDir)
-    folded
-  }
-
-  /** Rounds safely readable: COMMITTED (per `_SUCCESS`, see
-    * [[RoundSlots]]) in BOTH tables. A round whose append died between
-    * or during the two writes leaves a dangling/partial subdir that is
-    * ignored on read and overwritten on retry — the index never serves
-    * bands whose verification shingles are missing or truncated, and a
-    * retried round lands in the same slot, so it cannot duplicate ids
-    * across "old" rounds (which would break cappedNewPairs'
-    * disjoint-ids precondition and admit self-pairs).
-    */
-  private def completeRounds(indexDir: String): Seq[Int] =
-    RoundSlots.completeRounds(Seq(bandsDir(indexDir), shinglesDir(indexDir)))
-
-  private def readRounds(spark: SparkSession, dir: String, rounds: Seq[Int],
-                         empty: DataFrame): DataFrame =
-    if (rounds.isEmpty) empty
-    // explicit schema (from the caller's empty frame): a committed slot
-    // whose round held zero rows (e.g. a micro-batch where every doc
-    // fell below shingleN words) has a _SUCCESS marker and no part
-    // files, and schema INFERENCE over such slots throws — wedging the
-    // index and, through the streaming sinks, replaying the same batch
-    // forever. An empty round is valid state.
-    else spark.read.schema(empty.schema)
-      .parquet(rounds.map(k => s"$dir/r$k"): _*)
+  def compact(spark: SparkSession, indexDir: String): Boolean =
+    index(indexDir).compact(spark)
 
   /** One maintenance round: verified near-dup pairs of `newDocs`
     * against the index (and among themselves), then the index is
-    * appended with the new round's postings + shingles.
+    * appended with the new round's postings + shingles
+    * ([[RoundSlots.BandIndex.round]], which also documents `slot`).
     *
     * Returns (id_a, id_b, jaccard) with id_a < id_b — the same output
     * contract as [[Dedup.minhashNearDups]]. Verification is exact
@@ -218,55 +151,15 @@ object IncrementalLsh {
     * fat arrays never ride the banded exchange, matching the batch
     * operator's scale shape.
     *
-    * The result is materialized (it is also the precondition for the
-    * index append — pairs must be computed against the PRE-append
-    * index); callers get a small already-computed frame back.
-    */
-  /** Estimated serialized bytes per (id_a, id_b) pair row on the
-    * broadcast side (two longs + unsafe-row overhead, rounded up).
-    */
-  private val pairRowBytes = 48L
-
-  /** Join the capped pair set back onto a payload `lookup` table,
-    * guarded by MEASURED pair-set size: broadcast the pair set only
-    * when its estimated bytes fit the session's
-    * autoBroadcastJoinThreshold, else fall back to an unhinted join
-    * (shuffle hash / sort-merge on id). The caps bound the pair set to
-    * O(caps x touched buckets), but that product is config-dependent —
-    * a guard on the measured count beats trusting the bound. `pairsRaw`
-    * must be materialized (counted) — pass its row count.
-    */
-  /** Distinct ids of a materialized pair set, broadcast-hinted when the
-    * measured count fits (the guard every pruning semi join shares).
-    */
-  private[graft] def broadcastPairIds(pairsRaw: DataFrame,
-                                      nPairRows: Long): DataFrame =
-    LshPairs.broadcastIfFits(
-      pairsRaw.select(explode(array(col("id_a"), col("id_b"))).as("id"))
-        .distinct(),
-      2L * nPairRows, 24L)
-
-  private[graft] def joinPairsToLookup(spark: SparkSession, pairsRaw: DataFrame,
-                                       nPairRows: Long, lookup: DataFrame)
-      : DataFrame = {
-    val bcLimit = spark.sessionState.conf.autoBroadcastJoinThreshold
-    val fits = bcLimit > 0 && nPairRows * pairRowBytes <= bcLimit
-    val pairSide = if (fits) broadcast(pairsRaw) else pairsRaw
-    pairSide
-      .join(lookup.toDF("id_a", "payload_a"), "id_a")
-      .join(lookup.toDF("id_b", "payload_b"), "id_b")
-  }
-
-  /** `slot`: pin this round's index slot (and the set of rounds read
-    * as "old") to an EXTERNAL round number instead of deriving it from
-    * the slot count. Required for at-least-once drivers (Structured
-    * Streaming foreachBatch): a replayed batch k re-reads exactly
-    * rounds 0..k-1 and overwrites slot k — bit-identical recompute,
-    * never a duplicate append beside its own earlier attempt (which
-    * would break the disjoint-ids precondition and admit self-pairs).
-    * Requires rounds 0..k-1 all committed (streaming delivers batches
-    * in order, so a gap means external corruption — fail loud) and is
-    * incompatible with compactEvery (generation folds renumber slots).
+    * Exact-dup mode (threshold >= 1.0): signature equality is a
+    * lossless prefilter — equal shingle sets imply equal minhash
+    * signatures, so a candidate with ANY differing slot cannot reach
+    * jaccard 1.0 (same reasoning as [[Dedup.minhashNearDups]]). The
+    * signature tag is STORED with each posting ([[bandsFromShingled]]),
+    * so the filter rides inside pair generation — no re-read of the fat
+    * shingle store, no post-hoc signature join, no second checkpoint.
+    * Tag hash collisions only admit extra candidates, removed by the
+    * exact verification.
     */
   def roundPairs(spark: SparkSession, indexDir: String, newDocs: DataFrame,
                  idCol: String, textCol: String,
@@ -275,84 +168,13 @@ object IncrementalLsh {
                  maxBucket: Int = 1024,
                  acc: Option[LongAccumulator] = None,
                  compactEvery: Int = 0,
-                 slot: Option[Int] = None): DataFrame = {
-    import spark.implicits._
-    require(slot.isEmpty || compactEvery == 0,
-            "slot-pinned rounds cannot combine with compactEvery " +
-              "(generation folds renumber slots)")
-    val newShingled = newDocs
-      .select(col(idCol).cast("long").as("id"),
-              Dedup.shingles(col(textCol), shingleN).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .persist()
-    // banding persisted too: three consumers (pair generation's grouped
-    // side, its touched-bucket semi-join build side, the index append)
-    // would otherwise each re-run the minhash pass over the round slice
-    val newBands = bandsFromShingled(newShingled, numHashes, rowsPerBand)
-      .persist()
-    val complete = slot match {
-      case None => completeRounds(indexDir)
-      case Some(k) =>
-        val prior = completeRounds(indexDir).filter(_ < k)
-        require(prior == (0 until k),
-                s"slot $k requires committed rounds 0..${k - 1}, found $prior")
-        prior
-    }
-    val oldBands = readRounds(spark, bandsDir(indexDir), complete,
-                              Seq.empty[(Int, Long, Long, Long)]
-                                .toDF("band", "bucket", "id", "tag")
-                                .select(col("band"), col("bucket"),
-                                        col("id"), col("tag")))
-    val oldShingles = readRounds(spark, shinglesDir(indexDir), complete,
-                                 spark.emptyDataset[(Long, Seq[String])]
-                                   .toDF("id", "sh"))
-    // exact-dup mode (threshold >= 1.0): signature equality is a
-    // lossless prefilter — equal shingle sets imply equal minhash
-    // signatures, so a candidate with ANY differing slot cannot reach
-    // jaccard 1.0 (same reasoning as Dedup.minhashNearDups). The
-    // signature tag is STORED with each posting (bandsFromShingled), so
-    // the filter rides inside pair generation — no re-read of the fat
-    // shingle store, no post-hoc signature join, no second checkpoint.
-    // Tag hash collisions only admit extra candidates, removed by the
-    // exact verification below.
-    //
-    // The capped pair set is materialized so the verify join is planned
-    // from its MEASURED size (broadcast only if it fits — see
-    // joinPairsToLookup); the checkpoint also pins the pair set before
-    // the append below mutates the index
-    val pairsRaw = cappedNewPairs(oldBands, newBands, maxBucket, acc,
-                                  matchTag = threshold >= 1.0)
-      .localCheckpoint()
-    val nPairRows = pairsRaw.count()
-    // shingle lookup: old store + this round's slice (ids are globally
-    // unique across rounds — enforced by the caller's round partition),
-    // PRUNED to ids that appear in a surviving pair: fat shingle arrays
-    // of untouched index rows are dropped right after the scan instead
-    // of riding the verify join's exchange
-    val shingleAll = oldShingles.select(col("id"), col("sh"))
-      .unionByName(newShingled)
-    val pairIds = broadcastPairIds(pairsRaw, nPairRows)
-    val lookup = shingleAll.join(pairIds, Seq("id"), "left_semi")
-    val pairs = joinPairsToLookup(spark, pairsRaw, nPairRows, lookup)
-      .withColumnRenamed("payload_a", "sh_a")
-      .withColumnRenamed("payload_b", "sh_b")
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("uni", size(array_union(col("sh_a"), col("sh_b"))).cast("double"))
-      .withColumn("jaccard_raw", col("inter") / greatest(col("uni"), lit(1.0)))
-      .filter(col("jaccard_raw") >= threshold)
-      .withColumn("jaccard", round(col("jaccard_raw"), 4))
-      .select("id_a", "id_b", "jaccard")
-      .localCheckpoint() // force BEFORE the append mutates the index
-    // this round's slot: the pinned round, else one past the last
-    // COMPLETE round — a dangling slot from a died append is
-    // overwritten, never appended beside
-    val k = slot.getOrElse(complete.size)
-    newBands.write.mode("overwrite").parquet(s"${bandsDir(indexDir)}/r$k")
-    newShingled.write.mode("overwrite").parquet(s"${shinglesDir(indexDir)}/r$k")
-    newBands.unpersist()
-    newShingled.unpersist()
-    // LSM fold on the caller's cadence: bounded slot count, same data
-    if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark, indexDir)
-    pairs
-  }
+                 slot: Option[Int] = None): DataFrame =
+    index(indexDir).round(
+      newDocs
+        .select(col(idCol).cast("long").as("id"),
+                Dedup.shingles(col(textCol), shingleN).as("sh"))
+        .filter(size(col("sh")) > 0),
+      bandsFromShingled(_, numHashes, rowsPerBand),
+      maxBucket, acc, matchTag = threshold >= 1.0, slot, compactEvery)(
+      Dedup.jaccardAbove(_, threshold))
 }

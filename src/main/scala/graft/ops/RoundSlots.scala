@@ -1,5 +1,12 @@
 package graft.ops
 
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.util.LongAccumulator
+
+import scala.jdk.CollectionConverters._
+
 /** Per-round slot commit protocol shared by the incremental index
   * maintainers ([[IncrementalLsh]], [[IncrementalAnn]]).
   *
@@ -126,26 +133,77 @@ private[graft] object RoundSlots {
     catch { case _: java.nio.file.FileAlreadyExistsException => () }
   }
 
-  /** Fold every complete round of the active generation's `tables` into
-    * slot r0 of generation j+1 and commit it (marker last). No-op below
-    * 2 complete rounds. Returns whether a fold happened. The fold is
-    * the LSM move: data volume unchanged, slot/file count reset to 1 —
-    * without it a per-ingest-round index accumulates directories
-    * forever and pays growing listing/footer overhead per read.
+  /** Fold every complete round of the active generation's `tables`
+    * (name, schema) into slot r0 of generation j+1 and commit it (marker
+    * last). No-op below 2 complete rounds. Returns whether a fold
+    * happened. The fold is the LSM move: data volume unchanged,
+    * slot/file count reset to 1 — without it a per-ingest-round index
+    * accumulates directories forever and pays growing listing/footer
+    * overhead per read. Rounds are read with their table's schema (see
+    * [[readSlots]]), so a fold never relies on footer inference.
     */
-  def compactTables(spark: org.apache.spark.sql.SparkSession,
-                    indexDir: String, tables: Seq[String]): Boolean = {
+  def compactTables(spark: SparkSession, indexDir: String,
+                    tables: Seq[(String, StructType)]): Boolean = {
     val j = activeGen(indexDir)
-    val rounds = completeRounds(tables.map(t => s"${genDir(indexDir, j)}/$t"))
+    val rounds = completeRounds(tables.map(t => s"${genDir(indexDir, j)}/${t._1}"))
     if (rounds.size <= 1) false
     else {
-      tables.foreach { t =>
-        spark.read.parquet(rounds.map(k => s"${genDir(indexDir, j)}/$t/r$k"): _*)
+      tables.foreach { case (t, schema) =>
+        readSlots(spark, s"${genDir(indexDir, j)}/$t", rounds, schema)
           .write.mode("overwrite")
           .parquet(s"${genDir(indexDir, j + 1)}/$t/r0")
       }
       commitGen(indexDir, j + 1)
       true
+    }
+  }
+
+  /** Slots `rounds` of the table at `dir`, read with its `schema`.
+    *
+    * The schema is given, never inferred: a committed slot whose round
+    * held zero rows (e.g. a micro-batch where every doc fell below
+    * shingleN words) has a `_SUCCESS` marker and no part files, and
+    * schema INFERENCE over such slots throws — wedging the index and,
+    * through the streaming sinks, replaying the same batch forever. An
+    * empty round is valid state.
+    *
+    * The schema is also the table's format version: a slot whose files
+    * lack one of its columns was written by an older format (bands from
+    * before the signature `tag`), and reading it would serve nulls —
+    * it fails here, naming the slot, instead of deep inside a task.
+    */
+  def readSlots(spark: SparkSession, dir: String, rounds: Seq[Int],
+                schema: StructType): DataFrame =
+    if (rounds.isEmpty)
+      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      rounds.foreach(k => checkFormat(s"$dir/r$k", schema, conf))
+      spark.read.schema(schema).parquet(rounds.map(k => s"$dir/r$k"): _*)
+    }
+
+  /** Fail unless the first part file of `slot` (one write job wrote
+    * them all) carries every column of `schema`. Reads one footer on the
+    * driver; an empty slot has no part file and nothing to check.
+    */
+  private def checkFormat(slot: String, schema: StructType,
+                          conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(slot))
+    val part = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
+                      .findFirst()
+               finally ls.close()
+    if (part.isPresent) {
+      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(part.get.toUri), conf))
+      val cols = try reader.getFooter.getFileMetaData.getSchema.getFields
+                       .asScala.map(_.getName).toSet
+                 finally reader.close()
+      val missing = schema.fieldNames.filterNot(cols)
+      if (missing.nonEmpty)
+        throw new IllegalStateException(
+          s"index slot $slot was written by an older index format (no " +
+            s"${missing.mkString(", ")} column): rebuild the index")
     }
   }
 
@@ -157,4 +215,106 @@ private[graft] object RoundSlots {
     */
   def gcOldGenerations(indexDir: String): Unit =
     gcBelow(indexDir, "g", activeGen(indexDir))
+
+  /** The round-slotted (bands, payload) index behind both incremental
+    * near-dup operators ([[IncrementalLsh]]: bands + `shingles`,
+    * [[IncrementalAnn]]: bands + `vecs`). Two tables in the active
+    * generation, `bands` (the skinny LSH postings) and `payload` (id and
+    * the verification payload, its schema's second column), each read
+    * with its declared schema ([[readSlots]]). A round is committed in
+    * BOTH tables or it is not served: one whose append died between or
+    * during the two writes leaves a dangling/partial slot that is
+    * ignored on read and overwritten on retry — the index never serves
+    * bands whose payloads are missing or truncated, and a retried round
+    * lands in the same slot, so it cannot duplicate ids across "old"
+    * rounds (which would break [[IncrementalLsh.cappedNewPairs]]'
+    * disjoint-ids precondition and admit self-pairs).
+    */
+  final class BandIndex(indexDir: String, bandsSchema: StructType,
+                        payload: String, payloadSchema: StructType) {
+    private val tables = Seq("bands" -> bandsSchema, payload -> payloadSchema)
+
+    /** One maintenance round: capped candidate pairs of the round's new
+      * rows against the index (and among themselves), joined back to
+      * their payloads and kept by `verify`, then the round is appended.
+      *
+      * `newPayload` carries the payload schema's columns; `banding`
+      * derives the round's postings from it. Both are persisted for the
+      * round: banding has three consumers (pair generation's grouped
+      * side, its touched-bucket semi-join build side and the append),
+      * and postings derived from the persisted slice cannot disagree
+      * with the appended payloads if the source is nondeterministic.
+      * `verify` gets (id_a, id_b, payload_a, payload_b) and must return
+      * the round's output. Candidate and lookup follow
+      * [[LshPairs.joinPayloadsPruned]], so payloads never ride the
+      * banded exchange and untouched index payloads are dropped right
+      * after the scan.
+      *
+      * The result is materialized (it is also the precondition for the
+      * append — pairs must be computed against the PRE-append index);
+      * callers get a small already-computed frame back.
+      *
+      * `slot`: pin this round's index slot (and the set of rounds read
+      * as "old") to an EXTERNAL round number instead of deriving it from
+      * the slot count. Required for at-least-once drivers (Structured
+      * Streaming foreachBatch): a replayed batch k re-reads exactly
+      * rounds 0..k-1 and overwrites slot k — bit-identical recompute,
+      * never a duplicate append beside its own earlier attempt (which
+      * would break the disjoint-ids precondition and admit self-pairs).
+      * Requires rounds 0..k-1 all committed (streaming delivers batches
+      * in order, so a gap means external corruption — fail loud) and is
+      * incompatible with compactEvery (generation folds renumber slots).
+      */
+    def round(newPayload: DataFrame, banding: DataFrame => DataFrame,
+              maxBucket: Int, acc: Option[LongAccumulator], matchTag: Boolean,
+              slot: Option[Int], compactEvery: Int)(
+        verify: DataFrame => DataFrame): DataFrame = {
+      require(slot.isEmpty || compactEvery == 0,
+              "slot-pinned rounds cannot combine with compactEvery " +
+                "(generation folds renumber slots)")
+      val spark = newPayload.sparkSession
+      val gen = genDir(indexDir, activeGen(indexDir))
+      val complete = completeRounds(tables.map(t => s"$gen/${t._1}"))
+      val prior = slot match {
+        case None => complete
+        case Some(k) =>
+          val before = complete.filter(_ < k)
+          require(before == (0 until k),
+                  s"slot $k requires committed rounds 0..${k - 1}, found $before")
+          before
+      }
+      val Seq(oldBands, oldPayload) =
+        tables.map { case (t, schema) => readSlots(spark, s"$gen/$t", prior, schema) }
+      val fresh = newPayload.persist()
+      val newBands = banding(fresh).persist()
+      // payload lookup: old store + this round's slice (ids are globally
+      // unique across rounds — enforced by the caller's round partition)
+      val pairs = verify(LshPairs.joinPayloadsPruned(
+          IncrementalLsh.cappedNewPairs(oldBands, newBands, maxBucket, acc,
+                                        matchTag),
+          oldPayload.unionByName(fresh), col(payloadSchema.fieldNames(1))))
+        .localCheckpoint() // force BEFORE the append mutates the index
+      // this round's slot: the pinned round, else one past the last
+      // COMPLETE round — a dangling slot from a died append is
+      // overwritten, never appended beside
+      val k = slot.getOrElse(prior.size)
+      newBands.write.mode("overwrite").parquet(s"$gen/bands/r$k")
+      fresh.write.mode("overwrite").parquet(s"$gen/$payload/r$k")
+      newBands.unpersist()
+      fresh.unpersist()
+      // LSM fold on the caller's cadence: bounded slot count, same data
+      if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark)
+      pairs
+    }
+
+    /** Fold all complete rounds into a fresh single-slot generation
+      * (crash-safe: committed by marker, old generation serves until
+      * then) and drop superseded generations.
+      */
+    def compact(spark: SparkSession): Boolean = {
+      val folded = compactTables(spark, indexDir, tables)
+      if (folded) gcOldGenerations(indexDir)
+      folded
+    }
+  }
 }

@@ -201,16 +201,15 @@ object Similarity {
       spark.sparkContext.longAccumulator("ann_lsh_capped_dropped_rows"))
     val idRows = emb
       .select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-    // thin signature rows — ids only, vectors stay behind
+    // thin signature rows — ids only, vectors stay behind; one codegen'd
+    // pass per row (HashOps.hyperplaneSigs), bit-identical to signatureAt
+    // per table
     val sigIds = idRows
-      .as[(Long, Array[Float])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, vec) =>
-          (0 until tables).iterator
-            .map(t => (id, t, signatureAt(vec, seed, t, bits)))
-        }
-      }
-      .toDF("id", "table", "bucket")
+      .select(col("id"),
+              posexplode(HashOps.hyperplane_sigs_col(col("vec"), tables, bits,
+                                                     seed))
+                .as(Seq("table", "bucket")))
+      .select(col("id"), col("table"), col("bucket").cast("int"))
 
     val nProbes = math.min(math.max(probes, 0), bits)
     val qSigs = sigIds.filter(col("id").isin(queryIds.map(Long.box): _*))
@@ -477,37 +476,27 @@ object Similarity {
                      vecCol: String, threshold: Double,
                      tables: Int = 8, bits: Int = 10,
                      seed: Long = 7L, maxBucket: Int = 1024): DataFrame = {
-    import spark.implicits._
     val base = emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-    // one codegen'd pass per row (HashOps.hyperplaneSigs) — signatures
-    // bit-identical to the former per-table signatureAt mapPartitions,
-    // without decoding every vector into an external Array[Float]
-    val banded = base
-      .select(col("id"),
-              posexplode(HashOps.hyperplane_sigs_col(col("vec"), tables, bits,
-                                                     seed))
-                .as(Seq("band", "bucket")))
-      .select(col("band"), col("bucket"), col("id"))
-    // pair set pinned once, vector lookup pruned to pair-surviving ids
-    // (same shape as Dedup.minhashNearDups, measured-size broadcast
-    // guards included): embeddings of unpaired rows never ride the
-    // verify join's exchange
-    val pairsRaw = LshPairs.cappedIdPairs(banded, maxBucket).localCheckpoint()
-    val nPairRows = pairsRaw.count()
-    val pairIds = pairsRaw
-      .select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct()
-    val idsSide = LshPairs.broadcastIfFits(pairIds, 2L * nPairRows, 24L)
-    val pairSide = LshPairs.broadcastIfFits(pairsRaw, nPairRows, 48L)
-    val lookup = base.join(idsSide, Seq("id"), "left_semi")
-    // codegen'd verify kernel (HashOps.cosineRint4 — Similarity.cosine's
-    // exact fold + the rint rounding): no per-pair external decode of
-    // two float arrays, which dominated verification at the ~10^6
-    // random-collision candidate scale
-    pairSide
-      .join(lookup.select(col("id").as("id_a"), col("vec").as("va")), "id_a")
-      .join(lookup.select(col("id").as("id_b"), col("vec").as("vb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-              HashOps.cosine_rint4_col(col("va"), col("vb")).as("cosine"))
-      .filter(col("cosine") >= threshold)
+    cosineAbove(
+      LshPairs.joinPayloadsPruned(
+        LshPairs.cappedIdPairs(IncrementalAnn.bands(base, "id", "vec", tables,
+                                                    bits, seed), maxBucket),
+        base, col("vec")),
+      threshold)
   }
+
+  /** (id_a, id_b, cosine) of verify-joined vector pairs (payload_a,
+    * payload_b) whose rounded cosine reaches `threshold` — the one
+    * verification of [[cosineNearDups]] and [[IncrementalAnn.roundPairs]].
+    * Codegen'd kernel (HashOps.cosineRint4 — [[cosine]]'s exact fold +
+    * the rint rounding): no per-pair external decode of two float
+    * arrays, which dominated verification at the ~10^6 random-collision
+    * candidate scale.
+    */
+  private[ops] def cosineAbove(pairs: DataFrame, threshold: Double): DataFrame =
+    pairs
+      .select(col("id_a"), col("id_b"),
+              HashOps.cosine_rint4_col(col("payload_a"), col("payload_b"))
+                .as("cosine"))
+      .filter(col("cosine") >= threshold)
 }

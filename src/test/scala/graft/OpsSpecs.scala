@@ -368,6 +368,15 @@ class SimilaritySpec extends SparkSuite {
     }
   }
 
+  test("LSH ANN signatures run through the codegen'd hyperplane pass") {
+    // q35's parameters
+    val plan = Similarity.lshTopK(spark, emb, "vec_id", "embedding",
+                                  (0L until 10L).toSeq, 5, tables = 8,
+                                  bits = 10, probes = 4)
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("hyperplanesigsexpression"), plan)
+  }
+
   test("IVF ANN: deterministic, plausible recall vs brute force") {
     val queries = (0L until 10L).toSeq
     val brute = Similarity.bruteForceTopK(spark, emb, "vec_id", "embedding", queries, 5)
@@ -715,6 +724,44 @@ class IncrementalLshSpec extends SparkSuite {
     assert(extra.count() == 0)
   }
 
+  test("index compaction folds a round that held zero rows") {
+    import graft.ops.RoundSlots
+    // rounds 0 and 1 fold together at compactEvery=2, and round 1 is
+    // empty: the fold reads it with the table's schema, never by footer
+    // inference, and the output equals the no-compaction run
+    def run(dir: String, every: Int) = Seq(0, -1, 1, 2).flatMap { r =>
+      val part = if (r < 0) corpus.limit(0)
+                 else corpus.filter(pmod(col("id"), lit(3)) === r)
+      IncrementalLsh.roundPairs(
+          spark, dir, part, "id", "text", shingleN = 3, numHashes = 32,
+          rowsPerBand = 4, threshold = 0.5, compactEvery = every)
+        .as[(Long, Long, Double)].collect().map { case (a, b, j) => (a, b, j, r) }
+    }.toSet
+    val idx = tmpDir("inclsh-compact-empty-")
+    val folded = run(idx, 2)
+    assert(folded == run(tmpDir("inclsh-plain-empty-"), 0) && folded.nonEmpty)
+    assert(RoundSlots.activeGen(idx) >= 1, "expected at least one fold")
+  }
+
+  test("a bands slot from before the signature tag fails with a rebuild message") {
+    import graft.ops.RoundSlots
+    // the legacy index format: postings without `tag`, shingles as now
+    val idx = tmpDir("inclsh-legacy-")
+    val live = RoundSlots.genDir(idx, RoundSlots.activeGen(idx))
+    val round0 = corpus.filter(pmod(col("id"), lit(3)) === 0)
+    IncrementalLsh.bands(round0, "id", "text").drop("tag")
+      .write.parquet(s"$live/bands/r0")
+    round0.select(col("id").cast("long"), Dedup.shingles(col("text"), 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .write.parquet(s"$live/shingles/r0")
+    val err = intercept[IllegalStateException] {
+      IncrementalLsh.roundPairs(
+        spark, idx, corpus.filter(pmod(col("id"), lit(3)) === 1),
+        "id", "text", threshold = 1.0).count()
+    }
+    assert(err.getMessage.contains("rebuild the index"), err.getMessage)
+  }
+
   test("incremental union equals batch; pairs emit in the later member's round") {
     val idx = tmpDir("inclsh-")
     val incr = (0 to 2).flatMap { r =>
@@ -947,7 +994,7 @@ class IncrementalLshSpec extends SparkSuite {
   */
 class IncrementalAnnSpec extends SparkSuite {
   import spark.implicits._
-  import graft.ops.{IncrementalAnn, IncrementalLsh, Similarity}
+  import graft.ops.{IncrementalAnn, LshPairs, Similarity}
 
   private lazy val emb =
     spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
@@ -982,6 +1029,32 @@ class IncrementalAnnSpec extends SparkSuite {
     val extra = IncrementalAnn.roundPairs(
       spark, idx, corpus.limit(0), "id", "vec", threshold = 0.9)
     assert(extra.count() == 0)
+  }
+
+  test("ANN index compaction: output unchanged, old generations GC'd, slots bounded") {
+    import graft.ops.RoundSlots
+    // 4 rounds with a fold every 2: same pairs in the same rounds as the
+    // no-compaction run
+    def run(dir: String, every: Int) = (0 to 3).flatMap { r =>
+      IncrementalAnn.roundPairs(
+          spark, dir, corpus.filter(pmod(col("id"), lit(4)) === r),
+          "id", "vec", threshold = 0.9, compactEvery = every)
+        .as[(Long, Long, Double)].collect().map { case (a, b, c) => (a, b, c, r) }
+    }.toSet
+    val idx = tmpDir("incann-compact-")
+    val folded = run(idx, 2)
+    assert(folded == run(tmpDir("incann-plain-"), 0) && folded.nonEmpty)
+    val gen = RoundSlots.activeGen(idx)
+    assert(gen >= 1, s"expected at least one fold, active gen $gen")
+    (0 until gen).foreach { j =>
+      assert(!java.nio.file.Files.exists(
+               java.nio.file.Paths.get(RoundSlots.genDir(idx, j))),
+             s"superseded generation g$j not GC'd")
+    }
+    Seq("bands", "vecs").foreach { t =>
+      val slots = RoundSlots.roundIdxs(s"${RoundSlots.genDir(idx, gen)}/$t")
+      assert(slots.size <= 2, s"unbounded $t slots after compaction: $slots")
+    }
   }
 
   test("ANN slot-pinned round replay is idempotent (mirror of the LSH contract)") {
@@ -1027,13 +1100,13 @@ class IncrementalAnnSpec extends SparkSuite {
       // guard's own decision via the row-count arithmetic too)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1024")
       assert(n * 48L > 1024L)
-      val big = IncrementalLsh.joinPairsToLookup(spark, pairs, n, lookup)
+      val big = LshPairs.joinPayloadsPruned(pairs, lookup, col("vec"))
       assert(big.count() == n) // completes, correct cardinality
       assert(countIn(big, "BroadcastHashJoin") == 0,
              "guard must not broadcast an over-limit pair set")
       // and with a generous limit the pair side IS broadcast
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
-      val small = IncrementalLsh.joinPairsToLookup(spark, pairs, n, lookup)
+      val small = LshPairs.joinPayloadsPruned(pairs, lookup, col("vec"))
       assert(countIn(small, "BroadcastHashJoin") >= 2,
              "expected broadcast pair joins")
     } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
