@@ -1,8 +1,10 @@
 package graft.sched
 
 import scala.collection.mutable
+import scala.reflect.ClassTag
 
-import org.apache.spark.sql.{Dataset, Encoder, Observation, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,8 +46,8 @@ final case class CrawlConfig(
     // bit-for-bit (RealTransportSpec)
     fetcher: FetcherFactory = SimulatedFetcherFactory,
     // broadcast the per-HOST dimension tables (robots rules, politeness
-    // budgets, per-round selection counts) into the frontier-sized
-    // joins while the manifest's host count stays below this bound —
+    // budgets) into the frontier-sized gate joins while the manifest's
+    // host count stays below this bound —
     // host tables are O(hosts), frontier/candidate tables are O(URLs),
     // and hosts ~ URLs/10^3 on the web, so up to ~10^6 hosts the rule
     // table is an executor-cache-sized build side and every gate join
@@ -68,15 +70,17 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *
   * {{{
   * frontier ──robots gate──▶ eligible ──+budget join──▶
-  *   phase A: groupByKey(host_hash, salt).flatMapGroups(bounded top-k)
-  *   phase B: groupByKey(host).flatMapGroups(token bucket, final top-k, seq)
+  *   phase A: per (host_hash, salt): exchange, sort, first `budget` rows
+  *   phase B: per host: exchange, sort, first `budget` rows, seq 1..budget
   * ──repartition (round-robin)──▶ fetch+parse (one mapPartitions:
   *   Fetcher, then HtmlSpans/Robots on the body IN the fetch task —
-  *   raw HTML never persists) ─▶ docs / robots / links
-  * links ─▶ canonicalize ─▶ reduce by url_hash ─▶ bloom-shard tier
+  *   raw HTML never persists) ─▶ fetch_log / docs / robots / links
+  * links ─▶ canonicalize ─▶ reduce by url_hash (+ robots.txt of new
+  *       hosts) ─▶ bloom-shard tier
   *       ─▶ one bucket-keyed pass: cuckoo-shard tier ─▶ exact
   *          per-bucket seen-index LSM segments (SeenIndex — the
   *          10^10-row seen table never shuffles)
+  * host_state: one host-keyed cogroup (state, selected count, new hosts)
   * frontier update: delta rows (fetched/blocked/selected hashes,
   *          retries, surviving candidates) ─▶ one task per touched
   *          url_hash bucket ─▶ exact exclusion + bucket-file rewrite
@@ -90,10 +94,11 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   * ([[graft.oracle.CrawlOracle]]) on fetch log, seen set and docs.
   *
   * Scale design notes (the parts that survive 1000×):
-  *   - phase A bounds memory per task to O(budget) via a bounded heap and
-  *     spreads a hot host over `salts` groups (the reference's measured
-  *     ~17× facet skew, olx_c226/main.go:20, is the motivating case);
-  *     phase B sees ≤ salts×budget rows per host.
+  *   - phase A spreads a hot host over `salts` groups (the reference's
+  *     measured ~17× facet skew, olx_c226/main.go:20, is the motivating
+  *     case) and streams each group's sorted run, keeping its first
+  *     `budget` rows — memory is the sorter's (spillable), never a
+  *     group buffer; phase B sees ≤ salts×budget rows per host.
   *   - the seen set is never collected: per-bucket bloom shards (checked
   *     map-side, no shuffle, loaded lazily per executor from the
   *     snapshot store via [[FilterShardCache]]) and sharded cuckoo
@@ -142,6 +147,29 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     round appends a delta-only segment; segments merge on the same
   *     cadence — per-round index maintenance writes O(|delta|) bytes,
   *     not O(|seen|).
+  *
+  * Codegen budget: Spark compiles a round's generated classes (whole-
+  * stage pipelines, projections, cached-table readers, orderings) with
+  * Janino into one JVM-wide cache that holds 100 entries by default,
+  * split into 4 LRU segments of 25. An entry is keyed by the code AND
+  * the compiling thread's class loader: a whole-stage class is compiled
+  * once on the driver and once under the tasks' loader, and its name
+  * carries the plan's codegen stage id, so one operator in another plan
+  * position is another entry. When a round touches more entries than a
+  * segment holds, the round evicts its own classes and compiles all of
+  * them again every round — and the JIT compiles the fresh classes'
+  * hot methods again after it. On the benchmark's crawl (16 hosts,
+  * 1,024 pages a round) round 5 touched 149 entries with seven typed
+  * groupings and ten persisted Datasets, and touches 55 in this layout
+  * (16 whole-stage stages, each twice, and 23 projections, orderings
+  * and cache readers); steady rounds compile nothing. So every new
+  * Dataset stage in a round costs about two entries, a new persisted
+  * Dataset a cache reader besides, and a typed map or groupByKey
+  * several (the typed bodies are the largest classes). After the fetch
+  * the round works on RDDs of the model's case classes: the grouped
+  * passes shuffle with no generated code, and every job of the round
+  * runs as a Spark SQL job so that all tasks compile under one loader
+  * (see `collectInSqlJob`).
   */
 final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
   import spark.implicits._
@@ -221,7 +249,28 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
   // ------------------------------------------------------------------
   // one scheduling round
   // ------------------------------------------------------------------
+  /** Runs round `r` and commits it. Every job the round submits carries a
+    * `crawl r<r>: <phase>` description; when the round returns or throws,
+    * its caches are released and the calling thread's own job description
+    * is restored.
+    */
   def runRound(r: Int): RoundResult = {
+    val sc = spark.sparkContext
+    val callerDesc = sc.getLocalProperty(JobDescription)
+    val rdds = mutable.ArrayBuffer.empty[RDD[_]]
+    val dss = mutable.ArrayBuffer.empty[Dataset[_]]
+    try roundAt(r, rdds, dss)
+    finally {
+      dss.foreach(_.unpersist(false))
+      rdds.foreach(_.unpersist(false))
+      sc.setLocalProperty(JobDescription, callerDesc)
+    }
+  }
+
+  /** One round; every cache it takes is recorded in `rdds`/`dss`. */
+  private def roundAt(r: Int, rdds: mutable.Buffer[RDD[_]],
+                      dss: mutable.Buffer[Dataset[_]]): RoundResult = {
+    val sc = spark.sparkContext
     val nb = cfg.nBuckets
     val nFb = cfg.frontierBuckets
     val m = snaps.readManifest(r - 1)
@@ -232,28 +281,27 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // nor funnel a fat round's docs through one task. ~4k rows/file
     // (docs rows carry span arrays, so this is ~10-20 MB files).
     val statePar = math.max(1L, math.min(
-      spark.sparkContext.defaultParallelism.toLong,
+      sc.defaultParallelism.toLong,
       m.counters.getOrElse("frontier", 64L) / 4096L + 1L)).toInt
     val root = cfg.outDir
+    val par = sc.defaultParallelism
+    val web = cfg.web
+    val simLat = cfg.simulateLatency
+    val mkFetcher = cfg.fetcher // small factory in the closure, not a client
+    val maxAtt = cfg.maxAttempts
+    val salts = cfg.salts
+    def keep[T](rdd: RDD[T]): RDD[T] = { rdds += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
+    def keepDs[T](ds: Dataset[T]): Dataset[T] = { dss += ds; ds.persist(StorageLevel.MEMORY_AND_DISK) }
+
     // frontier: distributed read of the per-bucket binary files the
     // manifest references (one flatMap per bucket, executor-side,
-    // fail-closed — see FrontierStore). Persisted for the duration of
-    // the round (it has two consumers: the robots prefetch and the
-    // gate): executors keep their slice in memory or local disk instead
-    // of re-deserializing every bucket from shared storage, then drop
-    // it at commit — the frontier still never lives past its round.
+    // fail-closed — see FrontierStore); streamed k-way newest-wins merge
+    // of each bucket's LSM segment stack, O(#segments) buffered heads
     val frontierSegs = m.frontierSegs
-    val frontier: Dataset[FrontierEntry] = spark
-      .createDataset(spark.sparkContext.parallelize(
-        frontierSegs.toSeq.sortBy(_._1),
-        math.min(frontierSegs.size.max(1),
-                 spark.sparkContext.defaultParallelism)))
-      .flatMap { case (fb, segs) =>
-        // streamed k-way newest-wins merge of the bucket's LSM segment
-        // stack, O(#segments) buffered heads
-        FrontierStore.iterateMergedRequired(root, fb, segs)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val frontier: RDD[FrontierEntry] = sc
+      .parallelize(frontierSegs.toSeq.sortBy(_._1),
+                   math.min(frontierSegs.size.max(1), par))
+      .flatMap { case (fb, segs) => FrontierStore.iterateMergedRequired(root, fb, segs) }
     val robots = readT[RobotsRule](m.tables("robots"))
     val hostState = readT[HostState](m.tables("host_state"))
     // per-host dimension tables ride map-side while the host count is
@@ -266,6 +314,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // read exactly the bucket shards they touch from the snapshot store;
     // no filter bytes move through the driver or a broadcast.
     val filterRounds = m.filterRounds
+    val seenIdxSegs = m.seenIndexSegs
 
     // -- robots prefetch sub-step ----------------------------------------
     // priority-0 (robots.txt) entries are fetched unconditionally at the
@@ -273,24 +322,20 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // discovered, and robots fetches are budget-exempt (at most one tiny
     // fetch per host — standard crawler practice). They log at seq 0;
     // budgeted fetches start at seq 1. Rounds whose frontier provably
-    // holds no priority-0 entries (manifest counter) skip the sub-step's
-    // jobs entirely — a pure no-op elision, identical results.
-    val par = spark.sparkContext.defaultParallelism
-    val web = cfg.web
-    val simLat = cfg.simulateLatency
-    val mkFetcher = cfg.fetcher // small factory in the closure, not a client
-    val maxAtt = cfg.maxAttempts
-    val hasPri0 = !m.counters.get("frontier_pri0").contains(0L)
-    // fetch stages are FUSED with parsing: the page body is turned into
+    // holds no priority-0 entries (manifest counter) skip the sub-step
+    // entirely — a pure no-op elision, identical results. Only then does
+    // the frontier have two consumers, so only then is it cached.
+    // Fetch stages are FUSED with parsing: the page body is turned into
     // spans/links (content) or disallow prefixes (robots.txt) inside
     // the same task that fetched it, and only the slim FetchOut row is
     // ever persisted. Raw HTML never enters a round cache — at a 10^7-
     // page round the body cache alone exceeded executor storage and
     // pushed the round into spill I/O (measured: ~1.9x per-page cost at
     // 9M pages vs 1M before this fusion).
-    val robotsFetchedOpt =
+    val hasPri0 = !m.counters.get("frontier_pri0").contains(0L)
+    val robotsFetched: Option[RDD[FetchOut]] =
       if (!hasPri0) None
-      else Some(frontier.filter(col("priority") === 0).as[FrontierEntry]
+      else Some(keep(keep(frontier).filter(_.priority == 0)
         .repartition(par)
         .mapPartitions { it =>
           val f = mkFetcher.create(web, simLat)
@@ -299,31 +344,24 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
             val pre =
               if (fr.status == 200) Robots.parse(fr.host, fr.body).disallow_prefixes
               else Nil
-            FetchOut(fr.url, fr.url_hash, fr.host, UrlCanon.hostHash(fr.host),
+            FetchOut(r, fr.url, fr.url_hash, fr.host, UrlCanon.hostHash(fr.host),
                      fr.status, 0, fr.attempt, fr.priority, fr.discovery_time,
                      "robots", Nil, Nil, pre)
           }
-        }
-        .persist(StorageLevel.MEMORY_AND_DISK))
-    val rest =
-      if (hasPri0) frontier.filter(col("priority") =!= 0).as[FrontierEntry]
-      else frontier
+        }))
+    val rest = if (hasPri0) frontier.filter(_.priority != 0) else frontier
 
     // rules learned from this round's robots fetches: 200 => parsed
     // (inline in the fetch task); 404 or retry-exhausted => allow-all
     // (colly's permissive default)
-    val robotsAll = (robotsFetchedOpt match {
+    val robotsAll = robotsFetched match {
       case None => robots
-      case Some(robotsFetched) =>
-        val newRobots = robotsFetched.mapPartitions { it =>
-          it.flatMap { o =>
-            if (o.status == 200)
-              Iterator.single(RobotsRule(o.host, o.robots_prefixes))
-            else if (o.status == 404 || o.attempt + 1 > maxAtt)
-              Iterator.single(RobotsRule(o.host, Nil))
-            else Iterator.empty
-          }
-        }
+      case Some(rf) =>
+        val newRobots = spark.createDataset(rf.flatMap { o =>
+          if (o.status == 200) Some(RobotsRule(o.host, o.robots_prefixes))
+          else if (o.status == 404 || o.attempt + 1 > maxAtt) Some(RobotsRule(o.host, Nil))
+          else None
+        })
         // first-fetch-wins, DETERMINISTICALLY: a host already holding a
         // rule keeps it (the sequential oracle's `if (!robots.contains)`
         // update). dropDuplicates("host") here would keep an arbitrary
@@ -331,70 +369,54 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         // with the stored rule — partition-order nondeterminism on the
         // one table that gates every fetch. Refreshing a stale rule is
         // an administrative revocation concern, not a crawl-round one.
-        robots.union(
+        keepDs(robots.union(
           newRobots.join(robots.select(col("host").as("o_host")),
                          newRobots("host") === col("o_host"), "left_anti")
-            .as[RobotsRule])
-    }).persist(StorageLevel.MEMORY_AND_DISK)
+            .as[RobotsRule]))
+    }
 
     // -- robots gate (non-robots frontier, with this round's rules) ------
-    val gatedDf = rest
+    // robots_allowed: true = eligible, false = disallowed (the row leaves
+    // the frontier this round), null = rules unknown (the row waits).
+    // Cached: selection reads the eligible rows, the frontier update the
+    // disallowed ones.
+    val restDs = spark.createDataset(rest)
+    val entryCols = restDs.columns.map(col)
+    val path = regexp_replace(col("url"), "^[^:/]+://[^/]*", "")
+    val gated = keepDs(restDs
       .join(hostDim(robotsAll.withColumnRenamed("host", "r_host")),
-            rest("host") === col("r_host"), "left")
-      .withColumn("robots_known", col("r_host").isNotNull)
-      .withColumn("path", regexp_replace(col("url"), "^[^:/]+://[^/]*", ""))
-      .withColumn(
-        "robots_allowed",
-        coalesce(not(exists(col("disallow_prefixes"),
-                            p => startswith(col("path"), p))), lit(true)))
-    val gated = gatedDf.persist(StorageLevel.MEMORY_AND_DISK)
-    // (blocked count is derived algebraically from the write-side
-    // Observation metrics below — no standalone job)
-    val eligible = gated
-      .filter(col("robots_known") && col("robots_allowed"))
-      .select(frontier.columns.map(col): _*).as[FrontierEntry]
-    // robots-disallowed rows leave the frontier this round (and their
-    // hashes must stay OUT of the candidate-exclusion membership set, so
-    // a re-discovered blocked URL re-enters — same semantics as the old
-    // anti-join against the post-gate remaining frontier)
-    val blockedHashes = gated
-      .filter(col("robots_known") && !col("robots_allowed"))
-      .select(col("url_hash")).as[String]
+            restDs("host") === col("r_host"), "left")
+      .select(entryCols :+ when(col("r_host").isNotNull,
+        coalesce(not(exists(col("disallow_prefixes"), p => startswith(path, p))),
+                 lit(true))).as("robots_allowed"): _*))
 
     // -- politeness budgets (token bucket per host) ---------------------
-    val budgets = hostState
-      .withColumn("avail", least(col("capacity"), col("tokens") + col("refill_per_round")))
-      .select(col("host").as("b_host"), floor(col("avail")).cast("int").as("budget"))
-    val withBudget = eligible
-      .join(hostDim(budgets), eligible("host") === col("b_host"), "left")
-      .select(struct(frontier.columns.map(col): _*).as("e"),
-              coalesce(col("budget"), lit(0)).as("budget"))
+    val budgets = hostState.select(col("host").as("b_host"),
+      floor(least(col("capacity"), col("tokens") + col("refill_per_round")))
+        .cast("int").as("budget"))
+    val withBudget = gated.filter(col("robots_allowed"))
+      .join(hostDim(budgets), col("host") === col("b_host"), "left")
+      .select(struct(entryCols: _*).as("e"), coalesce(col("budget"), lit(0)).as("budget"))
       .as[WithBudget]
 
-    // -- phase A: salted pre-selection (bounded heap per (host,salt)) ---
-    val phaseA = withBudget
-      .groupByKey(x => (x.e.host_hash, x.e.salt))
-      .flatMapGroups { (_: (Long, Int), it0: Iterator[WithBudget]) =>
-        val it = it0.buffered
-        val budget = if (it.hasNext) it.head.budget else 0
-        topK(it.map(_.e), budget).map(e => WithBudget(e, budget))
-      }
-
-    // -- phase B: per-host token bucket + final deterministic order -----
-    val selected = phaseA
-      .groupByKey(_.e.host)
-      .flatMapGroups { (_: String, it0: Iterator[WithBudget]) =>
-        val all = it0.toVector
-        val budget = if (all.isEmpty) 0 else all.head.budget
-        all.map(_.e).sorted(entryOrd).take(budget).zipWithIndex
-          .map { case (e, i) => SelectedE(e, i + 1) }.iterator
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // -- selection: two sorted-run passes, each one exchange + a local
+    // sort + a streaming pass that keeps the first `budget` rows of each
+    // run in entryOrd order (bounded by the sorter, never by a group
+    // buffer). Phase A runs per (host_hash, salt) and spreads a hot host
+    // over `salts` tasks; phase B sees <= salts x budget rows per host,
+    // keeps the final top-`budget` and numbers them seq 1..budget.
+    def inEntryOrder(ds: Dataset[WithBudget], run: Column*): Dataset[WithBudget] =
+      ds.repartition(run: _*).sortWithinPartitions(
+        run ++ Seq("e.priority", "e.discovery_time", "e.url_hash").map(col): _*)
+    val phaseA = inEntryOrder(withBudget, col("e.host_hash"), col("e.salt"))
+      .mapPartitions(it => headsOfRuns(it)(w => (w.e.host_hash, w.e.salt)).map(_._1))
+    val selected = inEntryOrder(phaseA, col("e.host"))
+      .mapPartitions(it => headsOfRuns(it)(_.e.host).map { case (w, i) => SelectedE(w.e, i) })
 
     // -- fetch+parse (round-robin repartition: politeness already
     // enforced; the body is parsed to spans/links in the fetch task and
     // dropped — see the fusion note at the robots prefetch) -------------
-    val mainFetched = selected
+    val mainFetched = keepDs(selected
       .repartition(par)
       .mapPartitions { it =>
         val f = mkFetcher.create(web, simLat)
@@ -403,55 +425,78 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           val hh = UrlCanon.hostHash(fr.host)
           if (fr.status == 200) {
             val p = HtmlSpans.parse(fr.url, fr.body)
-            FetchOut(fr.url, fr.url_hash, fr.host, hh, fr.status, s.seq,
+            FetchOut(r, fr.url, fr.url_hash, fr.host, hh, fr.status, s.seq,
                      fr.attempt, fr.priority, fr.discovery_time,
                      SyntheticWeb.kindOf(fr.url), p.spans, p.links, Nil)
           } else
-            FetchOut(fr.url, fr.url_hash, fr.host, hh, fr.status, s.seq,
+            FetchOut(r, fr.url, fr.url_hash, fr.host, hh, fr.status, s.seq,
                      fr.attempt, fr.priority, fr.discovery_time,
                      SyntheticWeb.kindOf(fr.url), Nil, Nil, Nil)
         }
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val fetched = robotsFetchedOpt.map(_.union(mainFetched)).getOrElse(mainFetched)
+      })
+    val fetched = robotsFetched.fold(mainFetched)(rf => spark.createDataset(rf).union(mainFetched))
 
-    // parsed 200s (a filter view of the one persisted fetch output — no
-    // second span-holding cache)
-    val pageOuts = mainFetched.filter(_.status == 200)
+    // -- commit step 1: fetch log (per-round counters ride the writes as
+    // Observations). It runs selection and the fetches, fills the fetch
+    // cache, and its metrics gate the conditional writes below. The
+    // remaining commit writes are independent of each other, so they
+    // run as CONCURRENT Spark jobs — the round's fixed commit cost is
+    // the longest single write, not the sum of six sequential launches.
+    val obsLog = Observation()
+    sc.setJobDescription(s"crawl r$r: fetch+log")
+    fetched
+      .observe(obsLog,
+               count(lit(1)).as("n"),
+               coalesce(sum(when(col("status") === 200, 1L).otherwise(0L)), lit(0L))
+                 .as("ok"),
+               coalesce(sum(when(col("seq") === 0, 1L).otherwise(0L)), lit(0L))
+                 .as("n_robots"),
+               coalesce(sum(when(col("seq") > 0 && col("status") === 200, 1L)
+                 .otherwise(0L)), lit(0L)).as("ok_main"),
+               coalesce(sum(size(col("spans"))), lit(0L)).as("spans"))
+      .select(col("round"), col("host"), col("host_hash"), col("seq"),
+              col("url"), col("url_hash"), col("status"))
+      .coalesce(statePar)
+      .write.mode("overwrite").parquet(snaps.tablePath(r, "fetch_log"))
+    def obsL(o: Observation, k: String): Long = o.get(k).asInstanceOf[Long]
+    val okMain = obsL(obsLog, "ok_main")
+    val nRobots = obsL(obsLog, "n_robots")
 
-    val docs = pageOuts.map(p => Doc(p.url_hash, p.url, p.host, r, p.spans))
-
-    // -- retries & seen delta -------------------------------------------
-    val salts = cfg.salts
-    val retries = fetched
+    // -- everything after the fetches reads the one cached fetch output
+    // as RDDs of the model's case classes: the grouped passes below
+    // shuffle rows to one task per key and generate no classes (see
+    // "Codegen budget" in the class doc)
+    val mainRdd: RDD[FetchOut] = mainFetched.rdd
+    val fetchedRdd = robotsFetched.fold(mainRdd)(_ ++ mainRdd)
+    val pageOuts = mainRdd.filter(_.status == 200)
+    val retries = fetchedRdd
       .filter(o => o.status != 200 && o.status != 404 && o.attempt + 1 <= maxAtt)
       .map { o =>
         FrontierEntry(o.url, o.url_hash, o.host, o.host_hash,
                       UrlCanon.saltOf(o.url_hash, salts), o.priority,
                       o.discovery_time, o.attempt + 1, r)
       }
-    val seenDelta = fetched
-      .filter(o => o.status == 200 || o.status == 404 ||
-        (o.status != 200 && o.status != 404 && o.attempt + 1 > maxAtt))
-      .map { o =>
-        val st = if (o.status == 200 || o.status == 404) o.status else 599
-        SeenEntry(o.url_hash, o.host_hash, st, r)
-      }
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // seen delta: 200/404 resolve at once, retryable errors once their
+    // attempts are exhausted (tombstoned 599)
+    val seenDelta = keep(fetchedRdd.flatMap { o =>
+      if (o.status == 200 || o.status == 404) Some(SeenEntry(o.url_hash, o.host_hash, o.status, r))
+      else if (o.attempt + 1 > maxAtt) Some(SeenEntry(o.url_hash, o.host_hash, 599, r))
+      else None
+    })
 
     // -- new candidates from discovered links ---------------------------
-    val candRaw = pageOuts.flatMap { p =>
-      p.links.zipWithIndex.map { case (u, i) =>
-        val canon = UrlCanon.canonicalize(u)
-        Fetcher.entryOf(canon, SyntheticWeb.priorityOf(canon),
-                        r.toLong * 1000000L + i, 0, r, salts)
-      }
-    }
     // one row per url_hash, deterministic min by (priority, discovery_time)
-    val candDedup = candRaw
-      .groupByKey(_.url_hash)
-      .reduceGroups((a, b) => if (entryOrd.lteq(a, b)) a else b)
-      .map(_._2)
+    val candDedup = pageOuts
+      .flatMap { p =>
+        p.links.zipWithIndex.map { case (u, i) =>
+          val canon = UrlCanon.canonicalize(u)
+          Fetcher.entryOf(canon, SyntheticWeb.priorityOf(canon),
+                          r.toLong * 1000000L + i, 0, r, salts)
+        }
+      }
+      .keyBy(_.url_hash)
+      .reduceByKey((a, b) => if (entryOrd.lteq(a, b)) a else b, par)
+      .values
 
     // -- opt-in rank-informed priority (north-rule stretch): the link
     // graph accumulated through THIS round feeds the priority stamp of
@@ -467,16 +512,16 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // per round over the cumulative edge set (O(edges) per iteration;
     // a 100 TB deployment would re-rank on a cadence instead — same
     // dial as the IVF retrainEvery).
-    val candRanked: Dataset[FrontierEntry] =
+    val candRanked: RDD[FrontierEntry] =
       if (!cfg.rankPriority) candDedup
       else {
         val edgesDir = s"${cfg.outDir}/rank_edges"
-        pageOuts.flatMap { p =>
+        spark.createDataset(pageOuts.flatMap { p =>
           val src = nidOf(p.url_hash)
           p.links.map { u =>
             (src, nidOf(UrlCanon.urlHash(UrlCanon.canonicalize(u))))
           }
-        }.toDF("src", "dst")
+        }).toDF("src", "dst")
           .write.mode("overwrite").parquet(s"$edgesDir/r$r")
         // rank_edges slots are written by runRound ONLY: a revoke()
         // commit advances the round counter without one, and an
@@ -485,7 +530,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         // with the schema stated (a missing slot holds zero edges by
         // construction: no fetches happened in that round)
         val fs = new org.apache.hadoop.fs.Path(edgesDir)
-          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+          .getFileSystem(sc.hadoopConfiguration)
         val slotPaths = (1 to r)
           .map(j => s"$edgesDir/r$j")
           .filter(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
@@ -506,7 +551,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           case row if row.isNullAt(0) => 0L
           case row                    => row.getLong(0)
         }
-        candDedup.toDF()
+        spark.createDataset(candDedup).toDF()
           .withColumn("nid",
             conv(substring(col("url_hash"), 1, 15), 16, 10).cast("long"))
           .join(ranks.withColumnRenamed("node", "nid"), Seq("nid"), "left")
@@ -520,10 +565,39 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           .select(col("url"), col("url_hash"), col("host"), col("host_hash"),
                   col("salt"), col("priority"), col("discovery_time"),
                   col("attempt"), col("round"))
-          .as[FrontierEntry]
+          .as[FrontierEntry].rdd
       }
 
-    // three-tier seen check, applied to content candidates AND the
+    // -- host state and host discovery: one cogroup per host of its
+    // state row, this round's selected count and whether a candidate
+    // names it. Every seen URL was fetched, so its host has a host_state
+    // row: a host without one has no seen candidate, and the pre-tier
+    // candidates' hosts minus host_state are exactly the new hosts the
+    // seen-free candidates bring. A host enters host_state in the round
+    // its robots.txt enters the frontier, and that entry stays pending
+    // (old row, or a retry) until a fetch resolves it into a robots rule
+    // — so a candidate host already in host_state either has a rule or
+    // a pending robots.txt that would reject a second one. The new
+    // hosts' robots.txt entries therefore are all the robots candidates
+    // the round needs; they join the content candidates in ONE seen-tier
+    // pass (the constant discovery_time r*1e6 is tie-broken by url_hash).
+    val capD = cfg.hostCapacity
+    val refD = cfg.hostRefill
+    val perHost = hostState.rdd.keyBy(_.host).cogroup(
+      mainRdd.map(o => (o.host, 1L)).reduceByKey(_ + _, par),
+      candDedup.map(e => (e.host, ())).reduceByKey((a, _) => a, par),
+      par)
+    val newHosts = perHost.flatMap { case (h, (state, _, cand)) =>
+      if (state.isEmpty && cand.nonEmpty) Some(h) else None
+    }
+    val robotsCand = newHosts.map(h =>
+      Fetcher.entryOf(s"https://$h/robots.txt", 0, r.toLong * 1000000L, 0, r, salts))
+    val hostStateAll = perHost.flatMap { case (_, (state, selCount, _)) =>
+      state.map(s => s.copy(tokens =
+        math.min(s.capacity, s.tokens + s.refill_per_round) - selCount.sum.toDouble))
+    } ++ newHosts.map(h => HostState(h, UrlCanon.hostHash(h), 0.0, capD, refD))
+
+    // three-tier seen check over the content candidates AND the
     // robots.txt entries of newly-discovered hosts. tier 1: bloom shard
     // of the candidate's bucket, checked MAP-SIDE (no shuffle): a miss
     // is definitely new; a missing shard => maybe (exact tier resolves).
@@ -533,62 +607,38 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // the group task loads its bucket's cuckoo shard (probabilistic
     // reject) and — only if a candidate survives it — the bucket's
     // EXACT seen-index LSM segments, probed newest-first. The persisted
-    // 10^10-row seen table never moves through a shuffle (the robots
-    // URLs used to anti-join against it — an O(|seen|) exchange hiding
-    // in every discovery round — now route through the same tiers).
+    // 10^10-row seen table never moves through a shuffle.
     val shardBits = cfg.bloomShardBits
     val bloomK = cfg.bloomHashes
-    val seenIdxSegs = m.seenIndexSegs
-    val tieredCaches = mutable.ArrayBuffer.empty[Dataset[(FrontierEntry, Boolean)]]
-    def seenFree(cands: Dataset[FrontierEntry]): Dataset[FrontierEntry] = {
-      val tiered = cands.mapPartitions { it =>
-        // task-local memo: one validated cache lookup per bucket per task
-        val local = mutable.Map.empty[Int, Option[BloomFilter]]
-        it.map { c =>
-          val b = bucketOf(c.host_hash, nb)
-          val bf = local.getOrElseUpdate(
-            b, filterRounds.get(b).flatMap(fr => FilterShardCache.bloom(root, fr, b)))
-          (c, bf.forall(_.mightContain(c.url_hash)))
-        }
-        // persisted: defNew and exactNew below are two subtrees over this
-        // dataset — uncached, each would re-run the whole candidate
-        // pipeline (flatMap + dedup shuffle + bloom probes) once more
-      }.persist(StorageLevel.MEMORY_AND_DISK)
-      tieredCaches += tiered
-      val defNew = tiered.filter(!_._2).map(_._1)
-      val exactNew = tiered.filter(_._2).map(_._1)
-        .groupByKey(c => bucketOf(c.host_hash, nb))
-        .flatMapGroups { (b: Int, it: Iterator[FrontierEntry]) =>
-          // cuckoo read stays lenient: an unreadable shard only demotes
-          // to the exact tier (correct, slower) — never drops dedup
-          val cf = filterRounds.get(b)
-            .flatMap(fr => Snapshots.readBytesAt(Snapshots.filterPathAt(root, fr, b)))
-            .map(CuckooFilter.deserialize)
-          // manifest-absent bucket = never had a seen entry (empty IS
-          // exact); manifest-present-but-unreadable segment = FAIL the
-          // round (requiredBytesAt) — defaulting to empty would
-          // reclassify seen URLs as new, permanent dedup loss
-          lazy val segs = seenIdxSegs.getOrElse(b, Nil).reverse
-            .map(ir => SeenIndex.deserialize(
-              Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b))))
-          it.filter(c =>
-            !cf.forall(_.mightContain(c.url_hash)) ||
-              !segs.exists(_.contains(c.url_hash)))
-        }
-      defNew.union(exactNew)
-    }
-    val candSeenFree = seenFree(candRanked).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // robots.txt entries for newly-discovered hosts (distributed; the
-    // constant discovery_time r*1e6 is tie-broken by url_hash)
-    val robotsCand = seenFree(
-      candSeenFree.select(col("host")).distinct()
-        .join(hostDim(robotsAll.select(col("host").as("k_host"))),
-              col("host") === col("k_host"), "left_anti")
-        .as[String]
-        .map(h => Fetcher.entryOf(s"https://$h/robots.txt", 0,
-                                  r.toLong * 1000000L, 0, r, salts)))
-    val candAll = candSeenFree.union(robotsCand)
+    val tiered = keep((candRanked ++ robotsCand).mapPartitions { it =>
+      // task-local memo: one validated cache lookup per bucket per task
+      val local = mutable.Map.empty[Int, Option[BloomFilter]]
+      it.map { c =>
+        val b = bucketOf(c.host_hash, nb)
+        val bf = local.getOrElseUpdate(
+          b, filterRounds.get(b).flatMap(fr => FilterShardCache.bloom(root, fr, b)))
+        (c, bf.forall(_.mightContain(c.url_hash)))
+      }
+    })
+    val exactNew = byBucket(tiered.filter(_._2).map(_._1))(c => bucketOf(c.host_hash, nb))
+      .flatMap { case (b, cs) =>
+        // cuckoo read stays lenient: an unreadable shard only demotes
+        // to the exact tier (correct, slower) — never drops dedup
+        val cf = filterRounds.get(b)
+          .flatMap(fr => Snapshots.readBytesAt(Snapshots.filterPathAt(root, fr, b)))
+          .map(CuckooFilter.deserialize)
+        // manifest-absent bucket = never had a seen entry (empty IS
+        // exact); manifest-present-but-unreadable segment = FAIL the
+        // round (requiredBytesAt) — defaulting to empty would
+        // reclassify seen URLs as new, permanent dedup loss
+        lazy val segs = seenIdxSegs.getOrElse(b, Nil).reverse
+          .map(ir => SeenIndex.deserialize(
+            Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b))))
+        cs.filter(c =>
+          !cf.forall(_.mightContain(c.url_hash)) ||
+            !segs.exists(_.contains(c.url_hash)))
+      }
+    val candAll = tiered.filter(!_._2).map(_._1) ++ exactNew
 
     // -- frontier delta (the bucketed update replaces the old exclusion
     // anti-joins AND the full-frontier rewrite; see the class doc) -----
@@ -596,94 +646,32 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     //      3 = remove selected row (its hash STAYS in the exclusion
     //      membership set — a re-discovered just-fetched URL must not
     //      re-enter), 4 = add retry (forced), 5 = add candidate (only
-    //      if its hash is unknown to the updated membership set)
-    val updPri0 = robotsFetchedOpt match {
-      case Some(rf) =>
-        rf.map { o => FUpd(fbucketOf(o.url_hash, nFb), 1, o.url_hash, None) }
-      case None => spark.emptyDataset[FUpd]
-    }
-    val frontierUpd = updPri0
-      .union(blockedHashes.map(h => FUpd(fbucketOf(h, nFb), 2, h, None)))
-      .union(selected.map(s => FUpd(fbucketOf(s.e.url_hash, nFb), 3, s.e.url_hash, None)))
-      .union(retries.map(e => FUpd(fbucketOf(e.url_hash, nFb), 4, e.url_hash, Some(e))))
-      .union(candAll.map(e => FUpd(fbucketOf(e.url_hash, nFb), 5, e.url_hash, Some(e))))
-
-    // -- host state update ----------------------------------------------
-    val selCounts = selected.groupBy(col("e.host").as("c_host")).count()
-    val hostStateUpd = hostState
-      .join(hostDim(selCounts), col("host") === col("c_host"), "left")
-      .withColumn("tokens",
-        least(col("capacity"), col("tokens") + col("refill_per_round"))
-          - coalesce(col("count"), lit(0)).cast("double"))
-      .select(col("host"), col("host_hash"), col("tokens"), col("capacity"),
-              col("refill_per_round")).as[HostState]
-    val capD = cfg.hostCapacity
-    val refD = cfg.hostRefill
-    // new hosts come from the candidate set: every candidate REJECTED by
-    // the bucket update collided with a frontier/retry row of the same
-    // URL, whose host is in host_state already — and robotsCand hosts
-    // are candSeenFree hosts by construction — so hosts(candSeenFree)
-    // minus host_state equals the accepted entries' new hosts exactly,
-    // with no dependency on the update pass's output (and no second
-    // evaluation of the robots-candidate pipeline)
-    val newHostRows = candSeenFree.map(_.host).distinct()
-      .join(hostDim(hostState.select(col("host").as("h_host"))),
-            col("value") === col("h_host"), "left_anti")
-      .as[String]
-      .map(h => HostState(h, UrlCanon.hostHash(h), 0.0, capD, refD))
-    val hostStateAll = hostStateUpd.union(newHostRows)
-
-    // -- fetch log --------------------------------------------------------
-    val fetchLog = fetched.map { o =>
-      FetchLogEntry(r, o.host, o.host_hash, o.seq, o.url, o.url_hash, o.status)
-    }
-
-    // -- commit (per-round counters ride the writes as Observations) -----
-    // fetch_log first: it materializes the fetch caches and its metrics
-    // gate the conditional writes below. The remaining commit writes are
-    // all independent of each other, so they run as CONCURRENT Spark
-    // jobs — the round's fixed commit cost is the longest single write,
-    // not the sum of six sequential job launches.
-    val obsLog = Observation()
-    spark.sparkContext.setJobDescription(s"crawl r$r: fetch+log")
-    fetchLog.toDF()
-      .observe(obsLog,
-               count(lit(1)).as("n"),
-               coalesce(sum(when(col("status") === 200, 1L).otherwise(0L)), lit(0L))
-                 .as("ok"),
-               coalesce(sum(when(col("status") === 404, 1L).otherwise(0L)), lit(0L))
-                 .as("n404"),
-               coalesce(sum(when(col("seq") === 0, 1L).otherwise(0L)), lit(0L))
-                 .as("n_robots"),
-               coalesce(sum(when(col("seq") > 0 && col("status") === 200, 1L)
-                 .otherwise(0L)), lit(0L)).as("ok_main"))
-      .coalesce(statePar)
-      .write.mode("overwrite").parquet(snaps.tablePath(r, "fetch_log"))
-    def obsL(o: Observation, k: String): Long = o.get(k).asInstanceOf[Long]
-    val okMain = obsL(obsLog, "ok_main")
-    val nRobots = obsL(obsLog, "n_robots")
+    //      if its hash is unknown to the updated membership set).
+    // Every selected row was fetched exactly once, so the selected
+    // hashes are the main fetch output's.
+    val blockedHashes = gated.filter(!col("robots_allowed"))
+      .select(col("url_hash")).as[String].rdd
+    val frontierUpd = sc.union(
+      robotsFetched.map(_.map(o => FUpd(1, o.url_hash, None))).toSeq ++ Seq(
+        blockedHashes.map(h => FUpd(2, h, None)),
+        mainRdd.map(o => FUpd(3, o.url_hash, None)),
+        retries.map(e => FUpd(4, e.url_hash, Some(e))),
+        candAll.map(e => FUpd(5, e.url_hash, Some(e)))))
 
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: scala.concurrent.ExecutionContext = commitEc
 
-    val obsDocs = Observation()
     val docsF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: docs write")
+      sc.setJobDescription(s"crawl r$r: docs write")
       if (okMain > 0)
-        docs.toDF()
-          .observe(obsDocs, count(lit(1)).as("n"),
-                   coalesce(sum(size(col("spans"))), lit(0L)).as("spans"))
+        spark.createDataset(pageOuts.map(p => Doc(p.url_hash, p.url, p.host, r, p.spans)))
           .coalesce(statePar)
           .write.mode("overwrite").parquet(snaps.tablePath(r, "docs"))
     }
-    val obsSeen = Observation()
     val seenF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: seen write")
-      seenDelta.toDF()
-        .observe(obsSeen,
-                 coalesce(sum(when(col("status") === 599, 1L).otherwise(0L)), lit(0L))
-                   .as("exhausted"))
+      sc.setJobDescription(s"crawl r$r: seen write")
+      spark.createDataset(seenDelta)
         .coalesce(statePar)
         .write.mode("overwrite").parquet(snaps.tablePath(r, "seen_delta"))
     }
@@ -714,16 +702,15 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // candidate on an absent hash => ENTRY.
     val fCompactEvery = cfg.compactEvery
     val frontF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: frontier update")
-      frontierUpd
-        .groupByKey(_.fb)
-        .mapGroups { (fb: Int, it: Iterator[FUpd]) =>
+      sc.setJobDescription(s"crawl r$r: frontier update")
+      collectInSqlJob(byBucket(frontierUpd)(u => fbucketOf(u.hash, nFb))
+        .map { case (fb, us) =>
           val remBoth = mutable.HashSet.empty[String]
           val selSet = mutable.HashSet.empty[String]
           val retriesB = mutable.ArrayBuffer.empty[FrontierEntry]
           val candsB = mutable.ArrayBuffer.empty[FrontierEntry]
           var nBlockedRemoved = 0L
-          it.foreach { u =>
+          us.foreach { u =>
             u.op match {
               case 1 => remBoth += u.hash
               case 2 => remBoth += u.hash; nBlockedRemoved += 1
@@ -789,12 +776,11 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           w.close()
           FrontierStat(fb, n, nNew, retriesB.size.toLong, nPri0,
                        nBlockedRemoved, compacted = compact)
-        }
-        .collect()
+        })
     }
     // robots table only changes on rounds that fetched robots.txt
     val robotsF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: robots write")
+      sc.setJobDescription(s"crawl r$r: robots write")
       if (nRobots > 0) {
         robotsAll.coalesce(statePar)
           .write.mode("overwrite").parquet(snaps.tablePath(r, "robots"))
@@ -803,8 +789,8 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     }
     val obsHost = Observation()
     val hostF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: host_state write")
-      hostStateAll.toDF()
+      sc.setJobDescription(s"crawl r$r: host_state write")
+      spark.createDataset(hostStateAll)
         .observe(obsHost, count(lit(1)).as("n"))
         .coalesce(statePar)
         .write.mode("overwrite").parquet(snaps.tablePath(r, "host_state"))
@@ -818,11 +804,10 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // (rare); a bucket whose rebuild also overflows is omitted from the
     // manifest so readers fall back to the conservative maybe-seen path.
     val filtersF = Future {
-      spark.sparkContext.setJobDescription(s"crawl r$r: filter shards")
+      sc.setJobDescription(s"crawl r$r: filter shards")
       val idxMergeEvery = cfg.compactEvery
-      val updates = seenDelta
-        .groupByKey(s => bucketOf(s.host_hash, nb))
-        .mapGroups { (b: Int, it: Iterator[SeenEntry]) =>
+      val updates = collectInSqlJob(byBucket(seenDelta)(s => bucketOf(s.host_hash, nb))
+        .map { case (b, deltaRows) =>
           val segRounds = seenIdxSegs.getOrElse(b, Nil)
           // all reads here are manifest-referenced => fail-closed: an
           // unreadable segment/shard means lost storage, and rebuilding
@@ -853,7 +838,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
               (cf0, bf0)
           }
           val deltaHashes = mutable.ArrayBuffer.empty[String]
-          it.foreach { s =>
+          deltaRows.foreach { s =>
             ok &= cf.put(s.url_hash)
             bf.put(s.url_hash)
             deltaHashes += s.url_hash
@@ -878,22 +863,23 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
               segRounds :+ r
             }
           (b, ok, newSegs)
-        }.collect()
+        })
       val failedBuckets = updates.filter(!_._2).map(_._1).toSet
       val rebuiltOk: Map[Int, Boolean] =
         if (failedBuckets.isEmpty) Map.empty
-        else readTMulti[SeenEntry](snaps.seenPaths(m)).union(seenDelta)
-          .filter(s => failedBuckets.contains(bucketOf(s.host_hash, nb)))
-          .groupByKey(s => bucketOf(s.host_hash, nb))
-          .mapGroups { (b: Int, it: Iterator[SeenEntry]) =>
-            val hashes = it.map(_.url_hash).toArray.distinct
+        else collectInSqlJob(byBucket(readTMulti[SeenEntry](snaps.seenPaths(m)).rdd
+            .union(seenDelta)
+            .filter(s => failedBuckets.contains(bucketOf(s.host_hash, nb))))(
+            s => bucketOf(s.host_hash, nb))
+          .map { case (b, rows) =>
+            val hashes = rows.iterator.map(_.url_hash).toArray.distinct
             val cf = CuckooFilter.sized(hashes.length.toLong * 2)
             var ok = true
             hashes.foreach(h => ok &= cf.put(h))
             if (ok)
               Snapshots.writeBytesAt(Snapshots.filterPathAt(root, r, b), cf.serialize())
             (b, ok)
-          }.collect().toMap
+          }).toMap
       val touchedOk = updates
         .map(u => u._1 -> (u._2 || rebuiltOk.getOrElse(u._1, false))).toMap
       // untouched buckets keep referencing their last-written round's
@@ -919,7 +905,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // (latest round wins) so revocation re-fetches cannot leave
     // duplicate rows in the table.
     val deltaRounds = m.seenDeltaRounds :+ r
-    spark.sparkContext.setJobDescription(s"crawl r$r: seen compaction")
+    sc.setJobDescription(s"crawl r$r: seen compaction")
     val (seenFullRound, seenRunRounds, seenDeltaRounds) =
       if (deltaRounds.size >= cfg.compactEvery) {
         if (m.seenRunRounds.size + 1 >= cfg.compactEvery) {
@@ -945,8 +931,10 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
 
     val selectedCnt = obsL(obsLog, "n")
     val okCnt = obsL(obsLog, "ok")
-    val spansCnt = if (okMain > 0) obsL(obsDocs, "spans") else 0L
-    val docsCnt = if (okMain > 0) obsL(obsDocs, "n") else 0L
+    // docs are the main fetches that returned 200; robots rows and
+    // failed fetches carry no spans
+    val spansCnt = if (okMain > 0) obsL(obsLog, "spans") else 0L
+    val docsCnt = okMain
     // frontier counters: touched buckets from this round's stats,
     // untouched buckets carried from the manifest — totals never
     // require reading untouched buckets. A touched bucket either
@@ -982,13 +970,39 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         "cfg_frontier_buckets" -> cfg.frontierBuckets.toLong),
       done = frontierLeft == 0))
 
-    (Seq(frontier, gated, selected, mainFetched, seenDelta,
-         candSeenFree, robotsAll) ++ robotsFetchedOpt)
-      .foreach(_.unpersist(false))
-    tieredCaches.foreach(_.unpersist(false))
-
     RoundResult(r, selectedCnt, okCnt, newCnt, frontierLeft, frontierLeft == 0)
   }
+
+  /** One task per touched bucket: each row goes to the task of its
+    * bucket, which holds that bucket's rows in memory — delta-sized at
+    * every call site (candidates, frontier updates, seen deltas), never
+    * state-sized. An RDD shuffle of the model's case classes: it
+    * generates no classes, so a round's codegen working set does not
+    * grow with the number of bucket passes.
+    */
+  private def byBucket[T](rows: RDD[T])(bucket: T => Int): RDD[(Int, Iterable[T])] =
+    rows.groupBy(bucket, spark.sparkContext.defaultParallelism)
+
+  /** `rows.collect()`, run as a Spark SQL job. Spark's codegen cache keys
+    * a generated class by the compiling thread's class loader, and
+    * executors run the tasks of SQL jobs under the session's loader but
+    * those of plain RDD jobs under their default one: a Dataset-to-RDD
+    * conversion that both kinds of job compute would compile its classes
+    * twice, and whichever job got to it first would decide which copy a
+    * round used. The rows travel as Java-serialized bytes, so every call
+    * shares one generated serializer and deserializer.
+    */
+  private def collectInSqlJob[T: ClassTag](rows: RDD[T]): Array[T] =
+    spark.createDataset(rows.map { x =>
+      val bytes = new java.io.ByteArrayOutputStream
+      val out = new java.io.ObjectOutputStream(bytes)
+      out.writeObject(x)
+      out.close()
+      bytes.toByteArray
+    })(Encoders.BINARY).collect().map { b =>
+      val in = new java.io.ObjectInputStream(new java.io.ByteArrayInputStream(b))
+      try in.readObject().asInstanceOf[T] finally in.close()
+    }
 
   /** Administrative revocation — the scenario cuckoo deletability exists
     * for (CuckooFilter.scala:18-19): a host relaxes its robots rules or
@@ -1196,8 +1210,7 @@ object CrawlScheduler {
     * frontier-update path — delta-scale, never state-scale). See the
     * op table at the construction site in runRound.
     */
-  final case class FUpd(fb: Int, op: Int, hash: String,
-                        e: Option[FrontierEntry])
+  final case class FUpd(op: Int, hash: String, e: Option[FrontierEntry])
   final case class FrontierStat(fb: Int, n: Long, n_new: Long, n_retry: Long,
                                 n_pri0: Long, n_blocked: Long,
                                 compacted: Boolean)
@@ -1216,10 +1229,13 @@ object CrawlScheduler {
     * per fetched URL. The raw body is parsed into `spans`/`links`
     * (content pages) or `robots_prefixes` (robots.txt) INSIDE the fetch
     * task and never cached: at 10^7-page rounds the body cache alone
-    * exceeded executor storage and turned the round I/O-bound.
+    * exceeded executor storage and turned the round I/O-bound. `round`
+    * is the fetching round: carried as data, not as a literal in the
+    * round's column expressions, so the generated classes stay the same
+    * from round to round.
     */
-  final case class FetchOut(url: String, url_hash: String, host: String,
-                            host_hash: Long, status: Int, seq: Int,
+  final case class FetchOut(round: Int, url: String, url_hash: String,
+                            host: String, host_hash: Long, status: Int, seq: Int,
                             attempt: Int, priority: Int, discovery_time: Long,
                             kind: String, spans: Seq[Span],
                             links: Seq[String], robots_prefixes: Seq[String])
@@ -1252,16 +1268,22 @@ object CrawlScheduler {
   def bucketOf(hostHash: Long, nBuckets: Int): Int =
     (((hostHash % nBuckets) + nBuckets) % nBuckets).toInt
 
-  /** Bounded top-k: O(n log k) time, O(k) memory — a hot host's phase-A
-    * group never materializes in task memory.
+  /** The rows of a run-sorted stream that fit their host's budget, each
+    * with its 1-based rank in its run: a run is a maximal stretch of
+    * equal `key`, sorted in entryOrd order, so the first `budget` rows
+    * of a run are its top-`budget`. Streams; holds one key.
     */
-  def topK(it: Iterator[FrontierEntry], k: Int): Iterator[FrontierEntry] = {
-    if (k <= 0) return Iterator.empty
-    val heap = mutable.PriorityQueue.empty[FrontierEntry](entryOrd) // max at head
-    it.foreach { e =>
-      if (heap.size < k) heap.enqueue(e)
-      else if (entryOrd.lt(e, heap.head)) { heap.dequeue(); heap.enqueue(e) }
+  def headsOfRuns[K](it: Iterator[WithBudget])(key: WithBudget => K): Iterator[(WithBudget, Int)] = {
+    var run: Option[K] = None
+    var rank = 0
+    it.flatMap { w =>
+      val k = key(w)
+      if (!run.contains(k)) { run = Some(k); rank = 0 }
+      rank += 1
+      if (rank <= w.budget) Some((w, rank)) else None
     }
-    heap.dequeueAll.reverseIterator
   }
+
+  /** The SparkContext local property that holds a job's description. */
+  private val JobDescription = "spark.job.description"
 }

@@ -1,6 +1,17 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model._
 import graft.oracle.CrawlOracle
@@ -311,5 +322,116 @@ class CrawlSchedulerSpec extends SparkSuite {
       .groupBy(col("round"), col("host")).count()
       .agg(max(col("count"))).as[Long].head()
     assert(perHostRound <= 4L, s"budget exceeded: $perHostRound")
+  }
+
+  // the benchmark's crawl shape at test scale: every listing seeded, a
+  // per-host budget, and more frontier per host than a few rounds fetch,
+  // so every round after the robots round runs the same plans
+  private def steadyCfg(prefix: String) = CrawlConfig(
+    web = WebConfig(seed = 31, nHosts = 4, listPagesPerHost = 4, detailsPerList = 20,
+                    hotHostFactor = 2, pct404 = 3, pct503 = 2, crossHostLinkPct = 5,
+                    seedAllListPages = true),
+    outDir = tmpDir(prefix), hostCapacity = 8.0, hostRefill = 8.0)
+
+  test("a steady round compiles no generated classes") {
+    // a round's generated classes must fit Spark's default codegen cache
+    // (100 entries in 4 LRU segments): a working set over it recompiles
+    // every class of the round, every round
+    val cfg = steadyCfg("crawlsteady-")
+    val sched = new CrawlScheduler(spark, cfg)
+    sched.init()
+    (1 to 3).foreach(sched.runRound) // the robots round, then warm-up
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val res = sched.runRound(4)
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(res.selected == 4 * 8, s"not a steady round: ${res.selected} selected")
+    assert(compiled == 0, s"steady round 4 compiled $compiled classes")
+  }
+
+  test("a round leaves the caller's job description and no caches, also when it throws") {
+    val sc = spark.sparkContext
+    val cfg = steadyCfg("crawldesc-")
+    val sched = new CrawlScheduler(spark, cfg)
+    sched.init()
+    def desc = sc.getLocalProperty("spark.job.description")
+    try {
+      sc.setJobDescription(null)
+      sched.runRound(1)
+      assert(desc == null, s"round 1 left the description '$desc'")
+      sc.setJobDescription("caller's query")
+      sched.runRound(2)
+      assert(desc == "caller's query", s"round 2 left the description '$desc'")
+      // a round that throws mid-way (a frontier bucket file lost after
+      // the round's first job was labelled) restores it too
+      val m = new Snapshots(cfg.outDir).readManifest(2)
+      val (fb, fr) = m.frontierSegs.map { case (b, segs) => b -> segs.last }.head
+      assert(new java.io.File(Snapshots.frontierPathAt(cfg.outDir, fr, fb)).delete())
+      val cached = sc.getPersistentRDDs.keySet
+      intercept[Exception](sched.runRound(3))
+      assert(desc == "caller's query", s"failed round 3 left the description '$desc'")
+      assert(sc.getPersistentRDDs.keySet == cached,
+             s"failed round 3 left cached RDDs ${sc.getPersistentRDDs.keySet -- cached}")
+    } finally sc.setJobDescription(null)
+  }
+
+  /** Every node of an executed plan, through adaptive plans, query stages
+    * and the plans of cached relations.
+    */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case c: InMemoryTableScanExec => planNodes(c.relation.cachedPlan)
+    case _ => p.children.flatMap(planNodes)
+  })
+
+  test("fetch-log writes broadcast the robots and budget tables while hosts are few") {
+    val cfg = steadyCfg("crawlbcast-")
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        qe.logical match {
+          case c: InsertIntoHadoopFsRelationCommand
+              if c.outputPath.getName == "fetch_log" &&
+                c.outputPath.toString.contains(cfg.outDir) =>
+            plans.synchronized(plans += qe.executedPlan)
+          case _ =>
+        }
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val snaps = new Snapshots(cfg.outDir)
+    val sched = new CrawlScheduler(spark, cfg)
+    spark.listenerManager.register(listener)
+    try {
+      sched.init()
+      assert(snaps.readManifest(0).counters.contains("hosts"), "init wrote no hosts counter")
+      (1 to 3).foreach { r =>
+        sched.runRound(r)
+        val hosts = snaps.readManifest(r).counters.get("hosts")
+        assert(hosts.exists(h => h > 0 && h <= cfg.hostBroadcastMax),
+               s"round $r hosts counter: $hosts")
+      }
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (plans.synchronized(plans.size) < 3 && System.nanoTime() < deadline)
+        Thread.sleep(50)
+    } finally spark.listenerManager.unregister(listener)
+    assert(plans.size == 3, s"${plans.size} fetch_log writes seen, want 3")
+    plans.zipWithIndex.foreach { case (plan, i) =>
+      val nodes = planNodes(plan)
+      val bhjKeys = nodes.collect { case j: BroadcastHashJoinExec =>
+        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet
+      }
+      assert(bhjKeys.exists(_("r_host")), s"round ${i + 1}: robots not broadcast-joined")
+      assert(bhjKeys.exists(_("b_host")), s"round ${i + 1}: budgets not broadcast-joined")
+      assert(!nodes.exists(n => n.isInstanceOf[SortMergeJoinExec] ||
+                                 n.isInstanceOf[ShuffledHashJoinExec]),
+             s"round ${i + 1}: a shuffle join in the fetch_log write")
+      val dimShuffles = nodes.collect { case e: ShuffleExchangeExec =>
+        e.outputPartitioning match {
+          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
+          case _ => Nil
+        }
+      }.flatten.filter(Set("r_host", "b_host"))
+      assert(dimShuffles.isEmpty, s"round ${i + 1}: host table shuffled on $dimShuffles")
+    }
   }
 }
