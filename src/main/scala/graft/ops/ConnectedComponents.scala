@@ -4,6 +4,8 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.util.Pinned
+
 /** Distributed connected components over an undirected edge list —
   * the composition piece that turns near-duplicate PAIRS (MinHash /
   * SimHash / embedding band output, [[Dedup]] / [[Similarity]]) into
@@ -27,7 +29,9 @@ import org.apache.spark.sql.functions._
   *     from the source (on a multi-executor cluster prefer
   *     `spark.sparkContext.setCheckpointDir` + `checkpoint()` for
   *     fault-tolerant truncation — `localCheckpoint` pins blocks to
-  *     executors and does not survive executor loss);
+  *     executors and does not survive executor loss). Each round frees
+  *     the previous round's checkpoint through its RDD (see
+  *     [[graft.util.Pinned]]), so at most one round's edges stay held;
   *   - convergence is detected by an order-independent signature
   *     (count + xor of xxhash64(u,v)) instead of a full diff — one
   *     cheap aggregate per round;
@@ -115,14 +119,14 @@ object ConnectedComponents {
   private def dedupPartitions(d: DataFrame): Int =
     d.sparkSession.sessionState.conf.numShufflePartitions
 
-  /** Eager lineage cut that keeps the hash(u) layout [[roundDedup]]
+  /** Eager lineage cut, pinned, that keeps the hash(u) layout [[roundDedup]]
     * just established — plain `localCheckpoint` drops it under AQE
     * (see [[org.apache.spark.sql.GraftCheckpoint]]), which would
     * re-introduce the exchange this round structure removes.
     */
-  private def checkpointKeyedU(d: DataFrame): DataFrame =
-    org.apache.spark.sql.GraftCheckpoint
-      .localCheckpointKeepHash(d, Seq("u"), dedupPartitions(d))
+  private def checkpointKeyedU(d: DataFrame): Pinned =
+    Pinned.of(org.apache.spark.sql.GraftCheckpoint
+      .localCheckpointKeepHash(d, Seq("u"), dedupPartitions(d)))
 
   /** Connected components of the undirected graph given by
     * `edges(idA, idB)`. Returns (id, component_id) for every distinct
@@ -156,24 +160,27 @@ object ConnectedComponents {
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
 
-    var sig = signature(e)
+    var sig = signature(e.df)
     var converged = sig._1 == 0L
     var iter = 0
     while (!converged) {
       iter += 1
       require(iter <= maxIter, s"connected components did not converge in $maxIter rounds")
       val prev = e
-      e = checkpointKeyedU(smallStar(largeStar(e)))
-      val next = signature(e)
+      e = checkpointKeyedU(smallStar(largeStar(e.df)))
+      val next = signature(e.df)
       converged = next == sig
       sig = next
-      prev.unpersist(blocking = false)
+      // the previous round's edges are read by nothing from here on; the
+      // last round's stay pinned as the result's rows
+      prev.release()
     }
 
     // At the fixpoint every edge is a direct (node -> root) pointer and
     // every root appears only on the v side.
-    (e.select(col("u").as("id"), col("v").as("component_id"))
-       .union(e.select(col("v").as("id"), col("v").as("component_id")))
+    val last = e.df
+    (last.select(col("u").as("id"), col("v").as("component_id"))
+       .union(last.select(col("v").as("id"), col("v").as("component_id")))
        .groupBy("id").agg(min("component_id").as("component_id")),
      iter)
   }

@@ -105,29 +105,24 @@ object IncrementalLsh {
   def cappedNewPairs(oldBands: DataFrame, newBands: DataFrame, cap: Int,
                      acc: Option[LongAccumulator] = None,
                      matchTag: Boolean = false): DataFrame = {
-    val spark = newBands.sparkSession
-    import spark.implicits._
-    def norm(df: DataFrame, isNew: Boolean) = df
-      .select(col("band").cast("int"), col("bucket").cast("long"),
-              col("id").cast("long"), lit(isNew).as("is_new"),
-              LshPairs.tagOrZero(matchTag))
     // buckets untouched by new rows contribute nothing: semi-join the
     // old postings down to touched buckets BEFORE grouping, so the
     // grouped exchange carries O(|new| + |old in touched buckets|)
-    // rows, never the whole index
-    val touched = norm(newBands, isNew = true)
-    val oldTouched = norm(oldBands, isNew = false)
-      .join(touched.select(col("band").as("t_band"),
-                           col("bucket").as("t_bucket")).distinct(),
-            col("band") === col("t_band") && col("bucket") === col("t_bucket"),
-            "left_semi")
+    // rows, never the whole index. The build side is the new postings'
+    // (band, bucket) as they are: a left-semi build side needs no
+    // distinct, and the planner sizes it from the new postings' stats
+    val touched = newBands.select(col("band").as("t_band"), col("bucket").as("t_bucket"))
+    val oldTouched = oldBands.join(
+      touched, col("band") === col("t_band") && col("bucket") === col("t_bucket"),
+      "left_semi")
     LshPairs.emitCapped(
-      touched.unionByName(oldTouched).as[(Int, Long, Long, Boolean, Long)],
-      cap, acc)(t => (t._1, t._2), t => LshPairs.Member(t._3, t._5, t._4))
+      LshPairs.members(newBands, matchTag, isNew = true)
+        .unionByName(LshPairs.members(oldTouched, matchTag, isNew = false)),
+      cap, acc)
   }
 
   /** The index: postings (band, bucket, id, tag) + shingles (id, sh). */
-  private def index(indexDir: String) = new RoundSlots.BandIndex(
+  private[graft] def index(indexDir: String) = new RoundSlots.BandIndex(
     indexDir, StructType.fromDDL("band INT, bucket BIGINT, id BIGINT, tag BIGINT"),
     "shingles", StructType.fromDDL("id BIGINT, sh ARRAY<STRING>"))
 

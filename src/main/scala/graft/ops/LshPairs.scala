@@ -2,9 +2,13 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 import org.apache.spark.util.LongAccumulator
+
+import graft.util.Pinned
 
 /** The banded near-dup core shared by the LSH dedup/similarity family
   * ([[Dedup.minhashNearDups]], [[Dedup.simhashNearDups]],
@@ -33,9 +37,10 @@ import org.apache.spark.util.LongAccumulator
   *
   * Verify join. Two shapes, chosen by the caller:
   *   - [[joinPayloadsPruned]], the at-scale shape (MinHash at threshold
-  *     1.0, cosine, both incremental rounds): the pair set is pinned and
-  *     counted, the payload lookup is pruned to pair ids, and both sides
-  *     carry a measured-size broadcast guard;
+  *     1.0, cosine, both incremental rounds): the pair set is pinned,
+  *     and counted by the pinning job itself; the payload lookup is
+  *     pruned to pair ids and evaluated once for both join sides; every
+  *     broadcast carries a size guard;
   *   - [[joinPayloads]], the bounded-subset shape (SimHash, MinHash
   *     below 1.0): one plain join of the unpinned pairs against the
   *     whole lookup. Below threshold 1.0 MinHash has no signature-tag
@@ -44,8 +49,19 @@ import org.apache.spark.util.LongAccumulator
   *     payload for every row once — these paths expect a bounded input
   *     (a similarity search over a subset, not a corpus-scale dedup);
   *     run a corpus through threshold 1.0 or the incremental indexes.
+  *
+  * Stages. A verify is a fixed cost per Spark job and per generated
+  * class, so the core keeps both few: the capped emitter is an RDD pass
+  * (its shuffle carries packed longs and generates no classes), the
+  * semi-join build sides take no `distinct()` (a left-semi build side
+  * needs none, and the pair-id guard already sizes them as 2 × pairs),
+  * and the pruned lookup is evaluated once, pinned, for both join sides.
   */
 object LshPairs {
+
+  /** The session's autoBroadcastJoinThreshold (≤ 0: broadcasts off). */
+  private def broadcastLimit(df: DataFrame): Long =
+    df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
 
   /** Broadcast `df` only when `rows * bytesPerRow` fits the session's
     * autoBroadcastJoinThreshold, else return it unhinted — the
@@ -56,7 +72,7 @@ object LshPairs {
     */
   private def broadcastIfFits(df: DataFrame, rows: Long,
                               bytesPerRow: Long): DataFrame = {
-    val bcLimit = df.sparkSession.sessionState.conf.autoBroadcastJoinThreshold
+    val bcLimit = broadcastLimit(df)
     if (bcLimit > 0 && rows * bytesPerRow <= bcLimit) broadcast(df) else df
   }
 
@@ -78,119 +94,194 @@ object LshPairs {
     */
   def cappedIdPairs(banded: DataFrame, cap: Int,
                     acc: Option[LongAccumulator] = None,
-                    matchTag: Boolean = false): DataFrame = {
-    val spark = banded.sparkSession
-    import spark.implicits._
-    emitCapped(
-      banded
-        .select(col("band").cast("int"), col("bucket").cast("long"),
-                col("id").cast("long"), tagOrZero(matchTag))
-        .as[(Int, Long, Long, Long)],
-      cap, acc)(t => (t._1, t._2), t => Member(t._3, t._4, isNew = true))
-  }
+                    matchTag: Boolean = false): DataFrame =
+    emitCapped(members(banded, matchTag, isNew = true), cap, acc)
 
-  /** The `tag` column cast to long, or a constant 0 when tags are not
-    * matched — every member then compares equal.
+  /** `df`'s postings as the emitter reads them: band INT, bucket BIGINT,
+    * id BIGINT, tag BIGINT (0 unless `matchTag`), is_new BOOLEAN.
     */
-  private[ops] def tagOrZero(matchTag: Boolean): Column =
-    (if (matchTag) col("tag").cast("long") else lit(0L)).as("tag")
+  private[ops] def members(df: DataFrame, matchTag: Boolean,
+                           isNew: Boolean): DataFrame =
+    df.select(col("band").cast("int"), col("bucket").cast("long"),
+              col("id").cast("long"),
+              (if (matchTag) col("tag").cast("long") else lit(0L)).as("tag"),
+              lit(isNew).as("is_new"))
 
   /** One bucket member as the emitter sees it. */
-  private[ops] final case class Member(id: Long, tag: Long, isNew: Boolean)
+  private final case class Member(id: Long, tag: Long, isNew: Boolean)
+
+  private val ById: Ordering[Member] = Ordering.by(_.id)
+
+  private val PairSchema = StructType(Seq(StructField("id_a", LongType, nullable = false),
+                                          StructField("id_b", LongType, nullable = false)))
 
   /** The one capped-bucket emitter, behind [[cappedIdPairs]] and
-    * [[IncrementalLsh.cappedNewPairs]]. Groups `rows` by `key` (band,
-    * bucket), keeps each bucket's `cap` smallest ids and emits every
-    * kept pair whose members have equal tags and at least one of which
-    * is new. `member` maps a row to its [[Member]] inside the task, so
-    * the grouped exchange carries each caller's own row type: the batch
-    * row has no new flag to widen it.
+    * [[IncrementalLsh.cappedNewPairs]]. Groups the [[members]] `rows` by
+    * (band, bucket), keeps each bucket's `cap` smallest ids and emits
+    * every kept pair whose members have equal tags and at least one of
+    * which is new; the pairs leave distinct (id_a, id_b).
+    *
+    * The grouping is an RDD pass: each member travels as (bucket, [band
+    * and new flag, id, tag]), plain longs that Spark shuffles with Kryo,
+    * sorted by bucket, and each bucket run is split by band in the task.
+    * It generates no classes, and the run sort spills as any shuffle
+    * sort does. Only the cross-bucket distinct is a DataFrame aggregate.
     */
-  private[ops] def emitCapped[T](rows: Dataset[T], cap: Int,
-                                 acc: Option[LongAccumulator])(
-      key: T => (Int, Long), member: T => Member): DataFrame = {
+  private[ops] def emitCapped(rows: DataFrame, cap: Int,
+                              acc: Option[LongAccumulator]): DataFrame = {
     require(cap > 1, s"cap must be > 1, got $cap")
     val spark = rows.sparkSession
-    import spark.implicits._
     val dropped = acc.getOrElse(
       spark.sparkContext.longAccumulator("lsh_capped_dropped_rows"))
-    rows
-      .groupByKey(key)
-      .flatMapGroups { (_: (Int, Long), it: Iterator[T]) =>
-        // the common bucket is tiny (a handful of ids): collect into a
-        // flat buffer and only heapify ON overflow — allocating a
-        // PriorityQueue for each of the ~|banded| groups was measurably
-        // the hot spot. The overflow path is the same bounded max-heap
-        // keeping the cap smallest ids (ordering on id alone, tag and
-        // new flag ride along), deterministic regardless of shuffle
-        // arrival order.
-        implicit val ord: Ordering[Member] = Ordering.by(_.id)
-        val buf = new mutable.ArrayBuffer[Member](4)
-        var heap: mutable.PriorityQueue[Member] = null
-        it.foreach { t =>
-          val e = member(t)
-          if (heap == null) {
-            buf += e
-            if (buf.length > cap) {
-              heap = mutable.PriorityQueue.empty[Member]
-              heap ++= buf
-              heap.dequeue() // shed the max back down to cap
-              dropped.add(1L)
-            }
-          } else if (e.id < heap.head.id) {
-            heap.dequeue(); heap.enqueue(e); dropped.add(1L)
-          } else dropped.add(1L)
-        }
-        val ids: scala.collection.Seq[Member] =
-          if (heap == null) {
-            val a = buf.toArray; java.util.Arrays.sort(a, ord); a // ascending
-          } else heap.dequeueAll.reverse // ascending
-        ids.indices.iterator.flatMap { i =>
-          (i + 1 until ids.length).iterator
-            .filter(j => (ids(i).isNew || ids(j).isNew) &&
-              ids(i).tag == ids(j).tag) // tags equal (0 == 0 untagged)
-            .map(j => (ids(i).id, ids(j).id))
-        }
+    val byBucket = new HashPartitioner(spark.sessionState.conf.numShufflePartitions)
+    val pairs = rows.queryExecution.toRdd
+      .map { r =>
+        (r.getLong(1),
+         Array((r.getInt(0).toLong << 1) | (if (r.getBoolean(4)) 1L else 0L),
+               r.getLong(2), r.getLong(3)))
       }
-      .toDF("id_a", "id_b")
-      .dropDuplicates("id_a", "id_b")
+      .repartitionAndSortWithinPartitions(byBucket)
+      .mapPartitions(bucketPairs(_, cap, dropped))
+      .map { case (a, b) => Row(a, b) }
+    spark.createDataFrame(pairs, PairSchema).dropDuplicates("id_a", "id_b")
+  }
+
+  /** The pairs of a bucket-sorted member stream: one bucket run at a
+    * time, split by band, each band's group capped on its own.
+    */
+  private def bucketPairs(rows: Iterator[(Long, Array[Long])], cap: Int,
+                          dropped: LongAccumulator): Iterator[(Long, Long)] = {
+    val in = rows.buffered
+    new Iterator[Iterator[(Long, Long)]] {
+      def hasNext: Boolean = in.hasNext
+      def next(): Iterator[(Long, Long)] = {
+        val bucket = in.head._1
+        val bands = mutable.LongMap.empty[Capped]
+        while (in.hasNext && in.head._1 == bucket) {
+          val m = in.next()._2
+          bands.getOrElseUpdate(m(0) >>> 1, new Capped(cap, dropped))
+            .add(Member(m(1), m(2), (m(0) & 1L) == 1L))
+        }
+        bands.valuesIterator.flatMap(_.pairs)
+      }
+    }.flatten
+  }
+
+  /** One (band, bucket) group, capped to its `cap` smallest ids. The
+    * common bucket is tiny (a handful of ids): members collect into a
+    * flat buffer and only heapify ON overflow — allocating a
+    * PriorityQueue for every group was measurably the hot spot. The
+    * overflow path is a bounded max-heap keeping the cap smallest ids
+    * (ordering on id alone, tag and new flag ride along), deterministic
+    * regardless of shuffle arrival order; every member it sheds counts
+    * in `dropped`.
+    */
+  private final class Capped(cap: Int, dropped: LongAccumulator) {
+    private val buf = new mutable.ArrayBuffer[Member](4)
+    private var heap: mutable.PriorityQueue[Member] = null
+
+    def add(e: Member): Unit =
+      if (heap == null) {
+        buf += e
+        if (buf.length > cap) {
+          heap = mutable.PriorityQueue.empty[Member](ById)
+          heap ++= buf
+          heap.dequeue() // shed the max back down to cap
+          dropped.add(1L)
+        }
+      } else if (e.id < heap.head.id) {
+        heap.dequeue(); heap.enqueue(e); dropped.add(1L)
+      } else dropped.add(1L)
+
+    /** Kept pairs (id_a < id_b) with equal tags (0 == 0 untagged) and
+      * at least one new member.
+      */
+    def pairs: Iterator[(Long, Long)] = {
+      val ids: collection.Seq[Member] =
+        if (heap == null) {
+          val a = buf.toArray; java.util.Arrays.sort(a, ById); a // ascending
+        } else heap.dequeueAll.reverse // ascending
+      ids.indices.iterator.flatMap { i =>
+        (i + 1 until ids.length).iterator
+          .filter(j => (ids(i).isNew || ids(j).isNew) && ids(i).tag == ids(j).tag)
+          .map(j => (ids(i).id, ids(j).id))
+      }
+    }
   }
 
   /** Join `pairs` (id_a, id_b) back onto `lookup` (id, payload), adding
-    * columns payload_a and payload_b. The unpruned shape — see the
-    * object doc for when it applies.
+    * columns payload_a and payload_b; `side` wraps each lookup side (a
+    * broadcast hint). The unpruned shape — see the object doc for when
+    * it applies.
     */
-  private[ops] def joinPayloads(pairs: DataFrame, lookup: DataFrame): DataFrame =
+  private[ops] def joinPayloads(pairs: DataFrame, lookup: DataFrame,
+                                side: DataFrame => DataFrame = identity): DataFrame =
     pairs
-      .join(lookup.toDF("id_a", "payload_a"), "id_a")
-      .join(lookup.toDF("id_b", "payload_b"), "id_b")
+      .join(side(lookup.toDF("id_a", "payload_a")), "id_a")
+      .join(side(lookup.toDF("id_b", "payload_b")), "id_b")
+
+  /** `pairs` pinned by an eager local checkpoint, and its row count —
+    * counted by an Observation inside the pinning job, so the count
+    * costs no execution of its own.
+    */
+  private[ops] def pinCounted(pairs: DataFrame): (Pinned, Long) = {
+    val counted = Observation()
+    val pin = Pinned(pairs.observe(counted, count(lit(1)).as("n")))
+    (pin, counted.get("n").asInstanceOf[Long])
+  }
 
   /** The pruned verify join: [[joinPayloads]] of the `candidates` pair
     * set against `payload` evaluated over `source` (which carries `id`
     * and whatever `payload` reads), with
-    *   - the candidates pinned once (`localCheckpoint`: pair generation
-    *     must not re-execute per consumer) and COUNTED;
+    *   - the candidates pinned once (pair generation must not re-execute
+    *     per consumer) and counted by the pinning job ([[pinCounted]]);
     *   - the lookup PRUNED by a semi join to ids that appear in a
     *     surviving pair, BEFORE `payload` is evaluated — fat payloads of
     *     unpaired rows are dropped right after the scan instead of being
-    *     computed or riding the verify join's exchange;
-    *   - both the id set (semi join) and the pair set (verify joins)
+    *     computed or riding the verify join's exchange. The semi join's
+    *     build side is the exploded pair ids as they are, no
+    *     `distinct()`: duplicates only repeat a hash key;
+    *   - the pruned lookup evaluated once for both join sides
+    *     ([[verifyJoin]]);
+    *   - the pair ids (semi join) and the pair set (verify joins)
     *     broadcast only when their measured size fits the session
-    *     threshold, so every source touch stays map-side when it can.
+    *     threshold, the lookup only when the planner's estimate does.
     *     The caps bound the pair set to O(caps × touched buckets), but
     *     that product is config-dependent — a guard on the measured
     *     count beats trusting the bound.
+    *
+    * The pins stay until the result's last reader is gone; callers that
+    * know when that is use [[verifyJoin]] and release them.
     */
   private[graft] def joinPayloadsPruned(candidates: DataFrame, source: DataFrame,
                                         payload: Column): DataFrame = {
-    val pairs = candidates.localCheckpoint()
-    val nPairs = pairs.count()
+    val (pairs, nPairs) = pinCounted(candidates)
+    verifyJoin(pairs.df, nPairs, source, payload)._1
+  }
+
+  /** The verify join of [[joinPayloadsPruned]] over an already pinned
+    * `pairs` set of `nPairs` rows. The pruned lookup is evaluated once:
+    * it is pinned (returned for the caller to release) and both join
+    * sides read the pin. When the planner's estimate of the lookup fits
+    * the broadcast threshold — the estimate by which it broadcast the
+    * lookup for one join side before, an upper bound on its rows, since
+    * a semi join keeps at most its left side — one broadcast of the pin
+    * serves both sides and the pairs stream past it; else the pair set
+    * is broadcast if it fits.
+    */
+  private[ops] def verifyJoin(pairs: DataFrame, nPairs: Long, source: DataFrame,
+                              payload: Column): (DataFrame, Pinned) = {
     val pairIds = broadcastIfFits(
-      pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")).distinct(),
+      pairs.select(explode(array(col("id_a"), col("id_b"))).as("id")),
       2L * nPairs, 24L)
-    val lookup = source.join(pairIds, Seq("id"), "left_semi")
-      .select(col("id"), payload)
-    // 48 bytes: two longs + unsafe-row overhead, rounded up
-    joinPayloads(broadcastIfFits(pairs, nPairs, 48L), lookup)
+    val lookup = source.join(pairIds, Seq("id"), "left_semi").select(col("id"), payload)
+    val bcLimit = broadcastLimit(pairs)
+    val lookupFits = bcLimit > 0 && lookup.queryExecution.optimizedPlan.stats.sizeInBytes <= bcLimit
+    val pinned = Pinned(lookup)
+    val joined =
+      if (lookupFits) joinPayloads(pairs, pinned.df, broadcast)
+      // 48 bytes: two longs + unsafe-row overhead, rounded up
+      else joinPayloads(broadcastIfFits(pairs, nPairs, 48L), pinned.df)
+    (joined, pinned)
   }
 }

@@ -1,11 +1,14 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetToSparkSchemaConverter
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
-import scala.jdk.CollectionConverters._
+import graft.util.Pinned
 
 /** Per-round slot commit protocol shared by the incremental index
   * maintainers ([[IncrementalLsh]], [[IncrementalAnn]]).
@@ -168,9 +171,10 @@ private[graft] object RoundSlots {
     * empty round is valid state.
     *
     * The schema is also the table's format version: a slot whose files
-    * lack one of its columns was written by an older format (bands from
-    * before the signature `tag`), and reading it would serve nulls —
-    * it fails here, naming the slot, instead of deep inside a task.
+    * lack one of its columns (bands from before the signature `tag`) or
+    * hold one with another type (an `id` written as INT) was written by
+    * an older format, and reading it would serve nulls or fail deep
+    * inside a task — it fails here instead, naming the slot.
     */
   def readSlots(spark: SparkSession, dir: String, rounds: Seq[Int],
                 schema: StructType): DataFrame =
@@ -178,15 +182,16 @@ private[graft] object RoundSlots {
       spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else {
       val conf = spark.sessionState.newHadoopConf()
-      rounds.foreach(k => checkFormat(s"$dir/r$k", schema, conf))
+      rounds.foreach(k => checkFormat(spark, s"$dir/r$k", schema, conf))
       spark.read.schema(schema).parquet(rounds.map(k => s"$dir/r$k"): _*)
     }
 
   /** Fail unless the first part file of `slot` (one write job wrote
-    * them all) carries every column of `schema`. Reads one footer on the
-    * driver; an empty slot has no part file and nothing to check.
+    * them all) carries every column of `schema`, each with its declared
+    * type (nullability aside). Reads one footer on the driver; an empty
+    * slot has no part file and nothing to check.
     */
-  private def checkFormat(slot: String, schema: StructType,
+  private def checkFormat(spark: SparkSession, slot: String, schema: StructType,
                           conf: org.apache.hadoop.conf.Configuration): Unit = {
     val ls = java.nio.file.Files.list(java.nio.file.Paths.get(slot))
     val part = try ls.filter(_.getFileName.toString.endsWith(".parquet"))
@@ -196,14 +201,22 @@ private[graft] object RoundSlots {
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(part.get.toUri), conf))
-      val cols = try reader.getFooter.getFileMetaData.getSchema.getFields
-                       .asScala.map(_.getName).toSet
-                 finally reader.close()
-      val missing = schema.fieldNames.filterNot(cols)
-      if (missing.nonEmpty)
+      val written = try new ParquetToSparkSchemaConverter(spark.sessionState.conf)
+                          .convert(reader.getFooter.getFileMetaData.getSchema)
+                    finally reader.close()
+      val types = written.fields.map(f => f.name -> f.dataType.catalogString).toMap
+      val wrong = schema.fields.flatMap { f =>
+        types.get(f.name) match {
+          case None => Some(s"no ${f.name} column")
+          case Some(t) if t != f.dataType.catalogString =>
+            Some(s"column ${f.name} is $t, not ${f.dataType.catalogString}")
+          case _ => None
+        }
+      }
+      if (wrong.nonEmpty)
         throw new IllegalStateException(
-          s"index slot $slot was written by an older index format (no " +
-            s"${missing.mkString(", ")} column): rebuild the index")
+          s"index slot $slot was written by an older index format " +
+            s"(${wrong.mkString(", ")}): rebuild the index")
     }
   }
 
@@ -239,20 +252,32 @@ private[graft] object RoundSlots {
       * their payloads and kept by `verify`, then the round is appended.
       *
       * `newPayload` carries the payload schema's columns; `banding`
-      * derives the round's postings from it. Both are persisted for the
-      * round: banding has three consumers (pair generation's grouped
-      * side, its touched-bucket semi-join build side and the append),
-      * and postings derived from the persisted slice cannot disagree
-      * with the appended payloads if the source is nondeterministic.
-      * `verify` gets (id_a, id_b, payload_a, payload_b) and must return
-      * the round's output. Candidate and lookup follow
-      * [[LshPairs.joinPayloadsPruned]], so payloads never ride the
-      * banded exchange and untouched index payloads are dropped right
-      * after the scan.
+      * derives the round's postings from it. The slice is persisted for
+      * the round (banding, the payload lookup and the append read it),
+      * so postings derived from it cannot disagree with the appended
+      * payloads if the source is nondeterministic. `verify` gets (id_a,
+      * id_b, payload_a, payload_b) and must return the round's output.
+      * Candidate and lookup follow [[LshPairs.joinPayloadsPruned]], so
+      * payloads never ride the banded exchange and untouched index
+      * payloads are dropped right after the scan.
       *
-      * The result is materialized (it is also the precondition for the
-      * append — pairs must be computed against the PRE-append index);
-      * callers get a small already-computed frame back.
+      * Order of work. The round's bands slot is written FIRST and read
+      * back for pair generation: written postings need no cache, and
+      * the planner sizes the touched-bucket semi join from the slot's
+      * real files. The bands slot alone does not commit the round —
+      * readers take a round only when its payload slot is committed too
+      * — so the payload slot is written LAST, after the result is pinned
+      * (pairs are computed against the PRE-append index: a round that
+      * dies before its payload write is invisible and redone in the same
+      * slot). A steady round runs 10 Spark jobs: the bands write, the
+      * touched-bucket broadcast, the pair pin (the distinct's shuffle and
+      * the pin), the lookup pin (the pair-id broadcast and the pin), the
+      * verify (the lookup broadcast and the result pin), the payload
+      * write and the caller's read of the result.
+      *
+      * The result is materialized and is the only state the round leaves
+      * pinned: the slice cache and the pair and lookup pins are released
+      * when the round returns or throws.
       *
       * `slot`: pin this round's index slot (and the set of rounds read
       * as "old") to an EXTERNAL round number instead of deriving it from
@@ -285,26 +310,33 @@ private[graft] object RoundSlots {
       }
       val Seq(oldBands, oldPayload) =
         tables.map { case (t, schema) => readSlots(spark, s"$gen/$t", prior, schema) }
-      val fresh = newPayload.persist()
-      val newBands = banding(fresh).persist()
-      // payload lookup: old store + this round's slice (ids are globally
-      // unique across rounds — enforced by the caller's round partition)
-      val pairs = verify(LshPairs.joinPayloadsPruned(
-          IncrementalLsh.cappedNewPairs(oldBands, newBands, maxBucket, acc,
-                                        matchTag),
-          oldPayload.unionByName(fresh), col(payloadSchema.fieldNames(1))))
-        .localCheckpoint() // force BEFORE the append mutates the index
       // this round's slot: the pinned round, else one past the last
       // COMPLETE round — a dangling slot from a died append is
       // overwritten, never appended beside
       val k = slot.getOrElse(prior.size)
-      newBands.write.mode("overwrite").parquet(s"$gen/bands/r$k")
-      fresh.write.mode("overwrite").parquet(s"$gen/$payload/r$k")
-      newBands.unpersist()
-      fresh.unpersist()
-      // LSM fold on the caller's cadence: bounded slot count, same data
-      if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark)
-      pairs
+      val fresh = newPayload.persist()
+      val pins = mutable.ArrayBuffer.empty[Pinned]
+      try {
+        banding(fresh).write.mode("overwrite").parquet(s"$gen/bands/r$k")
+        val newBands = readSlots(spark, s"$gen/bands", Seq(k), bandsSchema)
+        val (pairs, nPairs) = LshPairs.pinCounted(
+          IncrementalLsh.cappedNewPairs(oldBands, newBands, maxBucket, acc, matchTag))
+        pins += pairs
+        // payload lookup: old store + this round's slice (ids are globally
+        // unique across rounds — enforced by the caller's round partition)
+        val (joined, lookup) = LshPairs.verifyJoin(
+          pairs.df, nPairs, oldPayload.unionByName(fresh),
+          col(payloadSchema.fieldNames(1)))
+        pins += lookup
+        val result = verify(joined).localCheckpoint() // BEFORE the commit
+        fresh.write.mode("overwrite").parquet(s"$gen/$payload/r$k")
+        // LSM fold on the caller's cadence: bounded slot count, same data
+        if (compactEvery > 0 && k + 1 >= compactEvery) compact(spark)
+        result
+      } finally {
+        pins.foreach(_.release())
+        fresh.unpersist()
+      }
     }
 
     /** Fold all complete rounds into a fresh single-slot generation

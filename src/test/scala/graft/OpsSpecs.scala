@@ -670,6 +670,82 @@ class QueriesSmokeSpec extends SparkSuite {
 /** Incremental LSH maintenance ([[graft.ops.IncrementalLsh]]): rounds
   * of new docs against a persisted band/shingle index.
   */
+/** Spark jobs and generated-class compiles of a steady LSH+ANN ingest
+  * pair, as the benchmark's ingest runs one. The inputs are fixed local
+  * slices, pinned before any round, so no per-round literal enters a
+  * round's plan. Two indexes of each kind take rounds 0 and 1; the first
+  * pair's round 2 warms the codegen cache, and the second pair's round 2
+  * is counted, each round on its own.
+  */
+object SteadyIngestPair {
+  import org.apache.spark.sql.{DataFrame, SparkSession}
+  import graft.ops.{IncrementalAnn, IncrementalLsh}
+
+  final case class Counted(jobs: Int, compiles: Long)
+
+  /** (counted LSH round, counted ANN round). The inputs are synthetic:
+    * ids 0..181, where ids i and i + 91 share a text and a vector, so
+    * every round has duplicates of rows the index already holds.
+    */
+  def run(spark: SparkSession, tmpDir: String => String): (Counted, Counted) = {
+    val ids = spark.range(0, 182)
+    def hashed(i: Int) = pmod(xxhash64(col("id") % 91, lit(i)), lit(2001L))
+    val texts = ids.select(col("id"), concat_ws(" ", (0 until 30).map(i =>
+      concat(lit("w"), hashed(i).cast("string"))): _*).as("text"))
+    val vecs = ids.select(col("id"), array((0 until 16).map(i =>
+      ((hashed(i) - 1000) / 1000.0).cast("float")): _*).as("vec"))
+    def slices(df: DataFrame) =
+      (0 to 2).map(r => df.filter(pmod(col("id"), lit(3)) === r).localCheckpoint())
+    val (d, v) = (slices(texts), slices(vecs))
+    def lsh(dir: String, r: Int) =
+      IncrementalLsh.roundPairs(spark, dir, d(r), "id", "text", threshold = 1.0).collect()
+    def ann(dir: String, r: Int) =
+      IncrementalAnn.roundPairs(spark, dir, v(r), "id", "vec", threshold = 0.9).collect()
+    val Seq(warm, counted) = Seq.fill(2)((tmpDir("steady-lsh-"), tmpDir("steady-ann-")))
+    Seq(warm, counted).foreach { case (l, a) => (0 to 1).foreach { r => lsh(l, r); ann(a, r) } }
+    assert(lsh(warm._1, 2).nonEmpty && ann(warm._2, 2).nonEmpty,
+           "a steady round found no duplicates")
+    (count(spark)(lsh(counted._1, 2)), count(spark)(ann(counted._2, 2)))
+  }
+
+  /** Jobs `f` submits and classes it compiles. Its jobs carry a job group
+    * of their own; a marker job submitted after them, in another group,
+    * shows when the listener bus has delivered every one of them.
+    */
+  def count(spark: SparkSession)(f: => Any): Counted = {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val marker = s"$group-end"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))) match {
+          case Some(`group`) => jobs.incrementAndGet()
+          case Some(`marker`) => delivered.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted call")
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      f
+      val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      sc.setJobGroup(marker, "end of the counted call")
+      sc.parallelize(Seq(1), 1).count()
+      assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+             "the listener bus never delivered the marker job")
+      Counted(jobs.get, compiles)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+}
+
 class IncrementalLshSpec extends SparkSuite {
   import spark.implicits._
   import graft.ops.IncrementalLsh
@@ -741,6 +817,72 @@ class IncrementalLshSpec extends SparkSuite {
     val folded = run(idx, 2)
     assert(folded == run(tmpDir("inclsh-plain-empty-"), 0) && folded.nonEmpty)
     assert(RoundSlots.activeGen(idx) >= 1, "expected at least one fold")
+  }
+
+  test("a steady ingest round runs at most 12 jobs and a repeated steady round compiles no generated classes") {
+    // a steady round's generated classes, with the ANN round's beside
+    // them, must fit Spark's default codegen cache (100 entries in 4 LRU
+    // segments); a working set over it recompiles every round
+    val (lsh, _) = SteadyIngestPair.run(spark, tmpDir)
+    assert(lsh.jobs <= 12, s"steady LSH round ran ${lsh.jobs} jobs")
+    assert(lsh.compiles == 0, s"repeated steady LSH round compiled ${lsh.compiles} classes")
+  }
+
+  test("a round leaves only its result in the block manager, also when it throws") {
+    import graft.ops.RoundSlots
+    import org.apache.spark.sql.execution.LogicalRDD
+    val sc = spark.sparkContext
+    val idx = tmpDir("inclsh-release-")
+    IncrementalLsh.roundPairs(spark, idx, corpus.filter(pmod(col("id"), lit(3)) === 0),
+                              "id", "text", threshold = 0.5).count()
+    val before = sc.getPersistentRDDs.keySet
+    val out = IncrementalLsh.roundPairs(
+      spark, idx, corpus.filter(pmod(col("id"), lit(3)) === 1), "id", "text",
+      threshold = 0.5)
+    val result = out.queryExecution.analyzed match { case r: LogicalRDD => r.rdd.id }
+    assert(sc.getPersistentRDDs.keySet -- before == Set(result),
+           s"the round left ${sc.getPersistentRDDs.keySet -- before -- Set(result)} " +
+             s"besides its result $result")
+    assert(out.count() > 0, "fixture lost its near-dups")
+    // a round whose verify throws, after its slice is cached and its pair
+    // set and payload lookup are pinned, leaves nothing behind
+    val held = sc.getPersistentRDDs.keySet
+    val err = intercept[IllegalStateException] {
+      IncrementalLsh.index(idx).round(
+          corpus.filter(pmod(col("id"), lit(3)) === 2)
+            .select(col("id").cast("long"), Dedup.shingles(col("text"), 3).as("sh"))
+            .filter(size(col("sh")) > 0),
+          IncrementalLsh.bandsFromShingled(_, 32, 4), maxBucket = 1024, acc = None,
+          matchTag = false, slot = None, compactEvery = 0)(
+        _ => throw new IllegalStateException("verify failed"))
+    }
+    assert(err.getMessage == "verify failed")
+    assert(sc.getPersistentRDDs.keySet == held,
+           s"the failed round left ${sc.getPersistentRDDs.keySet -- held}")
+    assert(RoundSlots.completeRounds(
+      Seq("bands", "shingles").map(t => s"${RoundSlots.genDir(idx, 0)}/$t")) == Seq(0, 1),
+      "the failed round committed its slot")
+  }
+
+  test("a slot whose id was written as INT fails with a rebuild message") {
+    import graft.ops.RoundSlots
+    // the postings as this format writes them, but with an INT id: the
+    // slot's schema names every declared column, and one has another type
+    val idx = tmpDir("inclsh-int-id-")
+    val live = RoundSlots.genDir(idx, RoundSlots.activeGen(idx))
+    val round0 = corpus.filter(pmod(col("id"), lit(3)) === 0)
+    IncrementalLsh.bands(round0, "id", "text").withColumn("id", col("id").cast("int"))
+      .write.parquet(s"$live/bands/r0")
+    round0.select(col("id").cast("long"), Dedup.shingles(col("text"), 3).as("sh"))
+      .filter(size(col("sh")) > 0)
+      .write.parquet(s"$live/shingles/r0")
+    val err = intercept[IllegalStateException] {
+      IncrementalLsh.roundPairs(
+        spark, idx, corpus.filter(pmod(col("id"), lit(3)) === 1),
+        "id", "text", threshold = 1.0).count()
+    }
+    assert(err.getMessage.contains("rebuild the index"), err.getMessage)
+    assert(err.getMessage.contains("column id is int"), err.getMessage)
   }
 
   test("a bands slot from before the signature tag fails with a rebuild message") {
@@ -1031,6 +1173,13 @@ class IncrementalAnnSpec extends SparkSuite {
     assert(extra.count() == 0)
   }
 
+  test("a steady ingest round runs at most 12 jobs and a repeated steady round compiles no generated classes") {
+    // the ANN half of the steady pair (see IncrementalLshSpec)
+    val (_, ann) = SteadyIngestPair.run(spark, tmpDir)
+    assert(ann.jobs <= 12, s"steady ANN round ran ${ann.jobs} jobs")
+    assert(ann.compiles == 0, s"repeated steady ANN round compiled ${ann.compiles} classes")
+  }
+
   test("ANN index compaction: output unchanged, old generations GC'd, slots bounded") {
     import graft.ops.RoundSlots
     // 4 rounds with a fold every 2: same pairs in the same rounds as the
@@ -1104,7 +1253,8 @@ class IncrementalAnnSpec extends SparkSuite {
       assert(big.count() == n) // completes, correct cardinality
       assert(countIn(big, "BroadcastHashJoin") == 0,
              "guard must not broadcast an over-limit pair set")
-      // and with a generous limit the pair side IS broadcast
+      // and with a generous limit both verify joins ARE broadcast (one
+      // broadcast of the pinned lookup, the pair set streaming past it)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", (10 << 20).toString)
       val small = LshPairs.joinPayloadsPruned(pairs, lookup, col("vec"))
       assert(countIn(small, "BroadcastHashJoin") >= 2,
@@ -1395,6 +1545,19 @@ class ConnectedComponentsSpec extends SparkSuite {
         (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
       check(edges)
     }
+  }
+
+  test("each round frees the previous round's edges; rounds and components unchanged") {
+    // a checkpoint's blocks belong to its RDD: the call may leave only the
+    // last round's edges, which its result reads
+    val sc = spark.sparkContext
+    val edges = (0L until 255L).map(i => (i, i + 1)) ++ (1000L until 1040L).map(i => (1000L, i))
+    val before = sc.getPersistentRDDs.keySet
+    val (cc, rounds) = ConnectedComponents.componentsWithRounds(edges.toDF("id_a", "id_b"))
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 1, s"$rounds rounds left ${held.size} checkpoints")
+    assert(rounds == 9, s"rounds: $rounds")
+    assert(cc.as[(Long, Long)].collect().toMap == ufComponents(edges))
   }
 
   test("clusters: size and canonical keep flag") {
