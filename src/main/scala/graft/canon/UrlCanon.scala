@@ -123,7 +123,7 @@ object UrlCanon {
   }
 
   /** Two independent 64-bit hashes of a 64-char sha-256 hex string, used
-    * by the bloom/cuckoo tiers (double hashing g_i = h1 + i*h2).
+    * by the bloom tier (double hashing g_i = h1 + i*h2).
     */
   def hexHashPair(hex: String): (Long, Long) =
     (java.lang.Long.parseUnsignedLong(hex.substring(0, 16), 16),

@@ -13,7 +13,7 @@ import graft.fetch.{Fetcher, FetcherFactory, SimulatedFetcherFactory}
 import graft.model._
 import graft.parse.HtmlSpans
 import graft.polite.Robots
-import graft.seen.{BloomFilter, CuckooFilter, SeenIndex}
+import graft.seen.{BloomFilter, SeenIndex}
 import graft.store.{FrontierStore, Snapshots}
 import graft.synthweb.{SyntheticWeb, WebConfig}
 
@@ -77,7 +77,7 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *   raw HTML never persists) ─▶ fetch_log / docs / robots / links
   * links ─▶ canonicalize ─▶ reduce by url_hash (+ robots.txt of new
   *       hosts) ─▶ bloom-shard tier
-  *       ─▶ one bucket-keyed pass: cuckoo-shard tier ─▶ exact
+  *       ─▶ one bucket-keyed pass over the bloom positives: exact
   *          per-bucket seen-index LSM segments (SeenIndex — the
   *          10^10-row seen table never shuffles)
   * host_state: one host-keyed cogroup (state, selected count, new hosts)
@@ -101,10 +101,10 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     group buffer; phase B sees ≤ salts×budget rows per host.
   *   - the seen set is never collected: per-bucket bloom shards (checked
   *     map-side, no shuffle, loaded lazily per executor from the
-  *     snapshot store via [[FilterShardCache]]) and sharded cuckoo
-  *     filters discard definite-new candidates cheaply; only
-  *     possible-positives reach the exact per-bucket seen index, loaded
-  *     the same way — the seen TABLE itself is storage-only state (it
+  *     snapshot store via [[FilterShardCache]]) pass definite-new
+  *     candidates cheaply; only possible-positives reach the exact
+  *     per-bucket seen index, loaded from the same store by one task
+  *     per bucket — the seen TABLE itself is storage-only state (it
   *     feeds compaction, rebuilds and audits) and never crosses a
   *     shuffle during a round. Shards are keyed
   *     by host_hash bucket — at 10^10 URLs no filter bytes ever move
@@ -597,19 +597,16 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         math.min(s.capacity, s.tokens + s.refill_per_round) - selCount.sum.toDouble))
     } ++ newHosts.map(h => HostState(h, UrlCanon.hostHash(h), 0.0, capD, refD))
 
-    // three-tier seen check over the content candidates AND the
+    // two-tier seen check over the content candidates AND the
     // robots.txt entries of newly-discovered hosts. tier 1: bloom shard
     // of the candidate's bucket, checked MAP-SIDE (no shuffle): a miss
     // is definitely new; a missing shard => maybe (exact tier resolves).
     // Shards load lazily per executor (FilterShardCache) from the
-    // snapshot store — only buckets this task actually touches. tiers
-    // 2+3 in ONE bucket-keyed pass: possible-positives shuffle once;
-    // the group task loads its bucket's cuckoo shard (probabilistic
-    // reject) and — only if a candidate survives it — the bucket's
-    // EXACT seen-index LSM segments, probed newest-first. The persisted
-    // 10^10-row seen table never moves through a shuffle.
-    val shardBits = cfg.bloomShardBits
-    val bloomK = cfg.bloomHashes
+    // snapshot store — only buckets this task actually touches. tier 2
+    // in ONE bucket-keyed pass: possible-positives shuffle once and the
+    // group task loads its bucket's EXACT seen-index LSM segments,
+    // probed newest-first. The persisted 10^10-row seen table never
+    // moves through a shuffle.
     val tiered = keep((candRanked ++ robotsCand).mapPartitions { it =>
       // task-local memo: one validated cache lookup per bucket per task
       val local = mutable.Map.empty[Int, Option[BloomFilter]]
@@ -622,21 +619,14 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     })
     val exactNew = byBucket(tiered.filter(_._2).map(_._1))(c => bucketOf(c.host_hash, nb))
       .flatMap { case (b, cs) =>
-        // cuckoo read stays lenient: an unreadable shard only demotes
-        // to the exact tier (correct, slower) — never drops dedup
-        val cf = filterRounds.get(b)
-          .flatMap(fr => Snapshots.readBytesAt(Snapshots.filterPathAt(root, fr, b)))
-          .map(CuckooFilter.deserialize)
         // manifest-absent bucket = never had a seen entry (empty IS
         // exact); manifest-present-but-unreadable segment = FAIL the
         // round (requiredBytesAt) — defaulting to empty would
         // reclassify seen URLs as new, permanent dedup loss
-        lazy val segs = seenIdxSegs.getOrElse(b, Nil).reverse
+        val segs = seenIdxSegs.getOrElse(b, Nil).reverse
           .map(ir => SeenIndex.deserialize(
             Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b))))
-        cs.filter(c =>
-          !cf.forall(_.mightContain(c.url_hash)) ||
-            !segs.exists(_.contains(c.url_hash)))
+        cs.filter(c => !segs.exists(_.contains(c.url_hash)))
       }
     val candAll = tiered.filter(!_._2).map(_._1) ++ exactNew
 
@@ -796,16 +786,17 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         .write.mode("overwrite").parquet(snaps.tablePath(r, "host_state"))
     }
 
-    // filter shards: ONE distributed pass updates cuckoo + bloom shards,
-    // each group task writing ITS OWN bucket's files to the snapshot
-    // store (shared storage on a real cluster; atomic per-file rename
-    // makes task retries safe). Only (bucket, ok) booleans reach the
-    // driver. Overflowed cuckoos are rebuilt from the exact seen table
-    // (rare); a bucket whose rebuild also overflows is omitted from the
-    // manifest so readers fall back to the conservative maybe-seen path.
+    // filter shards: ONE distributed pass puts each touched bucket's
+    // delta into its bloom shard and appends its exact seen-index
+    // segment, each group task writing ITS OWN bucket's files to the
+    // snapshot store (shared storage on a real cluster; atomic per-file
+    // rename makes task retries safe). Only (bucket, segments) pairs
+    // reach the driver.
     val filtersF = Future {
       sc.setJobDescription(s"crawl r$r: filter shards")
       val idxMergeEvery = cfg.compactEvery
+      val shardBits = cfg.bloomShardBits
+      val bloomK = cfg.bloomHashes
       val updates = collectInSqlJob(byBucket(seenDelta)(s => bucketOf(s.host_hash, nb))
         .map { case (b, deltaRows) =>
           val segRounds = seenIdxSegs.getOrElse(b, Nil)
@@ -815,42 +806,31 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           def segsOf: Seq[SeenIndex] = segRounds.map(ir =>
             SeenIndex.deserialize(
               Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b))))
-          var ok = true
-          val (cf, bf) = filterRounds.get(b) match {
+          val bf = filterRounds.get(b) match {
             case Some(fr) =>
-              (CuckooFilter.deserialize(
-                 Snapshots.requiredBytesAt(Snapshots.filterPathAt(root, fr, b))),
-               BloomFilter.deserialize(
-                 Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b))))
+              BloomFilter.deserialize(
+                Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b)))
             case None =>
               // a bucket WITH history (index segments exist) but WITHOUT
-              // filter shards (dropped after a cuckoo overflow) must NOT
-              // be recreated from empty filters — a bloom missing old
-              // hashes would later classify seen URLs as definitely-new.
-              // Reseed both filters from the exact index instead.
-              val prior = SeenIndex.merged(segsOf)
-              val cf0 = CuckooFilter.sized(math.max(4096L, prior.size.toLong * 2))
+              // a bloom shard (a checkpoint whose older engine dropped
+              // the bucket on filter overflow) must NOT be recreated
+              // from an empty filter — a bloom missing old hashes would
+              // later classify seen URLs as definitely-new. Reseed it
+              // from the exact index instead.
               val bf0 = new BloomFilter(shardBits, bloomK)
-              prior.hexIterator.foreach { h =>
-                ok &= cf0.put(h)
-                bf0.put(h)
-              }
-              (cf0, bf0)
+              SeenIndex.merged(segsOf).hexIterator.foreach(bf0.put)
+              bf0
           }
           val deltaHashes = mutable.ArrayBuffer.empty[String]
           deltaRows.foreach { s =>
-            ok &= cf.put(s.url_hash)
             bf.put(s.url_hash)
             deltaHashes += s.url_hash
           }
           Snapshots.writeBytesAt(Snapshots.bloomShardPathAt(root, r, b), bf.serialize())
-          if (ok)
-            Snapshots.writeBytesAt(Snapshots.filterPathAt(root, r, b), cf.serialize())
-          // the exact per-bucket index updates UNCONDITIONALLY (tier 3
-          // correctness does not ride on cuckoo occupancy). LSM: the
-          // common round writes a DELTA-ONLY segment — O(|delta|) bytes,
-          // not O(|seen|); segments fold into one on the compactEvery
-          // cadence (the only round that rewrites the bucket's index).
+          // LSM: the common round writes a DELTA-ONLY segment —
+          // O(|delta|) bytes, not O(|seen|); segments fold into one on
+          // the compactEvery cadence (the only round that rewrites the
+          // bucket's index).
           val newSegs =
             if (segRounds.size + 1 >= idxMergeEvery) {
               val merged = SeenIndex.merged(segsOf :+ SeenIndex.fromHex(deltaHashes))
@@ -862,33 +842,11 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
                                      SeenIndex.fromHex(deltaHashes).serialize())
               segRounds :+ r
             }
-          (b, ok, newSegs)
+          (b, newSegs)
         })
-      val failedBuckets = updates.filter(!_._2).map(_._1).toSet
-      val rebuiltOk: Map[Int, Boolean] =
-        if (failedBuckets.isEmpty) Map.empty
-        else collectInSqlJob(byBucket(readTMulti[SeenEntry](snaps.seenPaths(m)).rdd
-            .union(seenDelta)
-            .filter(s => failedBuckets.contains(bucketOf(s.host_hash, nb))))(
-            s => bucketOf(s.host_hash, nb))
-          .map { case (b, rows) =>
-            val hashes = rows.iterator.map(_.url_hash).toArray.distinct
-            val cf = CuckooFilter.sized(hashes.length.toLong * 2)
-            var ok = true
-            hashes.foreach(h => ok &= cf.put(h))
-            if (ok)
-              Snapshots.writeBytesAt(Snapshots.filterPathAt(root, r, b), cf.serialize())
-            (b, ok)
-          }).toMap
-      val touchedOk = updates
-        .map(u => u._1 -> (u._2 || rebuiltOk.getOrElse(u._1, false))).toMap
       // untouched buckets keep referencing their last-written round's
-      // files (no copy-forward); touched-and-ok move to round r; failed
-      // buckets drop out (conservative: bloom maybe, cuckoo maybe)
-      val newFilterRounds = (filterRounds -- touchedOk.keys) ++
-        touchedOk.collect { case (b, true) => b -> r }
-      val newSeenIndexSegs = seenIdxSegs ++ updates.map(u => u._1 -> u._3)
-      (newFilterRounds, newSeenIndexSegs)
+      // files (no copy-forward); every touched bucket moves to round r
+      (filterRounds ++ updates.map(u => u._1 -> r), seenIdxSegs ++ updates)
     }
 
     Await.result(docsF, Duration.Inf)
@@ -1004,22 +962,19 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       try in.readObject().asInstanceOf[T] finally in.close()
     }
 
-  /** Administrative revocation — the scenario cuckoo deletability exists
-    * for (CuckooFilter.scala:18-19): a host relaxes its robots rules or
+  /** Administrative revocation: a host relaxes its robots rules or
     * content is invalidated, and previously-seen URLs must become
     * re-crawlable. Removes `urls` from the exact seen table AND from
-    * their buckets' cuckoo shards, so a re-discovered link short-circuits
-    * tier 2 as definitely-new (the bloom tier cannot delete; its stale
-    * positives just route through the cuckoo check). Optionally reseeds
-    * crawl entry points (e.g. the listing pages that link the revoked
-    * URLs). Commits a new snapshot round; `run()` resumes from it.
+    * their buckets' exact seen indexes. The bloom shards cannot delete
+    * and are left as they are: a re-discovered link's stale bloom
+    * positive routes it to the exact index, which no longer holds it,
+    * so it counts as new. Optionally reseeds crawl entry points (e.g.
+    * the listing pages that link the revoked URLs). Commits a new
+    * snapshot round; `run()` resumes from it.
     *
     * Driver-side O(|urls|) by design: revocations are administrative-
     * scale (a robots change affects one host), unlike per-round shard
-    * maintenance, which stays executor-side. Known trade: deleting a
-    * fingerprint another URL collides with (same 16-bit fp + bucket)
-    * can cause one spurious re-fetch of that URL — a liveness cost;
-    * the exact seen table stays authoritative for dedup exactness.
+    * maintenance, which stays executor-side.
     */
   def revoke(urls: Seq[String], reseed: Seq[String] = Nil): Int = {
     import spark.implicits._
@@ -1046,31 +1001,11 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       .map(_._2)
       .write.mode("overwrite").parquet(snaps.tablePath(r, "seen_full"))
 
-    // 2. cuckoo shards of affected buckets: delete fingerprints, write at
-    // r; the bucket's bloom shard rides forward so the manifest's single
-    // (bucket -> round) reference stays consistent for both tiers.
-    // Fail-closed reads: these files are manifest-referenced, and
-    // advancing the bucket's round pointer without having written the
-    // files would manufacture a dangling reference that fails every
-    // subsequent round at the wrong spot.
-    val byBucket = revoked.groupBy(t => bucketOf(t._2, nb))
-    val updatedBuckets = byBucket.flatMap {
-      case (b, hs) =>
-        m.filterRounds.get(b).map { fr =>
-          val cf = CuckooFilter.deserialize(
-            Snapshots.requiredBytesAt(Snapshots.filterPathAt(root, fr, b)))
-          hs.foreach { case (h, _) => cf.remove(h) }
-          Snapshots.writeBytesAt(Snapshots.filterPathAt(root, r, b), cf.serialize())
-          Snapshots.writeBytesAt(
-            Snapshots.bloomShardPathAt(root, r, b),
-            Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b)))
-          b -> r
-        }
-    }
-    // 2b. the exact per-bucket seen indexes drop the revoked hashes too
-    // (tier 3 must agree with the rewritten seen table): LSM segments
-    // merge-minus-revoked into a single segment at r
-    val updatedIdxBuckets = byBucket.flatMap {
+    // 2. the exact per-bucket seen indexes drop the revoked hashes too
+    // (the exact tier must agree with the rewritten seen table): LSM
+    // segments merge-minus-revoked into a single segment at r. Bloom
+    // shards and filterRounds stay as they were.
+    val updatedIdxBuckets = revoked.groupBy(t => bucketOf(t._2, nb)).flatMap {
       case (b, hs) =>
         val segRounds = m.seenIndexSegs.getOrElse(b, Nil)
         if (segRounds.isEmpty) None
@@ -1153,7 +1088,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         "host_state" -> snaps.tablePath(r, "host_state"),
         "robots" -> m.tables("robots")),
       seenDeltaRounds = Nil, seenRunRounds = Nil, seenFullRound = r,
-      filterRounds = m.filterRounds ++ updatedBuckets,
+      filterRounds = m.filterRounds,
       seenIndexSegs = m.seenIndexSegs ++ updatedIdxBuckets,
       frontierSegs = frontierSegs,
       frontierCounts = frontierCounts, frontierPri0 = frontierPri0,

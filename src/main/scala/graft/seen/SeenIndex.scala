@@ -1,18 +1,18 @@
 package graft.seen
 
-/** Exact per-bucket seen index — the tier-3 companion of the bloom and
-  * cuckoo shards.
+/** Exact per-bucket seen index — the exact tier behind the bloom
+  * shards, and the only authority on a bloom positive.
   *
   * Why it exists: the exact reconciliation used to be a `left_anti`
   * join against the full persisted seen table, which shuffles the
   * 10^10-row table every round even though only the trickle of
-  * cuckoo-positives needs checking. With the seen set sharded by
+  * bloom-positives needs checking. With the seen set sharded by
   * host-hash bucket into compact binary indexes (maintained in the SAME
-  * executor-side pass as the filter shards), tier 3 becomes a per-bucket
-  * file load + binary search: each task reads only the buckets its
-  * candidates touch, and the seen table never moves through a shuffle.
-  * At 10^10 URLs / 2^16 buckets a bucket index is ~150k hashes ≈ 4.7 MB
-  * — the same order as its cuckoo shard.
+  * executor-side pass as the bloom shards), the exact tier becomes a
+  * per-bucket file load + binary search: each task reads only the
+  * buckets its candidates touch, and the seen table never moves through
+  * a shuffle. At 10^10 URLs / 2^16 buckets a bucket index is ~150k
+  * hashes ≈ 4.7 MB.
   *
   * Exactness by construction: every seen entry passes through shard
   * maintenance (grouped by bucket), which appends its hash to the
@@ -57,8 +57,9 @@ final class SeenIndex private (private val flat: Array[Byte]) {
   def contains(urlHashHex: String): Boolean =
     containsBytes(SeenIndex.hexToBytes(urlHashHex))
 
-  /** All member hashes as lowercase hex — lets filter shards be rebuilt
-    * from the exact index (e.g. after a cuckoo overflow dropped them).
+  /** All member hashes as lowercase hex — lets a bucket's bloom shard
+    * be reseeded from the exact index (a checkpoint bucket with index
+    * segments but no bloom shard).
     */
   def hexIterator: Iterator[String] = (0 until size).iterator.map { i =>
     val sb = new StringBuilder(2 * SeenIndex.W)

@@ -15,10 +15,11 @@ import org.json4s.jackson.JsonMethods
   *
   * Layout:
   * {{{
-  *   <root>/r00003/{frontier,seen_delta,seen_full,docs,metrics,host_state,
+  *   <root>/r00003/{seen_delta,seen_full,docs,metrics,host_state,
   *                  robots,fetch_log}/  (parquet data files)
-  *   <root>/r00003/filters/bucket-0007.bin       (cuckoo shard per host bucket)
   *   <root>/r00003/filters/bloom-0007.bin        (bloom shard per host bucket)
+  *   <root>/r00003/filters/seen-0007.bin         (exact seen-index segment)
+  *   <root>/r00003/frontier/fb-0007.bin          (frontier LSM segment)
   *   <root>/manifests/m-00003.json               (atomic rename from .tmp)
   *   <root>/LATEST                               (atomic rename from .tmp)
   * }}}
@@ -32,8 +33,6 @@ import org.json4s.jackson.JsonMethods
 final class Snapshots(val root: String) {
   private def dir(round: Int) = f"$root/r$round%05d"
   def tablePath(round: Int, name: String): String = s"${dir(round)}/$name"
-  def filterPath(round: Int, bucket: Int): String =
-    Snapshots.filterPathAt(root, round, bucket)
   def bloomShardPath(round: Int, bucket: Int): String =
     Snapshots.bloomShardPathAt(root, round, bucket)
   private def manifestPath(round: Int) = f"$root/manifests/m-$round%05d.json"
@@ -54,16 +53,17 @@ final class Snapshots(val root: String) {
       // cost is O(window delta), not O(|seen|)
       "seenRunRounds" -> JArray(m.seenRunRounds.map(r => JInt(r)).toList),
       "seenFullRound" -> JInt(m.seenFullRound),
-      // bucket -> round whose shard files are current (untouched shards
+      // bucket -> round whose bloom shard is current (untouched shards
       // reference their last-written round's files; nothing is copied
-      // forward, so a round's commit cost is O(touched buckets))
+      // forward, so a round's commit cost is O(touched buckets)). A
+      // bucket with index segments but no entry here (a checkpoint an
+      // older engine wrote after a filter overflow) gets its shard
+      // reseeded from the exact index the next round it is touched
       "filterRounds" -> JObject(m.filterRounds.toList.sortBy(_._1)
         .map { case (b, fr) => b.toString -> JInt(fr) }),
-      // bucket -> LSM segment rounds of its exact seen index (tier 3),
-      // oldest -> newest; per-round maintenance appends a delta-only
-      // segment and merges on the compactEvery cadence. Maintained
-      // unconditionally, unlike filterRounds which drops a bucket on
-      // cuckoo overflow
+      // bucket -> LSM segment rounds of its exact seen index, oldest ->
+      // newest; per-round maintenance appends a delta-only segment and
+      // merges on the compactEvery cadence
       "seenIndexSegs" -> JObject(m.seenIndexSegs.toList.sortBy(_._1)
         .map { case (b, segs) => b.toString -> JArray(segs.map(JInt(_)).toList) }),
       // frontier bucket -> LSM segment rounds of its binary files,
@@ -143,15 +143,6 @@ final class Snapshots(val root: String) {
       m.seenDeltaRounds.map(r => tablePath(r, "seen_delta"))
   }
 
-  def writeFilter(round: Int, bucket: Int, bytes: Array[Byte]): Unit =
-    Snapshots.writeBytesAt(filterPath(round, bucket), bytes)
-
-  def readFilter(round: Int, bucket: Int): Option[Array[Byte]] =
-    Snapshots.readBytesAt(filterPath(round, bucket))
-
-  def writeBloomShard(round: Int, bucket: Int, bytes: Array[Byte]): Unit =
-    Snapshots.writeBytesAt(bloomShardPath(round, bucket), bytes)
-
   def readBloomShard(round: Int, bucket: Int): Option[Array[Byte]] =
     Snapshots.readBytesAt(bloomShardPath(round, bucket))
 
@@ -180,8 +171,6 @@ object Snapshots {
   /** Manifest layout version; readManifest rejects anything else. */
   val ManifestVersion = 4
 
-  def filterPathAt(root: String, round: Int, bucket: Int): String =
-    f"$root/r$round%05d/filters/bucket-$bucket%04d.bin"
   def bloomShardPathAt(root: String, round: Int, bucket: Int): String =
     f"$root/r$round%05d/filters/bloom-$bucket%04d.bin"
   def seenIndexPathAt(root: String, round: Int, bucket: Int): String =
@@ -223,7 +212,7 @@ object Snapshots {
       seenDeltaRounds: Seq[Int], // rounds whose seen_delta must be unioned
       seenRunRounds: Seq[Int], // level-1 LSM runs (each folds one delta window)
       seenFullRound: Int, // -1 = none; else base compaction round
-      filterRounds: Map[Int, Int], // bucket -> round of its current shards
+      filterRounds: Map[Int, Int], // bucket -> round of its bloom shard
       seenIndexSegs: Map[Int, Seq[Int]], // bucket -> index segment rounds
       frontierSegs: Map[Int, Seq[Int]], // frontier bucket -> segment rounds
       frontierCounts: Map[Int, Long], // frontier bucket -> entry count

@@ -189,7 +189,70 @@ class CrawlSchedulerSpec extends SparkSuite {
     assert(seenOf(sa, lastA) == seenOf(sb, lastB))
   }
 
-  // one revocation scenario, shared by the cuckoo-internals test and the
+  /** Bucket `b`'s exact seen index at manifest `m`: its segments merged. */
+  private def seenIndexOf(cfg: CrawlConfig, m: Snapshots.Manifest,
+                          b: Int): graft.seen.SeenIndex = {
+    import graft.seen.SeenIndex
+    SeenIndex.merged(m.seenIndexSegs.getOrElse(b, Nil).map(ir =>
+      SeenIndex.deserialize(Snapshots.requiredBytesAt(
+        Snapshots.seenIndexPathAt(cfg.outDir, ir, b)))))
+  }
+
+  test("a checkpoint bucket without a bloom shard reseeds it from the exact index on resume") {
+    // the shape an older engine left when a bucket's filter overflowed:
+    // index segments present, the bucket missing from filterRounds. The
+    // resumed crawl must equal an uninterrupted one, and the next round
+    // that touches the bucket must write it a complete bloom shard
+    import graft.seen.BloomFilter
+    val web = WebConfig(seed = 31, nHosts = 3, listPagesPerHost = 3,
+                        detailsPerList = 6)
+    val cfgA = CrawlConfig(web = web, outDir = tmpDir("crawlnoshardA-"),
+                           maxRounds = 40, hostCapacity = 4.0, hostRefill = 4.0)
+    val cfgB = cfgA.copy(outDir = tmpDir("crawlnoshardB-"))
+    val lastA = new CrawlScheduler(spark, cfgA).run()
+    def logOf(s: Snapshots, last: Int) = spark.read
+      .schema(implicitly[org.apache.spark.sql.Encoder[FetchLogEntry]].schema)
+      .parquet(s.fetchLogPaths(last): _*)
+      .as[FetchLogEntry].collect().sortBy(e => (e.round, e.host_hash, e.seq)).toVector
+    def seenOf(s: Snapshots, last: Int) = spark.read
+      .schema(implicitly[org.apache.spark.sql.Encoder[SeenEntry]].schema)
+      .parquet(s.seenPaths(s.readManifest(last)): _*)
+      .as[SeenEntry].collect().map(e => e.url_hash -> e.status).toMap
+    val sa = new Snapshots(cfgA.outDir)
+    val logA = logOf(sa, lastA)
+
+    val schedB = new CrawlScheduler(spark, cfgB)
+    schedB.init()
+    schedB.runRound(1)
+    schedB.runRound(2)
+    val sb = new Snapshots(cfgB.outDir)
+    val m2 = sb.readManifest(2)
+    // a bucket with index segments that a later round touches again
+    val bucketOfRow = (e: FetchLogEntry) =>
+      CrawlScheduler.bucketOf(e.host_hash, cfgB.nBuckets)
+    val bucket = m2.seenIndexSegs.keys.toSeq.sorted
+      .find(b => logA.exists(e => e.round > 2 && bucketOfRow(e) == b))
+      .getOrElse(fail("no bucket with index segments is touched after round 2"))
+    assert(m2.filterRounds.contains(bucket))
+    sb.writeManifest(m2.copy(filterRounds = m2.filterRounds - bucket))
+
+    val lastB = new CrawlScheduler(spark, cfgB).run() // fresh instance = new process
+    assert(lastA == lastB)
+    assert(logOf(sb, lastB) == logA)
+    assert(seenOf(sb, lastB) == seenOf(sa, lastA))
+
+    val mEnd = sb.readManifest(lastB)
+    assert(mEnd.filterRounds.get(bucket).exists(_ > 2),
+           s"bucket $bucket never got its bloom shard back: ${mEnd.filterRounds}")
+    val bf = BloomFilter.deserialize(
+      sb.readBloomShard(mEnd.filterRounds(bucket), bucket).get)
+    val idx = seenIndexOf(cfgB, mEnd, bucket)
+    assert(idx.size > 0)
+    assert(idx.hexIterator.forall(bf.mightContain),
+           "the reseeded bloom shard misses hashes of the exact index")
+  }
+
+  // one revocation scenario, shared by the exact-index test and the
   // oracle-parity test so the two cannot silently diverge: same web
   // shape, same reseeded listing, same revoked detail page
   private val revokeWeb = WebConfig(seed = 23, nHosts = 2,
@@ -200,8 +263,8 @@ class CrawlSchedulerSpec extends SparkSuite {
   private val revokedUrl =
     graft.synthweb.SyntheticWeb.detailUrl(revokeWeb, 0, 0, 1)
 
-  test("revocation: cuckoo deletion lets a re-discovered URL re-fetch") {
-    import graft.seen.{BloomFilter, CuckooFilter}
+  test("revocation: the exact index drops a revoked URL so a re-discovered link re-fetches") {
+    import graft.seen.BloomFilter
     import graft.canon.UrlCanon
     import graft.store.Snapshots
     val web = revokeWeb
@@ -215,17 +278,19 @@ class CrawlSchedulerSpec extends SparkSuite {
     def hashOf(u: String) = UrlCanon.urlHash(UrlCanon.canonicalize(u))
 
     val r = sched.revoke(Seq(revokedUrl), reseed = Seq(listing))
-    // the cuckoo shard no longer matches the revoked URL, while the
-    // bloom shard still (stale-)matches: the re-fetch MUST come through
-    // the tier-2 definitely-new path
+    // the exact index no longer holds the revoked URL, while the bloom
+    // shard still (stale-)matches: the re-fetch MUST come through the
+    // exact tier's not-seen path
     val snaps = new Snapshots(cfg.outDir)
     val m = snaps.readManifest(r)
     val bucket = CrawlScheduler.bucketOf(UrlCanon.hostHash("host-0.test"),
                                          cfg.nBuckets)
+    val idx = seenIndexOf(cfg, m, bucket)
+    assert(!idx.contains(hashOf(revokedUrl)), "exact index should have dropped it")
+    assert(idx.contains(hashOf(siblingUrl)), "sibling must stay")
     val fr = m.filterRounds(bucket)
-    val cf = CuckooFilter.deserialize(snaps.readFilter(fr, bucket).get)
-    assert(!cf.mightContain(hashOf(revokedUrl)), "cuckoo should have deleted")
-    assert(cf.mightContain(hashOf(siblingUrl)), "sibling must stay")
+    assert(fr == snaps.readManifest(r - 1).filterRounds(bucket),
+           "revoke must leave the bucket's bloom shard round as it was")
     val bf = BloomFilter.deserialize(snaps.readBloomShard(fr, bucket).get)
     assert(bf.mightContain(hashOf(revokedUrl)), "bloom cannot delete (stale ok)")
 

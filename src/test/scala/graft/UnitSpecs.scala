@@ -6,7 +6,7 @@ import org.scalacheck.rng.Seed
 import graft.canon.UrlCanon
 import graft.parse.{HtmlSpans, TrimHtml}
 import graft.polite.Robots
-import graft.seen.{BloomFilter, CuckooFilter}
+import graft.seen.BloomFilter
 
 class CanonSpec extends SparkSuite {
   test("canonicalize: case, ports, fragments, query sort, trailing slash") {
@@ -129,21 +129,6 @@ class FiltersSpec extends SparkSuite {
     in.drop(2500).foreach(h2.put)
     val m = new BloomFilter(half1.numBits, half1.numHashes).merge(half1).merge(h2)
     assert(in.forall(m.mightContain))
-  }
-
-  test("cuckoo: insert/contains/delete; serde; no false negatives") {
-    val in = hashes(3000, "cin")
-    val out = hashes(3000, "cout")
-    val cf = CuckooFilter.sized(3000)
-    assert(in.forall(cf.put))
-    assert(in.forall(cf.mightContain), "no false negatives")
-    val fpp = out.count(cf.mightContain).toDouble / out.size
-    assert(fpp < 0.02, s"cuckoo fpp too high: $fpp")
-    val c2 = CuckooFilter.deserialize(cf.serialize())
-    assert(in.forall(c2.mightContain) && c2.itemCount == 3000)
-    in.take(100).foreach(h => assert(c2.remove(h)))
-    assert(in.take(100).count(c2.mightContain) < 10, "deletes take effect")
-    assert(in.drop(100).forall(c2.mightContain), "deletes don't break others")
   }
 }
 
