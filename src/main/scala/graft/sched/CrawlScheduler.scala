@@ -3,8 +3,9 @@ package graft.sched
 import scala.collection.mutable
 import scala.reflect.ClassTag
 
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, Dataset, Encoder, Encoders, Observation, SparkSession}
+import org.apache.spark.sql.{Dataset, Encoder, Encoders, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -44,17 +45,7 @@ final case class CrawlConfig(
     // synthetic web in-process; HttpFetcherFactory swaps in real HTTP
     // against a loopback SynthWebServer gateway — same fetch log
     // bit-for-bit (RealTransportSpec)
-    fetcher: FetcherFactory = SimulatedFetcherFactory,
-    // broadcast the per-HOST dimension tables (robots rules, politeness
-    // budgets) into the frontier-sized gate joins while the manifest's
-    // host count stays below this bound —
-    // host tables are O(hosts), frontier/candidate tables are O(URLs),
-    // and hosts ~ URLs/10^3 on the web, so up to ~10^6 hosts the rule
-    // table is an executor-cache-sized build side and every gate join
-    // stays map-side. Above the bound (or when a resumed manifest
-    // predates the counter) the joins fall back to shuffles — the
-    // results are identical either way, only the exchange count moves.
-    hostBroadcastMax: Long = 1000000L
+    fetcher: FetcherFactory = SimulatedFetcherFactory
 ) {
   /** Per-bucket bloom shard size; constant across rounds so shards stay
     * mergeable/incrementable.
@@ -69,8 +60,10 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   * north rule). One scheduling round:
   *
   * {{{
-  * frontier ──robots gate──▶ eligible ──+budget join──▶
-  *   phase A: per (host_hash, salt): exchange, sort, first `budget` rows
+  * frontier + each host's robots rule and budget, replicated per salt ──▶
+  *   phase A: per (host, salt): exchange, sort (host rows first), one
+  *            pass: robots gate (Robots.allowed; blocked hashes out to
+  *            the frontier update), first `budget` allowed rows
   *   phase B: per host: exchange, sort, first `budget` rows, seq 1..budget
   * ──repartition (round-robin)──▶ fetch+parse (one mapPartitions:
   *   Fetcher, then HtmlSpans/Robots on the body IN the fetch task —
@@ -98,7 +91,12 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     measured ~17× facet skew, olx_c226/main.go:20, is the motivating
   *     case) and streams each group's sorted run, keeping its first
   *     `budget` rows — memory is the sorter's (spillable), never a
-  *     group buffer; phase B sees ≤ salts×budget rows per host.
+  *     group buffer; phase B sees ≤ salts×budget rows per host. The
+  *     host tables (robots rules, budgets) join no frontier table: each
+  *     host's rows ride phase A's own exchange, one copy per salt, and
+  *     sort ahead of that salt's frontier rows — O(hosts × salts) extra
+  *     rows against the O(frontier) rows already shuffled (hosts are
+  *     ~URLs/10^3 on the web), the same plan at any host count.
   *   - the seen set is never collected: per-bucket bloom shards (checked
   *     map-side, no shuffle, loaded lazily per executor from the
   *     snapshot store via [[FilterShardCache]]) pass definite-new
@@ -113,13 +111,17 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     writes each updated bucket's files from the executor that owns
   *     the group. Untouched buckets stay referenced at their
   *     last-written round in the manifest (no copy-forward).
-  *   - driver-side fixed cost per round is capped: all per-round
-  *     counters ride as `Observation` metrics on the commit writes
-  *     (zero extra jobs); the independent commit writes of one round
-  *     run as concurrent Spark jobs so the round's fixed cost is the
-  *     longest single write, not the sum. Fat rounds amortize the
-  *     remaining constant — the same argument that makes round
-  *     scheduling viable on a 1000-executor cluster.
+  *   - driver-side fixed cost per round is capped: the round plans
+  *     Catalyst queries only for its parquet writes and state-table
+  *     reads (selection and the fetches are RDD passes that run as
+  *     stages of the fetch-log write's one job, with no optimizer,
+  *     adaptive re-planning or Dataset-to-RDD conversion between
+  *     them); all per-round counters ride as `Observation` metrics on
+  *     the commit writes (zero extra jobs); the independent commit
+  *     writes of one round run as concurrent Spark jobs so the round's
+  *     fixed cost is the longest single write, not the sum. Fat rounds
+  *     amortize the remaining constant — the same argument that makes
+  *     round scheduling viable on a 1000-executor cluster.
   *   - a round whose frontier holds no robots.txt entries (tracked in
   *     the manifest counters) skips the robots-prefetch sub-step's jobs
   *     entirely — in steady state only discovery rounds pay it.
@@ -160,16 +162,18 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   * them again every round — and the JIT compiles the fresh classes'
   * hot methods again after it. On the benchmark's crawl (16 hosts,
   * 1,024 pages a round) round 5 touched 149 entries with seven typed
-  * groupings and ten persisted Datasets, and touches 55 in this layout
-  * (16 whole-stage stages, each twice, and 23 projections, orderings
-  * and cache readers); steady rounds compile nothing. So every new
-  * Dataset stage in a round costs about two entries, a new persisted
-  * Dataset a cache reader besides, and a typed map or groupByKey
-  * several (the typed bodies are the largest classes). After the fetch
-  * the round works on RDDs of the model's case classes: the grouped
-  * passes shuffle with no generated code, and every job of the round
-  * runs as a Spark SQL job so that all tasks compile under one loader
-  * (see `collectInSqlJob`).
+  * groupings and ten persisted Datasets, 55 once the passes after the
+  * fetch became RDD passes, and touches 21 in this layout (8 whole-
+  * stage stages, each twice, and 5 projections); steady rounds compile
+  * nothing. So every new Dataset stage in a round costs about two
+  * entries, a new persisted Dataset a cache reader besides, and a
+  * typed map or groupByKey several (the typed bodies are the largest
+  * classes). The round works on RDDs of the model's case classes from
+  * the frontier read on: selection and the grouped passes shuffle with
+  * no generated code, the generated classes are the parquet writes'
+  * and the two state-table reads', and every job of the round runs as
+  * a Spark SQL job so that all tasks compile under one loader (see
+  * `collectInSqlJob`).
   */
 final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
   import spark.implicits._
@@ -258,18 +262,15 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     val sc = spark.sparkContext
     val callerDesc = sc.getLocalProperty(JobDescription)
     val rdds = mutable.ArrayBuffer.empty[RDD[_]]
-    val dss = mutable.ArrayBuffer.empty[Dataset[_]]
-    try roundAt(r, rdds, dss)
+    try roundAt(r, rdds)
     finally {
-      dss.foreach(_.unpersist(false))
       rdds.foreach(_.unpersist(false))
       sc.setLocalProperty(JobDescription, callerDesc)
     }
   }
 
-  /** One round; every cache it takes is recorded in `rdds`/`dss`. */
-  private def roundAt(r: Int, rdds: mutable.Buffer[RDD[_]],
-                      dss: mutable.Buffer[Dataset[_]]): RoundResult = {
+  /** One round; every cache it takes is recorded in `rdds`. */
+  private def roundAt(r: Int, rdds: mutable.Buffer[RDD[_]]): RoundResult = {
     val sc = spark.sparkContext
     val nb = cfg.nBuckets
     val nFb = cfg.frontierBuckets
@@ -290,8 +291,9 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     val mkFetcher = cfg.fetcher // small factory in the closure, not a client
     val maxAtt = cfg.maxAttempts
     val salts = cfg.salts
-    def keep[T](rdd: RDD[T]): RDD[T] = { rdds += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK) }
-    def keepDs[T](ds: Dataset[T]): Dataset[T] = { dss += ds; ds.persist(StorageLevel.MEMORY_AND_DISK) }
+    // serialized: a deserialized cache pays Spark's size estimate, a walk
+    // of every cached object graph, on each block it stores
+    def keep[T](rdd: RDD[T]): RDD[T] = { rdds += rdd; rdd.persist(StorageLevel.MEMORY_AND_DISK_SER) }
 
     // frontier: distributed read of the per-bucket binary files the
     // manifest references (one flatMap per bucket, executor-side,
@@ -302,14 +304,8 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       .parallelize(frontierSegs.toSeq.sortBy(_._1),
                    math.min(frontierSegs.size.max(1), par))
       .flatMap { case (fb, segs) => FrontierStore.iterateMergedRequired(root, fb, segs) }
-    val robots = readT[RobotsRule](m.tables("robots"))
-    val hostState = readT[HostState](m.tables("host_state"))
-    // per-host dimension tables ride map-side while the host count is
-    // provably small (see CrawlConfig.hostBroadcastMax); an absent
-    // counter (pre-counter checkpoint) conservatively keeps shuffles
-    val bcastHosts = m.counters.get("hosts").exists(_ <= cfg.hostBroadcastMax)
-    def hostDim(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (bcastHosts) broadcast(df) else df
+    val robots = readT[RobotsRule](m.tables("robots")).rdd
+    val hostState = readT[HostState](m.tables("host_state")).rdd
     // shard locations: bucket -> round whose files are current. Tasks
     // read exactly the bucket shards they touch from the snapshot store;
     // no filter bytes move through the driver or a broadcast.
@@ -354,69 +350,60 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // rules learned from this round's robots fetches: 200 => parsed
     // (inline in the fetch task); 404 or retry-exhausted => allow-all
     // (colly's permissive default)
-    val robotsAll = robotsFetched match {
+    val robotsAll: RDD[RobotsRule] = robotsFetched match {
       case None => robots
       case Some(rf) =>
-        val newRobots = spark.createDataset(rf.flatMap { o =>
+        val newRobots = rf.flatMap { o =>
           if (o.status == 200) Some(RobotsRule(o.host, o.robots_prefixes))
           else if (o.status == 404 || o.attempt + 1 > maxAtt) Some(RobotsRule(o.host, Nil))
           else None
-        })
+        }
         // first-fetch-wins, DETERMINISTICALLY: a host already holding a
         // rule keeps it (the sequential oracle's `if (!robots.contains)`
-        // update). dropDuplicates("host") here would keep an arbitrary
-        // row whenever a re-fetched robots.txt (revoke-reseed) collides
-        // with the stored rule — partition-order nondeterminism on the
-        // one table that gates every fetch. Refreshing a stale rule is
-        // an administrative revocation concern, not a crawl-round one.
-        keepDs(robots.union(
-          newRobots.join(robots.select(col("host").as("o_host")),
-                         newRobots("host") === col("o_host"), "left_anti")
-            .as[RobotsRule]))
+        // update). Keeping an arbitrary row per host here would make a
+        // re-fetched robots.txt (revoke-reseed) that collides with the
+        // stored rule a partition-order race on the one table that
+        // gates every fetch. Refreshing a stale rule is an
+        // administrative revocation concern, not a crawl-round one.
+        (robots.map(rr => (rr.host, (0, rr))) ++ newRobots.map(rr => (rr.host, (1, rr))))
+          .reduceByKey((a, b) => if (a._1 <= b._1) a else b, par)
+          .map(_._2._2)
     }
 
-    // -- robots gate (non-robots frontier, with this round's rules) ------
-    // robots_allowed: true = eligible, false = disallowed (the row leaves
-    // the frontier this round), null = rules unknown (the row waits).
-    // Cached: selection reads the eligible rows, the frontier update the
-    // disallowed ones.
-    val restDs = spark.createDataset(rest)
-    val entryCols = restDs.columns.map(col)
-    val path = regexp_replace(col("url"), "^[^:/]+://[^/]*", "")
-    val gated = keepDs(restDs
-      .join(hostDim(robotsAll.withColumnRenamed("host", "r_host")),
-            restDs("host") === col("r_host"), "left")
-      .select(entryCols :+ when(col("r_host").isNotNull,
-        coalesce(not(exists(col("disallow_prefixes"), p => startswith(path, p))),
-                 lit(true))).as("robots_allowed"): _*))
+    // -- robots gate, budgets and phase A: one sorted-run pass ----------
+    // Each host's robots rule and token-bucket budget are replicated to
+    // each of its `salts` runs and travel through phase A's own exchange,
+    // keyed by (host, salt), sorted ahead of that host's frontier rows:
+    // O(hosts x salts) extra rows against the O(frontier) rows that
+    // shuffle anyway. The pass
+    // (gateRuns) drops the rows of hosts whose rules are unknown (they
+    // wait in the frontier), emits the disallowed rows' hashes for the
+    // frontier update, and keeps the first `budget` allowed rows of each
+    // run in entryOrd order. Memory is the sorter's (spillable), never a
+    // group buffer. A salt is reduced mod `salts`, so a checkpoint
+    // stamped under another salt count still meets its host's rows.
+    def perSalt[T](mk: Int => T): Seq[T] = (0 until salts).map(mk)
+    val gateRows: RDD[GateRow] = sc.union(
+      robotsAll.flatMap(rr => perSalt(HostRule(rr.host, _, rr.disallow_prefixes))),
+      hostState.flatMap { h =>
+        val budget = math.floor(math.min(h.capacity, h.tokens + h.refill_per_round)).toInt
+        perSalt(HostBudget(h.host, _, budget))
+      },
+      rest.map(e => Pending(e, e.salt % salts)))
+    // the phase A survivors (Right) and the disallowed hashes (Left);
+    // cached: phase B reads the survivors, the frontier update the rest
+    val phaseA = keep(sortedRuns(gateRows, par)(g => (g.host, g.salt))(gateOrd)
+      .mapPartitions(gateRuns))
 
-    // -- politeness budgets (token bucket per host) ---------------------
-    val budgets = hostState.select(col("host").as("b_host"),
-      floor(least(col("capacity"), col("tokens") + col("refill_per_round")))
-        .cast("int").as("budget"))
-    val withBudget = gated.filter(col("robots_allowed"))
-      .join(hostDim(budgets), col("host") === col("b_host"), "left")
-      .select(struct(entryCols: _*).as("e"), coalesce(col("budget"), lit(0)).as("budget"))
-      .as[WithBudget]
-
-    // -- selection: two sorted-run passes, each one exchange + a local
-    // sort + a streaming pass that keeps the first `budget` rows of each
-    // run in entryOrd order (bounded by the sorter, never by a group
-    // buffer). Phase A runs per (host_hash, salt) and spreads a hot host
-    // over `salts` tasks; phase B sees <= salts x budget rows per host,
-    // keeps the final top-`budget` and numbers them seq 1..budget.
-    def inEntryOrder(ds: Dataset[WithBudget], run: Column*): Dataset[WithBudget] =
-      ds.repartition(run: _*).sortWithinPartitions(
-        run ++ Seq("e.priority", "e.discovery_time", "e.url_hash").map(col): _*)
-    val phaseA = inEntryOrder(withBudget, col("e.host_hash"), col("e.salt"))
-      .mapPartitions(it => headsOfRuns(it)(w => (w.e.host_hash, w.e.salt)).map(_._1))
-    val selected = inEntryOrder(phaseA, col("e.host"))
+    // -- phase B: per host, the first `budget` of the <= salts x budget
+    // phase A survivors, numbered seq 1..budget ------------------------
+    val selected = sortedRuns(phaseA.flatMap(_.toOption), par)(_.e.host)(hostEntryOrd)
       .mapPartitions(it => headsOfRuns(it)(_.e.host).map { case (w, i) => SelectedE(w.e, i) })
 
     // -- fetch+parse (round-robin repartition: politeness already
     // enforced; the body is parsed to spans/links in the fetch task and
     // dropped — see the fusion note at the robots prefetch) -------------
-    val mainFetched = keepDs(selected
+    val mainRdd: RDD[FetchOut] = keep(selected
       .repartition(par)
       .mapPartitions { it =>
         val f = mkFetcher.create(web, simLat)
@@ -434,17 +421,23 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
                      SyntheticWeb.kindOf(fr.url), Nil, Nil, Nil)
         }
       })
-    val fetched = robotsFetched.fold(mainFetched)(rf => spark.createDataset(rf).union(mainFetched))
+    val fetchedRdd = robotsFetched.fold(mainRdd)(_ ++ mainRdd)
 
     // -- commit step 1: fetch log (per-round counters ride the writes as
-    // Observations). It runs selection and the fetches, fills the fetch
-    // cache, and its metrics gate the conditional writes below. The
-    // remaining commit writes are independent of each other, so they
-    // run as CONCURRENT Spark jobs — the round's fixed commit cost is
-    // the longest single write, not the sum of six sequential launches.
+    // Observations). Its one job runs the robots fetches, the gate,
+    // selection and the main fetches, fills the round's caches, and its
+    // metrics gate the conditional writes below. Log rows narrow to
+    // `statePar` files through a shuffle, so the fetches keep their
+    // parallelism. The remaining commit writes are independent of each
+    // other, so they run as CONCURRENT Spark jobs — the round's fixed
+    // commit cost is the longest single write, not the sum of six
+    // sequential launches.
+    val logRows = fetchedRdd.map(o =>
+      LogRow(o.round, o.host, o.host_hash, o.seq, o.url, o.url_hash, o.status, o.spans.size))
     val obsLog = Observation()
     sc.setJobDescription(s"crawl r$r: fetch+log")
-    fetched
+    spark.createDataset(
+        if (logRows.getNumPartitions > statePar) logRows.repartition(statePar) else logRows)
       .observe(obsLog,
                count(lit(1)).as("n"),
                coalesce(sum(when(col("status") === 200, 1L).otherwise(0L)), lit(0L))
@@ -453,10 +446,9 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
                  .as("n_robots"),
                coalesce(sum(when(col("seq") > 0 && col("status") === 200, 1L)
                  .otherwise(0L)), lit(0L)).as("ok_main"),
-               coalesce(sum(size(col("spans"))), lit(0L)).as("spans"))
+               coalesce(sum(col("spans")), lit(0L)).as("spans"))
       .select(col("round"), col("host"), col("host_hash"), col("seq"),
               col("url"), col("url_hash"), col("status"))
-      .coalesce(statePar)
       .write.mode("overwrite").parquet(snaps.tablePath(r, "fetch_log"))
     def obsL(o: Observation, k: String): Long = o.get(k).asInstanceOf[Long]
     val okMain = obsL(obsLog, "ok_main")
@@ -466,8 +458,6 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // as RDDs of the model's case classes: the grouped passes below
     // shuffle rows to one task per key and generate no classes (see
     // "Codegen budget" in the class doc)
-    val mainRdd: RDD[FetchOut] = mainFetched.rdd
-    val fetchedRdd = robotsFetched.fold(mainRdd)(_ ++ mainRdd)
     val pageOuts = mainRdd.filter(_.status == 200)
     val retries = fetchedRdd
       .filter(o => o.status != 200 && o.status != 404 && o.attempt + 1 <= maxAtt)
@@ -583,7 +573,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     // pass (the constant discovery_time r*1e6 is tie-broken by url_hash).
     val capD = cfg.hostCapacity
     val refD = cfg.hostRefill
-    val perHost = hostState.rdd.keyBy(_.host).cogroup(
+    val perHost = hostState.keyBy(_.host).cogroup(
       mainRdd.map(o => (o.host, 1L)).reduceByKey(_ + _, par),
       candDedup.map(e => (e.host, ())).reduceByKey((a, _) => a, par),
       par)
@@ -639,8 +629,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     //      if its hash is unknown to the updated membership set).
     // Every selected row was fetched exactly once, so the selected
     // hashes are the main fetch output's.
-    val blockedHashes = gated.filter(!col("robots_allowed"))
-      .select(col("url_hash")).as[String].rdd
+    val blockedHashes = phaseA.flatMap(_.left.toOption)
     val frontierUpd = sc.union(
       robotsFetched.map(_.map(o => FUpd(1, o.url_hash, None))).toSeq ++ Seq(
         blockedHashes.map(h => FUpd(2, h, None)),
@@ -772,7 +761,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     val robotsF = Future {
       sc.setJobDescription(s"crawl r$r: robots write")
       if (nRobots > 0) {
-        robotsAll.coalesce(statePar)
+        spark.createDataset(robotsAll).coalesce(statePar)
           .write.mode("overwrite").parquet(snaps.tablePath(r, "robots"))
         snaps.tablePath(r, "robots")
       } else m.tables("robots")
@@ -1138,8 +1127,90 @@ object CrawlScheduler {
         t
       }))
 
+  val entryOrd: Ordering[FrontierEntry] =
+    Ordering.by((e: FrontierEntry) => (e.priority, e.discovery_time, e.url_hash))
+
   final case class WithBudget(e: FrontierEntry, budget: Int)
   final case class SelectedE(e: FrontierEntry, seq: Int)
+
+  /** A row of phase A's exchange, in the (host, salt) run it sorts into:
+    * a host's robots rule or budget, replicated to each of its salts, or
+    * one of its frontier rows. The host's own rows sort first.
+    */
+  sealed trait GateRow { def host: String; def salt: Int }
+  final case class HostRule(host: String, salt: Int, prefixes: Seq[String]) extends GateRow
+  final case class HostBudget(host: String, salt: Int, budget: Int) extends GateRow
+  final case class Pending(e: FrontierEntry, salt: Int) extends GateRow {
+    def host: String = e.host
+  }
+
+  private def gateRank(g: GateRow): Int = g match {
+    case _: HostRule   => 0
+    case _: HostBudget => 1
+    case _: Pending    => 2
+  }
+
+  /** (host, salt), then rule, budget, frontier rows in entryOrd order. */
+  val gateOrd: Ordering[GateRow] = new Ordering[GateRow] {
+    def compare(a: GateRow, b: GateRow): Int = {
+      val c = a.host.compareTo(b.host)
+      if (c != 0) c
+      else if (a.salt != b.salt) Integer.compare(a.salt, b.salt)
+      else (a, b) match {
+        case (Pending(x, _), Pending(y, _)) => entryOrd.compare(x, y)
+        case _                              => Integer.compare(gateRank(a), gateRank(b))
+      }
+    }
+  }
+
+  /** Phase A's pass over a partition of sorted (host, salt) runs. A run
+    * whose host has no rule yet emits nothing: its rows wait in the
+    * frontier. Otherwise a row that `Robots.allowed` rejects emits its
+    * hash (Left, to leave the frontier), and the first `budget` allowed
+    * rows emit themselves (Right) — a host without a budget row has
+    * budget 0. Streams; holds one run's rule.
+    */
+  def gateRuns(it: Iterator[GateRow]): Iterator[Either[String, WithBudget]] = {
+    var run: (String, Int) = null
+    var rule: Option[Seq[String]] = None
+    var budget = 0
+    var kept = 0
+    it.flatMap { g =>
+      val k = (g.host, g.salt)
+      if (k != run) { run = k; rule = None; budget = 0; kept = 0 }
+      g match {
+        case HostRule(_, _, p) => if (rule.isEmpty) rule = Some(p); None
+        case HostBudget(_, _, b) => budget = b; None
+        case Pending(e, _) =>
+          rule.flatMap { p =>
+            if (!Robots.allowed(e.url, p)) Some(Left(e.url_hash))
+            else { kept += 1; if (kept <= budget) Some(Right(WithBudget(e, budget))) else None }
+          }
+      }
+    }
+  }
+
+  /** Host, then entryOrd: phase B's run order. */
+  val hostEntryOrd: Ordering[WithBudget] =
+    Ordering.by[WithBudget, String](_.e.host).orElseBy(_.e)(entryOrd)
+
+  /** `rows` exchanged to `par` partitions by the hash of `run(row)`, each
+    * partition sorted by `ord` — which must order by the run first, so
+    * that every run arrives contiguous and in `ord` order.
+    */
+  def sortedRuns[T: ClassTag](rows: RDD[T], par: Int)(run: T => Any)
+                             (ord: Ordering[T]): RDD[T] = {
+    val byRun = new Partitioner {
+      def numPartitions: Int = par
+      def getPartition(key: Any): Int = Math.floorMod(run(key.asInstanceOf[T]).hashCode, par)
+    }
+    implicit val byOrd: Ordering[T] = ord
+    rows.map(x => (x, ())).repartitionAndSortWithinPartitions(byRun).keys
+  }
+
+  /** A fetch-log row and its page's span count (for the round's counters). */
+  final case class LogRow(round: Int, host: String, host_hash: Long, seq: Int,
+                          url: String, url_hash: String, status: Int, spans: Int)
 
   /** One frontier-delta row (the ONLY thing that shuffles in the
     * frontier-update path — delta-scale, never state-scale). See the
@@ -1174,9 +1245,6 @@ object CrawlScheduler {
                             attempt: Int, priority: Int, discovery_time: Long,
                             kind: String, spans: Seq[Span],
                             links: Seq[String], robots_prefixes: Seq[String])
-
-  val entryOrd: Ordering[FrontierEntry] =
-    Ordering.by((e: FrontierEntry) => (e.priority, e.discovery_time, e.url_hash))
 
   /** 60-bit numeric node id for the link graph: the first 15 hex chars
     * of the sha-256 url_hash (same order-preserving surrogate as

@@ -1,17 +1,7 @@
 package graft
 
-import scala.collection.mutable
-
 import org.apache.spark.metrics.source.CodegenMetrics
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.model._
 import graft.oracle.CrawlOracle
@@ -106,6 +96,21 @@ class CrawlSchedulerSpec extends SparkSuite {
       outDir = tmpDir("crawlskew-"),
       maxRounds = 80, hostCapacity = 10.0, hostRefill = 10.0, salts = 4)
     assertParity(cfg)
+  }
+
+  test("scheduler matches oracle at salts = 1 and salts = 16") {
+    // phase A replicates each host's rule and budget to every salt run;
+    // one run per host and more runs than the hot host has budget must
+    // both select exactly the oracle's pages
+    for (salts <- Seq(1, 16)) {
+      val cfg = CrawlConfig(
+        web = WebConfig(seed = 7, nHosts = 4, listPagesPerHost = 2,
+                        detailsPerList = 5, hotHostFactor = 12,
+                        crossHostLinkPct = 10),
+        outDir = tmpDir(s"crawlsalts$salts-"),
+        maxRounds = 80, hostCapacity = 10.0, hostRefill = 10.0, salts = salts)
+      assertParity(cfg)
+    }
   }
 
   test("scheduler matches oracle when robots.txt fetches fail retryably") {
@@ -439,64 +444,53 @@ class CrawlSchedulerSpec extends SparkSuite {
     } finally sc.setJobDescription(null)
   }
 
-  /** Every node of an executed plan, through adaptive plans, query stages
-    * and the plans of cached relations.
-    */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-    case s: QueryStageExec => planNodes(s.plan)
-    case c: InMemoryTableScanExec => planNodes(c.relation.cachedPlan)
-    case _ => p.children.flatMap(planNodes)
-  })
-
-  test("fetch-log writes broadcast the robots and budget tables while hosts are few") {
-    val cfg = steadyCfg("crawlbcast-")
-    val plans = mutable.ArrayBuffer.empty[SparkPlan]
-    val listener = new QueryExecutionListener {
-      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
-        qe.logical match {
-          case c: InsertIntoHadoopFsRelationCommand
-              if c.outputPath.getName == "fetch_log" &&
-                c.outputPath.toString.contains(cfg.outDir) =>
-            plans.synchronized(plans += qe.executedPlan)
-          case _ =>
-        }
-      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
-    }
+  test("a steady round runs at most 7 Spark jobs, and fetch+log is one of them") {
+    // the round's jobs carry `crawl rN: <phase>` descriptions (the commit
+    // writes run on pool threads, so a job group would not reach them); a
+    // marker job submitted after the round shows when the listener bus
+    // has delivered every job start before it
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val cfg = steadyCfg("crawljobs-")
     val snaps = new Snapshots(cfg.outDir)
     val sched = new CrawlScheduler(spark, cfg)
-    spark.listenerManager.register(listener)
-    try {
-      sched.init()
-      assert(snaps.readManifest(0).counters.contains("hosts"), "init wrote no hosts counter")
-      (1 to 3).foreach { r =>
-        sched.runRound(r)
-        val hosts = snaps.readManifest(r).counters.get("hosts")
-        assert(hosts.exists(h => h > 0 && h <= cfg.hostBroadcastMax),
-               s"round $r hosts counter: $hosts")
-      }
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (plans.synchronized(plans.size) < 3 && System.nanoTime() < deadline)
-        Thread.sleep(50)
-    } finally spark.listenerManager.unregister(listener)
-    assert(plans.size == 3, s"${plans.size} fetch_log writes seen, want 3")
-    plans.zipWithIndex.foreach { case (plan, i) =>
-      val nodes = planNodes(plan)
-      val bhjKeys = nodes.collect { case j: BroadcastHashJoinExec =>
-        (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name)).toSet
-      }
-      assert(bhjKeys.exists(_("r_host")), s"round ${i + 1}: robots not broadcast-joined")
-      assert(bhjKeys.exists(_("b_host")), s"round ${i + 1}: budgets not broadcast-joined")
-      assert(!nodes.exists(n => n.isInstanceOf[SortMergeJoinExec] ||
-                                 n.isInstanceOf[ShuffledHashJoinExec]),
-             s"round ${i + 1}: a shuffle join in the fetch_log write")
-      val dimShuffles = nodes.collect { case e: ShuffleExchangeExec =>
-        e.outputPartitioning match {
-          case h: HashPartitioning => h.expressions.flatMap(_.references.map(_.name))
-          case _ => Nil
+    val marker = s"crawl-spec marker ${java.util.UUID.randomUUID}"
+    val phases = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val delivered = new java.util.concurrent.CountDownLatch(1)
+    val RoundJob = "crawl r4: (.+)".r
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description"))) match {
+          case Some(RoundJob(phase)) => phases.add(phase)
+          case Some(`marker`) => delivered.countDown()
+          case _ =>
         }
-      }.flatten.filter(Set("r_host", "b_host"))
-      assert(dimShuffles.isEmpty, s"round ${i + 1}: host table shuffled on $dimShuffles")
     }
+    sched.init()
+    assert(snaps.readManifest(0).counters.get("hosts").exists(_ > 0),
+           "init wrote no hosts counter")
+    def roundWithHosts(r: Int) = {
+      val res = sched.runRound(r)
+      val hosts = snaps.readManifest(r).counters.get("hosts")
+      assert(hosts.exists(_ > 0), s"round $r hosts counter: $hosts")
+      res
+    }
+    (1 to 3).foreach(roundWithHosts) // the robots round, then warm-up
+    sc.addSparkListener(listener)
+    try {
+      val res = roundWithHosts(4)
+      assert(res.selected == 4 * 8, s"not a steady round: ${res.selected} selected")
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      assert(delivered.await(60, java.util.concurrent.TimeUnit.SECONDS),
+             "the listener bus never delivered the marker job")
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    val got = phases.toArray.map(_.toString).toSeq
+    assert(got.size <= 7, s"steady round 4 ran ${got.size} jobs: ${got.mkString(", ")}")
+    assert(got.count(_ == "fetch+log") == 1,
+           s"fetch+log ran as ${got.count(_ == "fetch+log")} jobs: ${got.mkString(", ")}")
   }
 }

@@ -1048,7 +1048,7 @@ class IncrementalLshSpec extends SparkSuite {
     // re-run with the same slot — the retry must re-read exactly the
     // prior rounds, overwrite its own slot, and later rounds must see
     // no duplicate ids (which would admit self-pairs)
-    val idx = java.nio.file.Files.createTempDirectory("slotpin-").toString
+    val idx = tmpDir("slotpin-")
     def doc(i: Long, t: String) = (i, t)
     val r0 = Seq(doc(0, "alpha beta gamma delta one"),
                  doc(3, "unrelated words entirely here")).toDF("id", "text")

@@ -142,7 +142,7 @@ class PlanSpec extends SparkSuite {
   }
 
   test("directory-partitioned scan prunes to the filtered partitions") {
-    val out = java.nio.file.Files.createTempDirectory("planspec-part-").toString
+    val out = tmpDir("planspec-part-")
     spark.read.parquet(s"$dir/documents.parquet")
       .write.partitionBy("lang").mode("overwrite").parquet(out)
     val df = spark.read.parquet(out).filter(col("lang") === "en")

@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path}
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -18,10 +20,29 @@ object SparkSuite {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
+
+  /** A fresh temp directory, deleted with everything in it when the JVM exits. */
+  def tmpDir(prefix: String): String = {
+    val dir = Files.createTempDirectory(prefix)
+    tmpDirs.add(dir)
+    dir.toString
+  }
+
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    tmpDirs.forEach { dir =>
+      if (Files.exists(dir)) {
+        val paths = Files.walk(dir)
+        try paths.sorted(java.util.Comparator.reverseOrder[Path]())
+          .forEach(p => Files.deleteIfExists(p))
+        catch { case _: java.io.IOException => () } // best effort at exit
+        finally paths.close()
+      }
+    }, "graft-test-tmp-cleanup"))
 }
 
 abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSuite.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = SparkSuite.tmpDir(prefix)
 }

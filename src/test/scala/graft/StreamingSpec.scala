@@ -20,9 +20,9 @@ class StreamingSpec extends SparkSuite {
     }
 
   test("docs stream micro-batches to parquet (K1/ST1 analogue)") {
-    val src = Files.createTempDirectory("stream-src-").toString
-    val out = Files.createTempDirectory("stream-out-").toString
-    val chk = Files.createTempDirectory("stream-chk-").toString
+    val src = tmpDir("stream-src-")
+    val out = tmpDir("stream-out-")
+    val chk = tmpDir("stream-chk-")
     sampleDocs(40).toDS().write.mode("append").parquet(src)
 
     val q = Streams.docsToParquet(spark, src, out, chk,
@@ -299,11 +299,11 @@ class StreamingSpec extends SparkSuite {
     val docs = (0L until 12L).map(i => (i, s"alpha beta gamma delta w${i / 2} x y"))
     val df = docs.toDF("id", "text")
       .withColumn("batch", pmod(col("id"), lit(3)).cast("int"))
-    val logDir = Files.createTempDirectory("sink-log-").toString
+    val logDir = tmpDir("sink-log-")
     Replay.writeLog(df, "batch", logDir)
-    val idxDir = Files.createTempDirectory("sink-idx-").toString
-    val outDir = Files.createTempDirectory("sink-out-").toString
-    val chkDir = Files.createTempDirectory("sink-chk-").toString
+    val idxDir = tmpDir("sink-idx-")
+    val outDir = tmpDir("sink-out-")
+    val chkDir = tmpDir("sink-chk-")
     val src = spark.readStream.schema(docs.toDF("id", "text").schema)
       .option("maxFilesPerTrigger", 1).parquet(logDir)
     val q = Streams.incrementalNearDupSink(spark, src, idxDir, outDir,
@@ -329,12 +329,12 @@ class StreamingSpec extends SparkSuite {
     import graft.ops.QuantileSketch
     val rows = (1L to 300L).map(v => (s"g${v % 3}", v * 7))
     val df = rows.toDF("g", "v")
-    val logDir = Files.createTempDirectory("qsk-log-").toString
+    val logDir = tmpDir("qsk-log-")
     Replay.writeLog(
       df.withColumn("batch", pmod(col("v"), lit(4)).cast("int")),
       "batch", logDir)
-    val skDir = Files.createTempDirectory("qsk-sk-").toString
-    val chkDir = Files.createTempDirectory("qsk-chk-").toString
+    val skDir = tmpDir("qsk-sk-")
+    val chkDir = tmpDir("qsk-chk-")
     def runOnce(): Unit = {
       val src = spark.readStream.schema(df.schema)
         .option("maxFilesPerTrigger", 1).parquet(logDir)
