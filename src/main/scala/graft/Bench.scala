@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.sched.{CrawlConfig, CrawlScheduler}
 import graft.store.Snapshots
 import graft.synthweb.WebConfig
+import graft.util.TempDirs
 
 /** Round benchmark (driver-run). Two parts:
   *
@@ -125,13 +126,13 @@ object Bench {
       : (Long, Double, Double, String, Int, Double) = {
     val s = session(cores)
     try {
-      // temp dirs ride SparkEntry's shutdown-hook registry (deleted at
+      // temp dirs ride TempDirs' shutdown-hook registry (deleted at
       // JVM exit, so lastOut stays readable for the dedup leg) — raw
       // createTempDirectory would leak one crawl output per attempt
       // across repeated harness runs
       new CrawlScheduler(s, warmupCfg(
-        SparkEntry.tmpWorkDir(s"bench-warm-$cores-"))).run()
-      val out = SparkEntry.tmpWorkDir(s"bench-crawl-$cores-")
+        TempDirs.create(s"bench-warm-$cores-"))).run()
+      val out = TempDirs.create(s"bench-crawl-$cores-")
       val cfg = crawlCfg(out)
       val jc = new JobCount
       s.sparkContext.addSparkListener(jc)
@@ -250,7 +251,7 @@ object Bench {
       // repeat's steal is the max of the two, and the repeat retries
       // under the shared contamination rule like every other metric
       cleanRepeat {
-        val idx = SparkEntry.tmpWorkDir("bench-incann-")
+        val idx = TempDirs.create("bench-incann-")
         val r1c = graft.ops.IncrementalAnn.roundPairs(
           s4, idx, vecs.filter(pmod(col("id"), lit(2)) === 0), "id",
           "vec", threshold = 0.9999, bits = bandBits).count()
@@ -431,7 +432,7 @@ object Bench {
         // one long) — a repeat whose round-1 count drifts must fail the
         // distinctness require, not silently skew incr_pairs
         val (tIncr, packed, stIncr) = med3 {
-          val idx = SparkEntry.tmpWorkDir("bench-inclsh-")
+          val idx = TempDirs.create("bench-inclsh-")
           val r1c = graft.ops.IncrementalLsh.roundPairs(
             s3, idx, copies.filter(pmod(col("id"), lit(2)) === 0), "id",
             "text", shingleN = 3, numHashes = 32, rowsPerBand = 4,

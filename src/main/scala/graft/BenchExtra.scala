@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.sched.CrawlScheduler
 import graft.store.Snapshots
+import graft.util.TempDirs
 
 /** Round-6 optimization harness — ISOLATED measurements per guide §1
   * (noop sink, per-phase splits, plan dumps). This is NOT the driver
@@ -200,7 +201,7 @@ object BenchExtra {
         val delta = base.select((lit(10000000L) + col("id0")).as("id"),
                                 col("embedding").as("vec"))
         (1 to 3).foreach { rep =>
-          val idx = SparkEntry.tmpWorkDir("extra-incann-")
+          val idx = TempDirs.create("extra-incann-")
           val r1c = graft.ops.IncrementalAnn.roundPairs(
             s, idx, vecs.filter(pmod(col("id"), lit(2)) === 0), "id",
             "vec", threshold = 0.9999, bits = 16).count()
@@ -234,7 +235,7 @@ object BenchExtra {
           .persist()
         println(s"docs=${copies.count()}")
         (1 to 3).foreach { rep =>
-          val idx = SparkEntry.tmpWorkDir("extra-inclsh-")
+          val idx = TempDirs.create("extra-inclsh-")
           graft.ops.IncrementalLsh.roundPairs(
             s, idx, copies.filter(pmod(col("id"), lit(2)) === 0), "id",
             "text", shingleN = 3, numHashes = 32, rowsPerBand = 4,
@@ -356,9 +357,9 @@ object BenchExtra {
         })
         // warmup like Bench
         new CrawlScheduler(s, BenchCfg.warmup(
-          SparkEntry.tmpWorkDir("extra-warm-"))).run()
+          TempDirs.create("extra-warm-"))).run()
         jobTimes.clear(); nJobs.set(0)
-        val out = SparkEntry.tmpWorkDir("extra-crawl-")
+        val out = TempDirs.create("extra-crawl-")
         val t0 = System.nanoTime()
         val last = new CrawlScheduler(s, BenchCfg.crawl(out)).run()
         val sec = (System.nanoTime() - t0) / 1e9

@@ -31,7 +31,7 @@ object FrontierDemo {
       .config("spark.driver.host", "localhost")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val out = java.nio.file.Files.createTempDirectory("frontier-demo-").toString
+    val out = graft.util.TempDirs.create("frontier-demo-")
     val (hosts, lists, details) =
       if (scale >= 10) (128, 375, 200) else (64, 150, 100)
     val cfg = CrawlConfig(

@@ -13,6 +13,7 @@ import graft.sched.{CrawlConfig, CrawlScheduler}
 import graft.store.Snapshots
 import graft.streaming.{Replay, Streams}
 import graft.synthweb.WebConfig
+import graft.util.TempDirs
 
 /** Driver contract — one `queries` entry per implemented operator from
   * SURVEY.md §2 plus the training-data operators; `oracleSql` carries
@@ -25,78 +26,49 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     s.read.parquet(s"$dir/$name.parquet")
 
-  /** Temp dirs for the materializing queries (sinks, indexes, replay
-    * logs) — registered for recursive deletion at JVM exit, so repeated
-    * harness runs don't accumulate disk. Deletion can't be eager: a
-    * query returns a LAZY DataFrame whose plan still reads the
-    * directory when the caller collects it.
-    */
-  private val cleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cleanupDirs.forEach { d =>
-        try {
-          val root = java.nio.file.Paths.get(d)
-          if (java.nio.file.Files.exists(root)) {
-            val walk = java.nio.file.Files.walk(root)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
-            finally walk.close()
-          }
-        } catch { case _: Throwable => () }
-      }))
-  }
-  private[graft] def tmpWorkDir(prefix: String): String = {
-    val d = java.nio.file.Files.createTempDirectory(prefix).toString
-    cleanupDirs.add(d)
-    d
-  }
-
   /** Per-invocation suffix for q91's catalog table names — a fixed name
     * would make repeated runs depend on overwrite semantics and leak
     * one session-global entry forever.
     */
   private val bucketTableSeq = new java.util.concurrent.atomic.AtomicLong()
 
-  /** One small deterministic crawl per JVM, shared by the crawl-derived
-    * queries and `entry` (outDir cached). cfg is shared with the
-    * sequential oracle dumps ([[graft.oracle.SeqOracles]]).
+  /** One crawl of `cfg` per JVM, run on first use into a temp dir that
+    * later calls share (outDir cached).
     */
-  private[graft] object CrawlOnce {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    val cfg: String => CrawlConfig = out =>
-      CrawlConfig(
-        web = WebConfig(seed = 1234, nHosts = 4, listPagesPerHost = 3,
-                        detailsPerList = 6, hotHostFactor = 2,
-                        crossHostLinkPct = 15),
-        outDir = out, maxRounds = 48, hostCapacity = 8, hostRefill = 8,
-        salts = 4)
-    def dir(s: SparkSession): String = cache.getOrElseUpdate("crawl", {
-      val out = tmpWorkDir("graft-crawl-")
-      new CrawlScheduler(s, cfg(out)).run()
+  private[graft] class CrawlFixture(prefix: String, val cfg: String => CrawlConfig) {
+    private var out: String = _
+    def dir(s: SparkSession): String = synchronized {
+      if (out == null) {
+        val o = TempDirs.create(prefix)
+        crawl(s, cfg(o))
+        out = o
+      }
       out
-    })
+    }
+    protected def crawl(s: SparkSession, c: CrawlConfig): Unit =
+      new CrawlScheduler(s, c).run()
     def lastRound(s: SparkSession): Int =
       new Snapshots(dir(s)).latestRound.getOrElse(0)
   }
+
+  /** One small deterministic crawl, shared by the crawl-derived queries
+    * and `entry`. cfg is shared with the sequential oracle dumps
+    * ([[graft.oracle.SeqOracles]]).
+    */
+  private[graft] object CrawlOnce extends CrawlFixture("graft-crawl-", out =>
+    CrawlConfig(
+      web = WebConfig(seed = 1234, nHosts = 4, listPagesPerHost = 3,
+                      detailsPerList = 6, hotHostFactor = 2,
+                      crossHostLinkPct = 15),
+      outDir = out, maxRounds = 48, hostCapacity = 8, hostRefill = 8,
+      salts = 4))
 
   /** Rank-priority sibling of [[CrawlOnce]]: the SAME synthetic web
     * crawled with `rankPriority` on — q93's fixture; the sequential
     * oracle runs [[graft.oracle.CrawlOracle]] with the same flag.
     */
-  private[graft] object RankCrawlOnce {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    val cfg: String => CrawlConfig = out =>
-      CrawlOnce.cfg(out).copy(rankPriority = true)
-    def dir(s: SparkSession): String = cache.getOrElseUpdate("crawl", {
-      val out = tmpWorkDir("graft-rankcrawl-")
-      new CrawlScheduler(s, cfg(out)).run()
-      out
-    })
-    def lastRound(s: SparkSession): Int =
-      new Snapshots(dir(s)).latestRound.getOrElse(0)
-  }
+  private[graft] object RankCrawlOnce extends CrawlFixture("graft-rankcrawl-", out =>
+    CrawlOnce.cfg(out).copy(rankPriority = true))
 
   /** Real-transport sibling of [[CrawlOnce]]: the SAME synthetic web
     * crawled over REAL loopback HTTP — a [[graft.synthweb.SynthWebServer]]
@@ -105,21 +77,13 @@ object SparkEntry {
     * the SAME sequential dump as q51's, because transport must not
     * change the crawl (RealTransportSpec pins the parity in-suite).
     */
-  private[graft] object HttpCrawlOnce {
-    private val cache = scala.collection.concurrent.TrieMap[String, String]()
-    def dir(s: SparkSession): String = cache.getOrElseUpdate("crawl", {
-      val out = tmpWorkDir("graft-httpcrawl-")
-      val web = CrawlOnce.cfg("unused").web
-      val server = new graft.synthweb.SynthWebServer(web)
-      try {
-        val cfg = CrawlOnce.cfg(out).copy(
-          fetcher = graft.fetch.HttpFetcherFactory(server.baseUrl))
-        new CrawlScheduler(s, cfg).run()
-      } finally server.stop()
-      out
-    })
-    def lastRound(s: SparkSession): Int =
-      new Snapshots(dir(s)).latestRound.getOrElse(0)
+  private[graft] object HttpCrawlOnce extends CrawlFixture("graft-httpcrawl-", CrawlOnce.cfg) {
+    override protected def crawl(s: SparkSession, c: CrawlConfig): Unit = {
+      val server = new graft.synthweb.SynthWebServer(c.web)
+      try new CrawlScheduler(
+        s, c.copy(fetcher = graft.fetch.HttpFetcherFactory(server.baseUrl))).run()
+      finally server.stop()
+    }
   }
 
   /** Flagship: full crawl of the synthetic web → interleaved-span docs. */
@@ -496,7 +460,7 @@ object SparkEntry {
       // the oracle independently pins that to the arrival round of the
       // pair's later member (exactly-once-across-rounds invariant).
       val corpus = dedupCorpus(s, dir)
-      val idx = tmpWorkDir("graft-inclsh-")
+      val idx = TempDirs.create("graft-inclsh-")
       (0 to 2).map { r =>
         IncrementalLsh.roundPairs(
             s, idx, corpus.filter(pmod(col("id"), lit(3)) === r),
@@ -564,7 +528,7 @@ object SparkEntry {
       // read it back, aggregate per language with an md5 content
       // checksum — the oracle computes the same aggregate from the
       // parquet source, so any round-trip corruption breaks the hash.
-      val out = tmpWorkDir("graft-orc-")
+      val out = TempDirs.create("graft-orc-")
       T(s, dir, "documents").write.mode("overwrite").orc(out)
       s.read.orc(out).groupBy("lang")
         .agg(count(lit(1)).as("n_docs"),
@@ -578,7 +542,7 @@ object SparkEntry {
       // in a prod path), gzip per-part; fidelity contract = q76's: the
       // oracle aggregates the parquet source, so any text/number
       // mangling through JSON breaks the checksum.
-      val out = tmpWorkDir("graft-jsonl-")
+      val out = TempDirs.create("graft-jsonl-")
       val docs = T(s, dir, "documents")
       docs.write.mode("overwrite").option("compression", "gzip").json(out)
       s.read.schema(docs.schema).json(out).groupBy("lang")
@@ -726,7 +690,7 @@ object SparkEntry {
       // PartitionFilters and that the pruned scan touches a strict
       // subset of partitions) — at 100 TB the dominant scan-cost lever
       // after column pruning.
-      val out = tmpWorkDir("graft-part-")
+      val out = TempDirs.create("graft-part-")
       T(s, dir, "documents")
         .write.partitionBy("lang", "source").mode("overwrite").parquet(out)
       s.read.parquet(out)
@@ -748,7 +712,7 @@ object SparkEntry {
       // oracle. Any type-mapping or batching corruption in either
       // direction breaks the hash. MySQL in production differs only in
       // url/driver strings (db/mysql.go:8-19).
-      val out = tmpWorkDir("graft-derby-")
+      val out = TempDirs.create("graft-derby-")
       // keep Derby's engine log inside the per-run temp dir
       System.setProperty("derby.stream.error.file", s"$out/derby.log")
       val url = s"jdbc:derby:$out/db;create=true"
@@ -907,11 +871,11 @@ object SparkEntry {
       // it) — at 100 TB this is the shuffle you pay once at layout
       // time instead of on every join. External bucketed tables under
       // a temp path; the in-memory catalog carries the bucket spec.
-      val tmp = tmpWorkDir("graft-buck-")
+      val tmp = TempDirs.create("graft-buck-")
       // per-invocation table names: repeated runs never depend on
       // overwrite semantics of a fixed catalog entry; prior invocations'
       // entries are dropped so the session catalog can't accumulate
-      // (external tables — DROP removes the entry, tmpWorkDir the files)
+      // (external tables — DROP removes the entry, TempDirs the files)
       s.catalog.listTables().collect().map(_.name)
         .filter(_.startsWith("g91_"))
         .foreach(n => s.sql(s"DROP TABLE IF EXISTS $n"))
@@ -968,7 +932,7 @@ object SparkEntry {
       // with mergeSchema and aggregated — the upgrade path a long-lived
       // corpus lives through. Oracle recomputes the aggregate from the
       // source table (v1 rows contribute NULL n_chars).
-      val out = tmpWorkDir("graft-evo-")
+      val out = TempDirs.create("graft-evo-")
       val docs = T(s, dir, "documents")
       docs.filter(col("doc_id") % 2 === 1).select("doc_id", "lang")
         .write.mode("overwrite").parquet(s"$out/v1")
@@ -1090,7 +1054,7 @@ object SparkEntry {
       val planted = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + 10000).as("vec_id"), col("embedding"), col("label"))
       val corpus = e.union(planted)
-      val idx = tmpWorkDir("graft-incann-")
+      val idx = TempDirs.create("graft-incann-")
       (0 to 2).map { r =>
         IncrementalAnn.roundPairs(
             s, idx, corpus.filter(pmod(col("vec_id"), lit(3)) === r),
@@ -1141,7 +1105,7 @@ object SparkEntry {
       // sequential oracle recomputes (a posting lost or duplicated in
       // any round/epoch transition breaks the neighbor compare).
       val idxDir =
-        tmpWorkDir("graft-q68-ivf-")
+        TempDirs.create("graft-q68-ivf-")
       val e = T(s, dir, "embeddings")
       val idx = new IncrementalAnn.IvfIndex(s, idxDir, nCells = 16,
                                             iters = 4, retrainEvery = 2)
@@ -1190,7 +1154,7 @@ object SparkEntry {
       // S8 CSV scan + K1 CSV sink: write header CSV, read back with an
       // explicit schema, aggregate — round-trip fidelity vs the oracle
       // computed on the original parquet
-      val out = tmpWorkDir("csv-rt-")
+      val out = TempDirs.create("csv-rt-")
       T(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.mode("overwrite").option("header", "true").csv(out)
@@ -1376,7 +1340,7 @@ object SparkEntry {
       // fixture dir is written once per (JVM, sf dir) — repeated
       // invocations (bench warm/measure, verify) reuse it.
       val out = htmlScanFixtures.getOrElseUpdate(dir, {
-        val d = tmpWorkDir("html-scan-")
+        val d = TempDirs.create("html-scan-")
         T(s, dir, "nation")
           .select(col("n_nationkey"), col("n_name"), col("n_regionkey"))
           .collect() // 25 fixture files; writing them is driver-side by nature
@@ -1541,7 +1505,7 @@ object SparkEntry {
         ("zflush", new java.sql.Timestamp(maxTs + 10L * gapSec * 1000 + gapSec * 500L),
          200, nb + 1))
         .toDF("host", "ts", "status", "batch")
-      val logDir = tmpWorkDir("q64-log-")
+      val logDir = TempDirs.create("q64-log-")
       Replay.writeLog(chunked.unionByName(flush), "batch", logDir)
       Replay.run(s, logDir,
                  org.apache.spark.sql.Encoders.product[Streams.FetchEvent].schema) {
@@ -1580,7 +1544,7 @@ object SparkEntry {
         (lit(200000L) + col("i") * 10).cast("timestamp").as("ts"),
         (col("doc_id") * 10 + 2).as("id"),
         concat(lit("\t"), col("text")).as("text"))
-      val logDir = tmpWorkDir("q65-log-")
+      val logDir = TempDirs.create("q65-log-")
       Replay.writeLog(orig.unionByName(dup).unionByName(sentinel)
                         .unionByName(far), "batch", logDir)
       val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -1619,7 +1583,7 @@ object SparkEntry {
         (new java.sql.Timestamp(maxTs + 40 * day), "zflush", 0.0, nb),
         (new java.sql.Timestamp(maxTs + 40 * day + 60000L), "zflush", 0.0, nb + 1))
         .toDF("ts", "event_type", "value", "batch")
-      val logDir = tmpWorkDir("q66-log-")
+      val logDir = TempDirs.create("q66-log-")
       Replay.writeLog(chunked.unionByName(flush), "batch", logDir)
       val schema = org.apache.spark.sql.types.StructType(Seq(
         org.apache.spark.sql.types.StructField("ts",
@@ -1643,10 +1607,10 @@ object SparkEntry {
       // q62's: the exact-jaccard pair set with emit_round = the later
       // member's batch.
       val corpus = dedupCorpus(s, dir)
-      val logDir = tmpWorkDir("q83-log-")
-      val idxDir = tmpWorkDir("q83-idx-")
-      val outDir = tmpWorkDir("q83-out-")
-      val chkDir = tmpWorkDir("q83-chk-")
+      val logDir = TempDirs.create("q83-log-")
+      val idxDir = TempDirs.create("q83-idx-")
+      val outDir = TempDirs.create("q83-out-")
+      val chkDir = TempDirs.create("q83-chk-")
       Replay.writeLog(
         corpus.withColumn("batch", pmod(col("id"), lit(3)).cast("int")),
         "batch", logDir)
@@ -1670,9 +1634,9 @@ object SparkEntry {
       val ev = T(s, dir, "events")
         .select(col("event_type"),
                 floor(col("value") * 100).cast("long").as("cents"))
-      val logDir = tmpWorkDir("q103-log-")
-      val skDir = tmpWorkDir("q103-sk-")
-      val chkDir = tmpWorkDir("q103-chk-")
+      val logDir = TempDirs.create("q103-log-")
+      val skDir = TempDirs.create("q103-sk-")
+      val chkDir = TempDirs.create("q103-chk-")
       Replay.writeLog(
         ev.withColumn("batch", pmod(col("cents"), lit(3)).cast("int")),
         "batch", logDir)
@@ -1696,10 +1660,10 @@ object SparkEntry {
       val planted = e.filter(col("vec_id") < 20)
         .select((col("vec_id") + 10000).as("vec_id"), col("embedding"))
       val corpus = e.select(col("vec_id"), col("embedding")).union(planted)
-      val logDir = tmpWorkDir("q86-log-")
-      val idxDir = tmpWorkDir("q86-idx-")
-      val outDir = tmpWorkDir("q86-out-")
-      val chkDir = tmpWorkDir("q86-chk-")
+      val logDir = TempDirs.create("q86-log-")
+      val idxDir = TempDirs.create("q86-idx-")
+      val outDir = TempDirs.create("q86-out-")
+      val chkDir = TempDirs.create("q86-chk-")
       Replay.writeLog(
         corpus.withColumn("batch", pmod(col("vec_id"), lit(3)).cast("int")),
         "batch", logDir)

@@ -129,7 +129,7 @@ object IncrementalLsh {
   /** Fold all complete rounds into a fresh single-slot generation
     * (crash-safe: committed by marker, old generation serves until
     * then) and drop superseded generations. Call on the same cadence
-    * as the crawl's seen-state compaction.
+    * as the crawl's seen-index segment merge.
     */
   def compact(spark: SparkSession, indexDir: String): Boolean =
     index(indexDir).compact(spark)

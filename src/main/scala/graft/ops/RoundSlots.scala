@@ -54,7 +54,7 @@ private[graft] object RoundSlots {
   // per ingest round FOREVER — at 100 TB cadence that is thousands of
   // parquet directories whose listing/footer overhead grows per round
   // (the data volume is the same; the file count is not). The fix
-  // mirrors the crawl's seen-state LSM fold and IvfIndex's epochs: all
+  // mirrors the crawl's seen-index segment merge and IvfIndex's epochs: all
   // complete rounds fold into slot r0 of a NEW generation directory
   // `g<j+1>`, committed by a marker file written LAST — readers resolve
   // the highest committed generation per call, so the switch is atomic

@@ -34,7 +34,7 @@ final case class CrawlConfig(
     hostRefill: Double = 8.0, // tokens refilled per scheduling round
     bloomBits: Int = 1 << 21, // TOTAL bloom bits (sharded across buckets)
     bloomHashes: Int = 5,
-    compactEvery: Int = 8, // LSM cadence (seen delta window + index/frontier segment merge)
+    compactEvery: Int = 8, // segment cadence: index and frontier segments merge every compactEvery rounds
     simulateLatency: Boolean = false,
     // opt-in rank-informed frontier priority: round k's cumulative link
     // graph feeds round k+1's sort key (deterministic integer PageRank —
@@ -103,8 +103,8 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     candidates cheaply; only possible-positives reach the exact
   *     per-bucket seen index, loaded from the same store by one task
   *     per bucket — the seen TABLE itself is storage-only state (it
-  *     feeds compaction, rebuilds and audits) and never crosses a
-  *     shuffle during a round. Shards are keyed
+  *     feeds revocation and audits) and never crosses a shuffle during
+  *     a round. Shards are keyed
   *     by host_hash bucket — at 10^10 URLs no filter bytes ever move
   *     through the driver or a whole-map broadcast: each task reads
   *     exactly the bucket shards it touches, and shard maintenance
@@ -140,15 +140,13 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   *     WRITE is O(|delta|) records, not O(touched-bucket size): at a
   *     10^10-entry frontier a drain-phase round writes only the
   *     handful of records its deltas produce.
-  *   - the seen table is a two-level parquet LSM: per-round deltas fold
-  *     into a level-1 run every `compactEvery` rounds (O(window delta)),
-  *     runs fold into the seen_full base only every compactEvery² rounds
-  *     (amortized O(|seen|/compactEvery²) per round), deduplicating by
-  *     url_hash (latest round wins) so revocation rounds cannot leave
-  *     duplicate rows. The per-bucket exact indexes are LSM too: each
-  *     round appends a delta-only segment; segments merge on the same
-  *     cadence — per-round index maintenance writes O(|delta|) bytes,
-  *     not O(|seen|).
+  *   - the seen table is per-round deltas over a base that only
+  *     `revoke` writes (deduplicated by url_hash, latest round wins): a
+  *     round writes its delta and never folds the table, since no round
+  *     reads it. The per-bucket exact indexes are LSM: each round
+  *     appends a delta-only segment; segments merge every `compactEvery`
+  *     rounds — per-round index maintenance writes O(|delta|) bytes, not
+  *     O(|seen|).
   *
   * Codegen budget: Spark compiles a round's generated classes (whole-
   * stage pipelines, projections, cached-table readers, orderings) with
@@ -181,12 +179,8 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
 
   private val snaps = new Snapshots(cfg.outDir)
 
-  private def readT[T: Encoder](path: String): Dataset[T] =
-    spark.read.schema(implicitly[Encoder[T]].schema).parquet(path).as[T]
-
-  private def readTMulti[T: Encoder](paths: Seq[String]): Dataset[T] =
-    if (paths.isEmpty) spark.emptyDataset[T]
-    else spark.read.schema(implicitly[Encoder[T]].schema).parquet(paths: _*).as[T]
+  private def readT[T: Encoder](paths: String*): Dataset[T] =
+    spark.read.schema(implicitly[Encoder[T]].schema).parquet(paths: _*).as[T]
 
   // ------------------------------------------------------------------
   // round 0: seed
@@ -217,8 +211,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       tables = Map(
         "host_state" -> snaps.tablePath(0, "host_state"),
         "robots" -> snaps.tablePath(0, "robots")),
-      seenDeltaRounds = Seq(0), seenRunRounds = Nil, seenFullRound = -1,
-      filterRounds = Map.empty, seenIndexSegs = Map.empty,
+      seenFullRound = -1, filterRounds = Map.empty, seenIndexSegs = Map.empty,
       frontierSegs = byFb.keys.map(_ -> Seq(0)).toMap,
       frontierCounts = byFb.map { case (fb, es) => fb -> es.size.toLong },
       frontierPri0 = byFb.map { case (fb, es) =>
@@ -250,6 +243,19 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     chk("cfg_frontier_buckets", cfg.frontierBuckets.toLong)
   }
 
+  /** Manifest invariant: a bucket with exact index segments has a bloom
+    * shard, since the pass that appends a bucket's segment writes its
+    * shard. A bucket without one would start from an empty filter that
+    * misses its old hashes and later call seen URLs definitely new, so
+    * the round fails instead.
+    */
+  private def requireShardPerIndexedBucket(m: Snapshots.Manifest): Unit =
+    m.seenIndexSegs.keys.toSeq.sorted.find(!m.filterRounds.contains(_)).foreach { b =>
+      throw new IllegalStateException(
+        s"checkpoint round ${m.round}: bucket $b has seen-index segments but no " +
+          "bloom shard in the manifest's filterRounds; the checkpoint is damaged")
+    }
+
   // ------------------------------------------------------------------
   // one scheduling round
   // ------------------------------------------------------------------
@@ -276,6 +282,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     val nFb = cfg.frontierBuckets
     val m = snaps.readManifest(r - 1)
     requireStructuralConfig(m)
+    requireShardPerIndexedBucket(m)
     // state-table write parallelism: sized from last round's row counts
     // (manifest lineage), NOT from core count — a 32-core session must
     // not write 32 tiny files per round and re-read them as 32 tasks,
@@ -791,25 +798,12 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           val segRounds = seenIdxSegs.getOrElse(b, Nil)
           // all reads here are manifest-referenced => fail-closed: an
           // unreadable segment/shard means lost storage, and rebuilding
-          // filters or indexes from empty state silently loses dedup
-          def segsOf: Seq[SeenIndex] = segRounds.map(ir =>
-            SeenIndex.deserialize(
-              Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b))))
-          val bf = filterRounds.get(b) match {
-            case Some(fr) =>
-              BloomFilter.deserialize(
-                Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b)))
-            case None =>
-              // a bucket WITH history (index segments exist) but WITHOUT
-              // a bloom shard (a checkpoint whose older engine dropped
-              // the bucket on filter overflow) must NOT be recreated
-              // from an empty filter — a bloom missing old hashes would
-              // later classify seen URLs as definitely-new. Reseed it
-              // from the exact index instead.
-              val bf0 = new BloomFilter(shardBits, bloomK)
-              SeenIndex.merged(segsOf).hexIterator.foreach(bf0.put)
-              bf0
-          }
+          // filters or indexes from empty state silently loses dedup.
+          // A bucket without a shard has no segments either
+          // (requireShardPerIndexedBucket): its filter starts empty
+          val bf = filterRounds.get(b).fold(new BloomFilter(shardBits, bloomK))(fr =>
+            BloomFilter.deserialize(
+              Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b))))
           val deltaHashes = mutable.ArrayBuffer.empty[String]
           deltaRows.foreach { s =>
             bf.put(s.url_hash)
@@ -820,18 +814,14 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           // O(|delta|) bytes, not O(|seen|); segments fold into one on
           // the compactEvery cadence (the only round that rewrites the
           // bucket's index).
-          val newSegs =
-            if (segRounds.size + 1 >= idxMergeEvery) {
-              val merged = SeenIndex.merged(segsOf :+ SeenIndex.fromHex(deltaHashes))
-              Snapshots.writeBytesAt(Snapshots.seenIndexPathAt(root, r, b),
-                                     merged.serialize())
-              Seq(r)
-            } else {
-              Snapshots.writeBytesAt(Snapshots.seenIndexPathAt(root, r, b),
-                                     SeenIndex.fromHex(deltaHashes).serialize())
-              segRounds :+ r
-            }
-          (b, newSegs)
+          val delta = SeenIndex.fromHex(deltaHashes)
+          val merge = segRounds.size + 1 >= idxMergeEvery
+          val seg =
+            if (!merge) delta
+            else SeenIndex.merged(segRounds.map(ir => SeenIndex.deserialize(
+              Snapshots.requiredBytesAt(Snapshots.seenIndexPathAt(root, ir, b)))) :+ delta)
+          Snapshots.writeBytesAt(Snapshots.seenIndexPathAt(root, r, b), seg.serialize())
+          (b, if (merge) Seq(r) else segRounds :+ r)
         })
       // untouched buckets keep referencing their last-written round's
       // files (no copy-forward); every touched bucket moves to round r
@@ -844,37 +834,6 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     Await.result(hostF, Duration.Inf)
     val robotsPath = Await.result(robotsF, Duration.Inf)
     val (newFilterRounds, newSeenIndexSegs) = Await.result(filtersF, Duration.Inf)
-
-    // seen-table LSM compaction: deltas fold into a level-1 run every
-    // compactEvery rounds (reads only the window's deltas — O(window),
-    // not O(|seen|)); runs fold into the seen_full base only when
-    // compactEvery runs have accumulated, deduplicating by url_hash
-    // (latest round wins) so revocation re-fetches cannot leave
-    // duplicate rows in the table.
-    val deltaRounds = m.seenDeltaRounds :+ r
-    sc.setJobDescription(s"crawl r$r: seen compaction")
-    val (seenFullRound, seenRunRounds, seenDeltaRounds) =
-      if (deltaRounds.size >= cfg.compactEvery) {
-        if (m.seenRunRounds.size + 1 >= cfg.compactEvery) {
-          val basePaths =
-            if (m.seenFullRound >= 0) Seq(snaps.tablePath(m.seenFullRound, "seen_full"))
-            else Nil
-          val allPaths = basePaths ++
-            m.seenRunRounds.map(snaps.tablePath(_, "seen_run")) ++
-            deltaRounds.map(snaps.tablePath(_, "seen_delta"))
-          readTMulti[SeenEntry](allPaths)
-            .groupByKey(_.url_hash)
-            .reduceGroups((a, b) => if (newerSeen(a, b)) a else b)
-            .map(_._2)
-            .write.mode("overwrite").parquet(snaps.tablePath(r, "seen_full"))
-          (r, Seq.empty[Int], Seq.empty[Int])
-        } else {
-          readTMulti[SeenEntry](deltaRounds.map(snaps.tablePath(_, "seen_delta")))
-            .coalesce(statePar)
-            .write.mode("overwrite").parquet(snaps.tablePath(r, "seen_run"))
-          (m.seenFullRound, m.seenRunRounds :+ r, Seq.empty[Int])
-        }
-      } else (m.seenFullRound, m.seenRunRounds, deltaRounds)
 
     val selectedCnt = obsL(obsLog, "n")
     val okCnt = obsL(obsLog, "ok")
@@ -901,8 +860,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       tables = Map(
         "host_state" -> snaps.tablePath(r, "host_state"),
         "robots" -> robotsPath),
-      seenDeltaRounds = seenDeltaRounds, seenRunRounds = seenRunRounds,
-      seenFullRound = seenFullRound,
+      seenFullRound = m.seenFullRound,
       filterRounds = newFilterRounds, seenIndexSegs = newSeenIndexSegs,
       frontierSegs = newFrontierSegs,
       frontierCounts = newFrontierCounts, frontierPri0 = newFrontierPri0,
@@ -980,10 +938,11 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
     }
     val revokedHashes = revoked.map(_._1).toSet
 
-    // 1. exact seen table: compact minus the revoked rows, deduped by
-    // url_hash (latest round wins) — restores the unique-hash invariant
-    // immediately even if a prior revoke+reseed left duplicate rows
-    val seen = readTMulti[SeenEntry](snaps.seenPaths(m))
+    // 1. exact seen table: a new seen_full base, the table (base plus
+    // deltas) minus the revoked rows, deduped by url_hash (latest round
+    // wins) — restores the unique-hash invariant even if a prior
+    // revoke+reseed left duplicate rows
+    val seen = readT[SeenEntry](snaps.seenPaths(m): _*)
     seen.filter(!col("url_hash").isin(revokedHashes.toSeq: _*)).as[SeenEntry]
       .groupByKey(_.url_hash)
       .reduceGroups((a, b) => if (newerSeen(a, b)) a else b)
@@ -1076,8 +1035,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       tables = Map(
         "host_state" -> snaps.tablePath(r, "host_state"),
         "robots" -> m.tables("robots")),
-      seenDeltaRounds = Nil, seenRunRounds = Nil, seenFullRound = r,
-      filterRounds = m.filterRounds,
+      seenFullRound = r, filterRounds = m.filterRounds,
       seenIndexSegs = m.seenIndexSegs ++ updatedIdxBuckets,
       frontierSegs = frontierSegs,
       frontierCounts = frontierCounts, frontierPri0 = frontierPri0,
@@ -1227,7 +1185,7 @@ object CrawlScheduler {
   def fbucketOf(urlHashHex: String, nFb: Int): Int =
     (java.lang.Long.parseLong(urlHashHex.substring(0, 15), 16) % nFb).toInt
 
-  /** Latest-wins order for seen-table dedup at full compaction. */
+  /** Latest-wins order for the seen-table dedup of `revoke`. */
   def newerSeen(a: SeenEntry, b: SeenEntry): Boolean =
     if (a.first_round != b.first_round) a.first_round > b.first_round
     else a.status <= b.status

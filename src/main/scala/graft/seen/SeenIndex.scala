@@ -25,28 +25,16 @@ package graft.seen
   * object overhead when a task holds a whole bucket.
   */
 final class SeenIndex private (private val flat: Array[Byte]) {
-  import SeenIndex.W
+  import SeenIndex.{W, cmp}
 
   def size: Int = flat.length / W
-
-  private def cmpAt(idx: Int, key: Array[Byte]): Int = {
-    val base = idx * W
-    var i = 0
-    while (i < W) {
-      val a = flat(base + i) & 0xff
-      val b = key(i) & 0xff
-      if (a != b) return a - b
-      i += 1
-    }
-    0
-  }
 
   def containsBytes(key: Array[Byte]): Boolean = {
     var lo = 0
     var hi = size - 1
     while (lo <= hi) {
       val mid = (lo + hi) >>> 1
-      val c = cmpAt(mid, key)
+      val c = cmp(flat, mid * W, key, 0)
       if (c == 0) return true
       else if (c < 0) lo = mid + 1
       else hi = mid - 1
@@ -57,89 +45,81 @@ final class SeenIndex private (private val flat: Array[Byte]) {
   def contains(urlHashHex: String): Boolean =
     containsBytes(SeenIndex.hexToBytes(urlHashHex))
 
-  /** All member hashes as lowercase hex — lets a bucket's bloom shard
-    * be reseeded from the exact index (a checkpoint bucket with index
-    * segments but no bloom shard).
-    */
-  def hexIterator: Iterator[String] = (0 until size).iterator.map { i =>
-    val sb = new StringBuilder(2 * SeenIndex.W)
-    var j = 0
-    while (j < SeenIndex.W) {
-      val b = flat(i * SeenIndex.W + j) & 0xff
-      sb.append(Character.forDigit(b >> 4, 16))
-      sb.append(Character.forDigit(b & 0xf, 16))
-      j += 1
-    }
-    sb.toString
-  }
-
-  /** New index with `adds` inserted and `removes` deleted (both hex). */
-  def updated(adds: Iterable[String], removes: Iterable[String] = Nil): SeenIndex = {
-    val rm = removes.map(h => SeenIndex.hexKey(h)).toSet
-    val keep = (0 until size).iterator
-      .map(i => java.util.Arrays.copyOfRange(flat, i * W, i * W + W))
-      .filterNot(b => rm.contains(SeenIndex.wrap(b)))
-    val added = adds.iterator.map(SeenIndex.hexToBytes)
-    val all = (keep ++ added).map(SeenIndex.wrap).toArray.distinct.sorted
-    val out = new Array[Byte](all.length * W)
-    var i = 0
-    while (i < all.length) {
-      System.arraycopy(all(i).bytes, 0, out, i * W, W)
-      i += 1
-    }
-    new SeenIndex(out)
-  }
-
   def serialize(): Array[Byte] = flat
 }
 
 object SeenIndex {
   private[seen] val W = 32 // sha-256 bytes
 
-  /** Comparable wrapper so sorting/dedup work on byte keys. */
-  private[seen] final case class Key(bytes: Array[Byte]) extends Ordered[Key] {
-    override def compare(that: Key): Int = {
-      var i = 0
-      while (i < W) {
-        val c = (bytes(i) & 0xff) - (that.bytes(i) & 0xff)
-        if (c != 0) return c
-        i += 1
-      }
-      0
+  /** Unsigned order of the 32-byte keys at `a(ai)` and `b(bi)`. */
+  private def cmp(a: Array[Byte], ai: Int, b: Array[Byte], bi: Int): Int = {
+    var i = 0
+    while (i < W) {
+      val c = (a(ai + i) & 0xff) - (b(bi + i) & 0xff)
+      if (c != 0) return c
+      i += 1
     }
-    override def hashCode(): Int = java.util.Arrays.hashCode(bytes)
-    override def equals(o: Any): Boolean = o match {
-      case k: Key => java.util.Arrays.equals(bytes, k.bytes)
-      case _      => false
-    }
+    0
   }
-  private def wrap(b: Array[Byte]): Key = Key(b)
-  private def hexKey(hex: String): Key = Key(hexToBytes(hex))
 
   val empty: SeenIndex = new SeenIndex(Array.emptyByteArray)
 
-  /** Index holding exactly `hexes` (sorted, deduped). */
-  def fromHex(hexes: Iterable[String]): SeenIndex = empty.updated(hexes)
+  /** Index holding exactly `hexes`: fixed-width lowercase hex
+    * (`UrlCanon.sha256Hex`), whose string order is the unsigned byte
+    * order, so sorting the strings sorts the keys.
+    */
+  def fromHex(hexes: Iterable[String]): SeenIndex = {
+    val sorted = hexes.toArray.sorted
+    val out = new Array[Byte](sorted.length * W)
+    var n = 0
+    sorted.foreach { h =>
+      val k = hexToBytes(h)
+      val c = if (n == 0) 1 else cmp(k, 0, out, n - W)
+      require(c >= 0, s"not a fixed-width lowercase hex hash: $h")
+      if (c > 0) { System.arraycopy(k, 0, out, n, W); n += W }
+    }
+    new SeenIndex(java.util.Arrays.copyOf(out, n))
+  }
 
-  /** Merge of LSM-style delta segments minus `removes` — the cadenced
-    * compaction of the per-bucket index. Segments are individually
-    * sorted and (by crawl semantics) disjoint, so the merge is a
-    * concatenate-sort-dedup over exactly the surviving keys: O(total)
-    * bytes touched, independent of how many rounds the segments span.
+  /** Merge of LSM-style delta segments minus `removes`: a k-way merge of
+    * the sorted segments that writes each key once (equal heads drop
+    * together) unless it is removed. O(total keys × segments) byte
+    * compares, no per-key objects.
     */
   def merged(segments: Seq[SeenIndex], removes: Iterable[String] = Nil): SeenIndex = {
-    val rm = removes.map(hexKey).toSet
-    val all = segments.iterator.flatMap { s =>
-      (0 until s.size).iterator.map(i =>
-        Key(java.util.Arrays.copyOfRange(s.serialize(), i * W, i * W + W)))
-    }.filterNot(rm.contains).toArray.distinct.sorted
-    val out = new Array[Byte](all.length * W)
-    var i = 0
-    while (i < all.length) {
-      System.arraycopy(all(i).bytes, 0, out, i * W, W)
-      i += 1
+    val segs = segments.map(_.flat).filter(_.nonEmpty).toArray
+    val pos = new Array[Int](segs.length)
+    val rm = fromHex(removes).flat
+    var rp = 0
+    val out = new Array[Byte](segs.map(_.length).sum)
+    var n = 0
+    def minHead: Int = {
+      var min = -1
+      var i = 0
+      while (i < segs.length) {
+        if (pos(i) < segs(i).length &&
+            (min < 0 || cmp(segs(i), pos(i), segs(min), pos(min)) < 0)) min = i
+        i += 1
+      }
+      min
     }
-    new SeenIndex(out)
+    var min = minHead
+    while (min >= 0) {
+      val key = segs(min)
+      val at = pos(min)
+      var i = 0
+      while (i < segs.length) {
+        if (pos(i) < segs(i).length && cmp(segs(i), pos(i), key, at) == 0) pos(i) += W
+        i += 1
+      }
+      while (rp < rm.length && cmp(rm, rp, key, at) < 0) rp += W
+      if (rp >= rm.length || cmp(rm, rp, key, at) != 0) {
+        System.arraycopy(key, at, out, n, W)
+        n += W
+      }
+      min = minHead
+    }
+    new SeenIndex(java.util.Arrays.copyOf(out, n))
   }
 
   def hexToBytes(hex: String): Array[Byte] = {

@@ -15,8 +15,9 @@ import org.json4s.jackson.JsonMethods
   *
   * Layout:
   * {{{
-  *   <root>/r00003/{seen_delta,seen_full,docs,metrics,host_state,
-  *                  robots,fetch_log}/  (parquet data files)
+  *   <root>/r00003/{seen_delta,docs,metrics,host_state,robots,
+  *                  fetch_log}/                  (parquet data files)
+  *   <root>/r00004/seen_full/                    (a revocation's seen base)
   *   <root>/r00003/filters/bloom-0007.bin        (bloom shard per host bucket)
   *   <root>/r00003/filters/seen-0007.bin         (exact seen-index segment)
   *   <root>/r00003/frontier/fb-0007.bin          (frontier LSM segment)
@@ -24,10 +25,11 @@ import org.json4s.jackson.JsonMethods
   *   <root>/LATEST                               (atomic rename from .tmp)
   * }}}
   *
-  * Scale note: seen is stored as per-round deltas plus a periodic full
-  * compaction (`seenPaths` returns the minimal read set), so a resume
-  * never rewrites the accumulated 10^10-row seen table; filters are
-  * sharded by host_hash bucket, not by partition index, so a resume at a
+  * Scale note: the seen table is per-round deltas over a base that only
+  * an administrative revocation writes (`seenPaths`), so no crawl round
+  * ever rewrites the accumulated 10^10-row seen table — rounds read the
+  * per-bucket exact seen indexes, never this table; filters are sharded
+  * by host_hash bucket, not by partition index, so a resume at a
   * different parallelism reloads the same shards.
   */
 final class Snapshots(val root: String) {
@@ -46,19 +48,14 @@ final class Snapshots(val root: String) {
       "round" -> JInt(m.round),
       "parentRound" -> JInt(m.parentRound),
       "tables" -> JObject(m.tables.toList.map { case (k, v) => k -> JString(v) }),
-      "seenDeltaRounds" -> JArray(m.seenDeltaRounds.map(r => JInt(r)).toList),
-      // level-1 LSM runs of the seen table: each folds one compactEvery
-      // window of deltas; a level-2 merge into seen_full happens only
-      // when compactEvery runs have accumulated, so per-cadence write
-      // cost is O(window delta), not O(|seen|)
-      "seenRunRounds" -> JArray(m.seenRunRounds.map(r => JInt(r)).toList),
+      // the round of the last revocation's seen_full base (-1: none);
+      // every later round's seen_delta completes the table
       "seenFullRound" -> JInt(m.seenFullRound),
       // bucket -> round whose bloom shard is current (untouched shards
       // reference their last-written round's files; nothing is copied
-      // forward, so a round's commit cost is O(touched buckets)). A
-      // bucket with index segments but no entry here (a checkpoint an
-      // older engine wrote after a filter overflow) gets its shard
-      // reseeded from the exact index the next round it is touched
+      // forward, so a round's commit cost is O(touched buckets)). Every
+      // bucket with index segments has one: the pass that appends a
+      // bucket's segment writes its shard
       "filterRounds" -> JObject(m.filterRounds.toList.sortBy(_._1)
         .map { case (b, fr) => b.toString -> JInt(fr) }),
       // bucket -> LSM segment rounds of its exact seen index, oldest ->
@@ -103,7 +100,8 @@ final class Snapshots(val root: String) {
     // fail fast on checkpoints written by earlier engine versions
     // (pre-v3 manifests carried `buckets`/`seenIndexRounds` layouts;
     // v3 carried single-file `frontierRounds` and the pre-tombstone
-    // frontier file format): resuming them as empty state would
+    // frontier file format; v4 kept the seen table as folded
+    // `seenRunRounds` runs): resuming them as empty state would
     // silently re-crawl everything
     val v = (j \ "version").toOption.map(_.extract[Int]).getOrElse(1)
     if (v != Snapshots.ManifestVersion)
@@ -115,8 +113,6 @@ final class Snapshots(val root: String) {
       round = (j \ "round").extract[Int],
       parentRound = (j \ "parentRound").extract[Int],
       tables = (j \ "tables").extract[Map[String, String]],
-      seenDeltaRounds = (j \ "seenDeltaRounds").extract[Seq[Int]],
-      seenRunRounds = (j \ "seenRunRounds").extract[Seq[Int]],
       seenFullRound = (j \ "seenFullRound").extract[Int],
       filterRounds = (j \ "filterRounds").extract[Map[String, Int]]
         .map { case (b, fr) => b.toInt -> fr },
@@ -133,14 +129,20 @@ final class Snapshots(val root: String) {
     )
   }
 
-  /** Minimal parquet read set reconstructing the exact seen table at
-    * `m.round`: one optional compacted base + level-1 runs + deltas.
+  /** Parquet read set of the exact seen table at `m.round`: the last
+    * revocation's base, if any, plus the seen_delta of every round after
+    * it (every such round is a crawl round, and each writes one). A
+    * missing delta fails the read.
     */
   def seenPaths(m: Manifest): Seq[String] = {
     val base =
       if (m.seenFullRound >= 0) Seq(tablePath(m.seenFullRound, "seen_full")) else Nil
-    base ++ m.seenRunRounds.map(r => tablePath(r, "seen_run")) ++
-      m.seenDeltaRounds.map(r => tablePath(r, "seen_delta"))
+    base ++ (m.seenFullRound + 1 to m.round).map { r =>
+      val p = tablePath(r, "seen_delta")
+      if (!Files.exists(Paths.get(p)))
+        throw new IllegalStateException(s"seen table of round ${m.round} needs $p, which is missing")
+      p
+    }
   }
 
   def readBloomShard(round: Int, bucket: Int): Option[Array[Byte]] =
@@ -169,7 +171,7 @@ final class Snapshots(val root: String) {
   */
 object Snapshots {
   /** Manifest layout version; readManifest rejects anything else. */
-  val ManifestVersion = 4
+  val ManifestVersion = 5
 
   def bloomShardPathAt(root: String, round: Int, bucket: Int): String =
     f"$root/r$round%05d/filters/bloom-$bucket%04d.bin"
@@ -209,9 +211,7 @@ object Snapshots {
       round: Int,
       parentRound: Int,
       tables: Map[String, String],
-      seenDeltaRounds: Seq[Int], // rounds whose seen_delta must be unioned
-      seenRunRounds: Seq[Int], // level-1 LSM runs (each folds one delta window)
-      seenFullRound: Int, // -1 = none; else base compaction round
+      seenFullRound: Int, // -1 = none; else the last revocation's round
       filterRounds: Map[Int, Int], // bucket -> round of its bloom shard
       seenIndexSegs: Map[Int, Seq[Int]], // bucket -> index segment rounds
       frontierSegs: Map[Int, Seq[Int]], // frontier bucket -> segment rounds

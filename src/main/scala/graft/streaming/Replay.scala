@@ -1,12 +1,14 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.types.StructType
+
+import graft.util.TempDirs
 
 /** Deterministic event-log replay: turns a batch DataFrame into a file
   * stream whose micro-batch schedule is fixed, so a streaming operator's
@@ -38,12 +40,13 @@ object Replay {
     val batches = df.select(col(batchCol).cast("int")).distinct()
       .collect().map(_.getInt(0)).sorted
     Files.createDirectories(Paths.get(dir))
-    val tmpRoot = Files.createTempDirectory("replay-write-")
+    // staging for the per-batch writes, deleted once their parts moved
+    val staging = TempDirs.create("replay-write-")
     // fixed past base so re-created logs in the same JVM still order;
     // only RELATIVE order matters to the file source
     val base = 1700000000000L
-    batches.zipWithIndex.foreach { case (b, k) =>
-      val tmp = tmpRoot.resolve(s"b$k").toString
+    try batches.zipWithIndex.foreach { case (b, k) =>
+      val tmp = Paths.get(staging, s"b$k").toString
       df.filter(col(batchCol) === b).drop(batchCol)
         .coalesce(1).write.mode("overwrite").parquet(tmp)
       val listing = Files.list(Paths.get(tmp))
@@ -54,18 +57,19 @@ object Replay {
       val dst = Paths.get(dir, f"b$k%05d.parquet")
       Files.move(part, dst, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(dst, FileTime.fromMillis(base + k * 2000L))
-    }
+    } finally TempDirs.delete(staging)
     batches.length
   }
 
   /** Stream the log at `srcDir` through `transform` to completion
     * (append mode, one file per micro-batch, AvailableNow) and return
-    * the materialized result.
+    * the materialized result. Its output and checkpoint directories
+    * are deleted at JVM exit: the returned frame reads the output.
     */
   def run(spark: SparkSession, srcDir: String, schema: StructType)
          (transform: DataFrame => DataFrame): DataFrame = {
-    val outDir = Files.createTempDirectory("replay-out-").toString
-    val chkDir = Files.createTempDirectory("replay-chk-").toString
+    val outDir = TempDirs.create("replay-out-")
+    val chkDir = TempDirs.create("replay-chk-")
     val src = spark.readStream
       .schema(schema)
       .option("maxFilesPerTrigger", 1)

@@ -203,58 +203,52 @@ class CrawlSchedulerSpec extends SparkSuite {
         Snapshots.seenIndexPathAt(cfg.outDir, ir, b)))))
   }
 
-  test("a checkpoint bucket without a bloom shard reseeds it from the exact index on resume") {
-    // the shape an older engine left when a bucket's filter overflowed:
-    // index segments present, the bucket missing from filterRounds. The
-    // resumed crawl must equal an uninterrupted one, and the next round
-    // that touches the bucket must write it a complete bloom shard
-    import graft.seen.BloomFilter
+  test("a checkpoint bucket with index segments but no bloom shard fails the next round") {
+    // the pass that appends a bucket's index segment writes its bloom
+    // shard, so no engine writes this shape: a manifest holding it is
+    // damaged, and starting the bucket from an empty filter would later
+    // call its seen URLs definitely new
     val web = WebConfig(seed = 31, nHosts = 3, listPagesPerHost = 3,
                         detailsPerList = 6)
-    val cfgA = CrawlConfig(web = web, outDir = tmpDir("crawlnoshardA-"),
-                           maxRounds = 40, hostCapacity = 4.0, hostRefill = 4.0)
-    val cfgB = cfgA.copy(outDir = tmpDir("crawlnoshardB-"))
-    val lastA = new CrawlScheduler(spark, cfgA).run()
-    def logOf(s: Snapshots, last: Int) = spark.read
-      .schema(implicitly[org.apache.spark.sql.Encoder[FetchLogEntry]].schema)
-      .parquet(s.fetchLogPaths(last): _*)
-      .as[FetchLogEntry].collect().sortBy(e => (e.round, e.host_hash, e.seq)).toVector
-    def seenOf(s: Snapshots, last: Int) = spark.read
-      .schema(implicitly[org.apache.spark.sql.Encoder[SeenEntry]].schema)
-      .parquet(s.seenPaths(s.readManifest(last)): _*)
-      .as[SeenEntry].collect().map(e => e.url_hash -> e.status).toMap
-    val sa = new Snapshots(cfgA.outDir)
-    val logA = logOf(sa, lastA)
-
-    val schedB = new CrawlScheduler(spark, cfgB)
-    schedB.init()
-    schedB.runRound(1)
-    schedB.runRound(2)
-    val sb = new Snapshots(cfgB.outDir)
-    val m2 = sb.readManifest(2)
-    // a bucket with index segments that a later round touches again
-    val bucketOfRow = (e: FetchLogEntry) =>
-      CrawlScheduler.bucketOf(e.host_hash, cfgB.nBuckets)
-    val bucket = m2.seenIndexSegs.keys.toSeq.sorted
-      .find(b => logA.exists(e => e.round > 2 && bucketOfRow(e) == b))
-      .getOrElse(fail("no bucket with index segments is touched after round 2"))
+    val cfg = CrawlConfig(web = web, outDir = tmpDir("crawlnoshard-"),
+                          maxRounds = 40, hostCapacity = 4.0, hostRefill = 4.0)
+    val sched = new CrawlScheduler(spark, cfg)
+    sched.init()
+    sched.runRound(1)
+    sched.runRound(2)
+    val snaps = new Snapshots(cfg.outDir)
+    val m2 = snaps.readManifest(2)
+    val bucket = m2.seenIndexSegs.keys.toSeq.sorted.headOption
+      .getOrElse(fail("no bucket has index segments after round 2"))
     assert(m2.filterRounds.contains(bucket))
-    sb.writeManifest(m2.copy(filterRounds = m2.filterRounds - bucket))
+    snaps.writeManifest(m2.copy(filterRounds = m2.filterRounds - bucket))
 
-    val lastB = new CrawlScheduler(spark, cfgB).run() // fresh instance = new process
-    assert(lastA == lastB)
-    assert(logOf(sb, lastB) == logA)
-    assert(seenOf(sb, lastB) == seenOf(sa, lastA))
+    val e = intercept[IllegalStateException] {
+      new CrawlScheduler(spark, cfg).run() // fresh instance = new process
+    }
+    assert(e.getMessage.contains(s"bucket $bucket has seen-index segments but no bloom shard"),
+           e.getMessage)
+    assert(snaps.latestRound.contains(2), "the failed round committed a manifest")
+  }
 
-    val mEnd = sb.readManifest(lastB)
-    assert(mEnd.filterRounds.get(bucket).exists(_ > 2),
-           s"bucket $bucket never got its bloom shard back: ${mEnd.filterRounds}")
-    val bf = BloomFilter.deserialize(
-      sb.readBloomShard(mEnd.filterRounds(bucket), bucket).get)
-    val idx = seenIndexOf(cfgB, mEnd, bucket)
-    assert(idx.size > 0)
-    assert(idx.hexIterator.forall(bf.mightContain),
-           "the reseeded bloom shard misses hashes of the exact index")
+  test("a round writes its seen delta and no fold: no seen_run or seen_full, manifest v5") {
+    // at compactEvery = 2 the folded layout wrote a seen_run in round 1
+    // and a seen_full base in round 3
+    val cfg = CrawlConfig(web = WebConfig(seed = 11, nHosts = 3, listPagesPerHost = 3,
+                                          detailsPerList = 5),
+                          outDir = tmpDir("crawlnofold-"), maxRounds = 40,
+                          hostCapacity = 3.0, hostRefill = 3.0, compactEvery = 2)
+    val (oracle, snaps, last) = runBoth(cfg)
+    assert(last >= 6, s"the crawl ran only $last rounds")
+    val folds = (0 to last).flatMap(r => Seq("seen_run", "seen_full").map(snaps.tablePath(r, _)))
+      .filter(p => new java.io.File(p).exists)
+    assert(folds.isEmpty, s"a round folded the seen table: ${folds.mkString(", ")}")
+    (0 to last).foreach { r =>
+      val json = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(
+        java.nio.file.Paths.get(f"${cfg.outDir}/manifests/m-$r%05d.json")))
+      assert(json \ "version" == org.json4s.JInt(5), s"manifest $r: ${json \ "version"}")
+    }
+    assertMatch(oracle, snaps, last)
   }
 
   // one revocation scenario, shared by the exact-index test and the

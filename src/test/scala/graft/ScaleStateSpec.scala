@@ -180,13 +180,22 @@ class ScaleStateSpec extends SparkSuite {
     val out = tmpDir("scale-ver-")
     val snaps = new Snapshots(out)
     new java.io.File(s"$out/manifests").mkdirs()
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$out/manifests/m-00001.json"),
+    Seq(
       """{"version": 2, "round": 1, "parentRound": 0, "tables": {},
         |"seenDeltaRounds": [], "seenFullRound": -1, "buckets": {},
-        |"counters": {}, "done": false}""".stripMargin)
-    val e = intercept[IllegalStateException] { snaps.readManifest(1) }
-    assert(e.getMessage.contains("unsupported manifest version"))
+        |"counters": {}, "done": false}""".stripMargin,
+      // v4 kept the seen table as folded runs the v5 read set ignores
+      """{"version": 4, "round": 1, "parentRound": 0, "tables": {},
+        |"seenDeltaRounds": [1], "seenRunRounds": [0], "seenFullRound": -1,
+        |"filterRounds": {}, "seenIndexSegs": {}, "frontierSegs": {},
+        |"frontierCounts": {}, "frontierPri0": {},
+        |"counters": {}, "done": false}""".stripMargin
+    ).foreach { json =>
+      java.nio.file.Files.writeString(
+        java.nio.file.Paths.get(s"$out/manifests/m-00001.json"), json)
+      val e = intercept[IllegalStateException] { snaps.readManifest(1) }
+      assert(e.getMessage.contains("unsupported manifest version"), e.getMessage)
+    }
   }
 
   test("manifest-referenced state that cannot be read fails the round") {

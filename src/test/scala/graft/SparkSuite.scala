@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files, Path}
-
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,25 +19,8 @@ object SparkSuite {
     s
   }
 
-  private val tmpDirs = new java.util.concurrent.ConcurrentLinkedQueue[Path]
-
   /** A fresh temp directory, deleted with everything in it when the JVM exits. */
-  def tmpDir(prefix: String): String = {
-    val dir = Files.createTempDirectory(prefix)
-    tmpDirs.add(dir)
-    dir.toString
-  }
-
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    tmpDirs.forEach { dir =>
-      if (Files.exists(dir)) {
-        val paths = Files.walk(dir)
-        try paths.sorted(java.util.Comparator.reverseOrder[Path]())
-          .forEach(p => Files.deleteIfExists(p))
-        catch { case _: java.io.IOException => () } // best effort at exit
-        finally paths.close()
-      }
-    }, "graft-test-tmp-cleanup"))
+  def tmpDir(prefix: String): String = graft.util.TempDirs.create(prefix)
 }
 
 abstract class SparkSuite extends AnyFunSuite {

@@ -169,7 +169,7 @@ class SeenIndexSpec extends SparkSuite {
 
   test("exact membership: adds, removes, dedup, serde, vs a Set") {
     val hashes = (0L until 500L).map(hex)
-    val idx = SeenIndex.empty.updated(hashes ++ hashes.take(50)) // dups collapse
+    val idx = SeenIndex.fromHex(hashes ++ hashes.take(50)) // dups collapse
     assert(idx.size == 500)
     hashes.foreach(h => assert(idx.contains(h)))
     (500L until 600L).map(hex).foreach(h => assert(!idx.contains(h)))
@@ -177,12 +177,13 @@ class SeenIndexSpec extends SparkSuite {
     val rt = SeenIndex.deserialize(idx.serialize())
     assert(rt.size == 500 && hashes.forall(rt.contains))
     // removal
-    val removed = idx.updated(Nil, hashes.take(100))
+    val removed = SeenIndex.merged(Seq(idx), hashes.take(100))
     assert(removed.size == 400)
     hashes.take(100).foreach(h => assert(!removed.contains(h)))
     hashes.drop(100).foreach(h => assert(removed.contains(h)))
     // incremental update equals one-shot build
-    val inc = hashes.grouped(100).foldLeft(SeenIndex.empty)((a, g) => a.updated(g))
+    val inc = hashes.grouped(100).foldLeft(SeenIndex.empty)((a, g) =>
+      SeenIndex.merged(Seq(a, SeenIndex.fromHex(g))))
     assert(java.util.Arrays.equals(inc.serialize(), idx.serialize()))
   }
 
@@ -190,13 +191,13 @@ class SeenIndexSpec extends SparkSuite {
     val rng = new scala.util.Random(7)
     (0 until 20).foreach { _ =>
       // random delta segments of random sizes, possibly overlapping
-      val segs = Vector.fill(1 + rng.nextInt(5)) {
-        SeenIndex.fromHex((0 until rng.nextInt(80)).map(_ => hex(rng.nextInt(300).toLong)))
+      val segHexes = Vector.fill(1 + rng.nextInt(5)) {
+        (0 until rng.nextInt(80)).map(_ => hex(rng.nextInt(300).toLong))
       }
+      val segs = segHexes.map(SeenIndex.fromHex)
       val removes = (0 until rng.nextInt(20)).map(_ => hex(rng.nextInt(300).toLong))
       val got = SeenIndex.merged(segs, removes)
-      val model: Set[String] =
-        segs.flatMap(_.hexIterator).toSet -- removes.toSet
+      val model: Set[String] = segHexes.flatten.toSet -- removes.toSet
       assert(got.size == model.size)
       model.foreach(h => assert(got.contains(h)))
       removes.foreach(h => assert(!got.contains(h)))
@@ -206,6 +207,17 @@ class SeenIndexSpec extends SparkSuite {
       // probing segments individually equals probing the merge
       model.foreach(h => assert(segs.exists(_.contains(h))))
     }
+  }
+
+  test("merged skips empty segments and writes a key held by several segments once") {
+    val hs = (0L until 60L).map(hex)
+    val segHexes = Seq(hs.take(30), Nil, hs.slice(20, 50), hs.slice(10, 25), Nil, hs.drop(45))
+    val removes = Seq(hs(0), hs(22), hs(59), hex(1000L))
+    val model = segHexes.flatten.toSet -- removes
+    val got = SeenIndex.merged(segHexes.map(SeenIndex.fromHex), removes)
+    assert(got.size == model.size)
+    assert(java.util.Arrays.equals(got.serialize(), SeenIndex.fromHex(model).serialize()))
+    assert(SeenIndex.merged(Seq(SeenIndex.empty, SeenIndex.empty)).size == 0)
   }
 }
 
