@@ -488,6 +488,8 @@ object Bench {
     val nGroups = nNodes / groupLen
     val ccMaxRounds = 16 // generous O(log n): depth ~ e*ln(1000) ~ 19,
                          // alternations contract it in well under this
+    // each round's (edges, seconds) of the last timed repeat
+    var ccTrace = Seq.empty[graft.ops.ConnectedComponents.Round]
     val (ccSec, ccComponents, ccEdges, ccRounds, ccSteal) = {
       val s5 = session(cpus)
       try {
@@ -503,8 +505,10 @@ object Bench {
         // check: a repeat that converges in a different round count or
         // component count must fail loudly
         val (t, packed, stCc) = med3(timed {
-          val (comp, rounds) =
-            graft.ops.ConnectedComponents.componentsWithRounds(edges)
+          val (comp, trace) =
+            graft.ops.ConnectedComponents.componentsTraced(edges)
+          val rounds = trace.last.round
+          ccTrace = trace
           val sizes = comp.groupBy("component_id").count()
           val bad = sizes.filter(col("count") =!= groupLen).count()
           require(bad == 0, s"$bad components of wrong size")
@@ -627,6 +631,9 @@ object Bench {
         s""""cc_at_scale":{"nodes":$nNodes,"edges":$ccEdges,""" +
         s""""components":$ccComponents,"rounds":$ccRounds,""" +
         s""""sec":${fmt(ccSec, 2)},"steal_pct":${fmt(ccSteal, 2)}},""" +
+        s""""cc_at_scale_rounds":${ccTrace.map(r =>
+          s"""{"round":${r.round},"edges":${r.edges},"sec":${fmt(r.seconds, 3)}}""")
+          .mkString("[", ",", "]")},""" +
         s""""hygiene_at_scale":{"docs":$hygDocs,"bench_items":$nBench,""" +
         s""""decon_sec":${fmt(deconSec, 2)},"contaminated":$nContam,""" +
         s""""chunk_index_sec":${fmt(chunkSec, 2)},"chunks":$nChunks,""" +

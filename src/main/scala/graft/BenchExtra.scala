@@ -18,7 +18,7 @@ import graft.util.TempDirs
   *   queries  — noop-sink timings (median of reps) for headline queries
   *   dedup    — phase split of the dedup_at_scale leg
   *   ann      — phase split of the ann_at_scale leg
-  *   cc       — phase split of the cc_at_scale leg
+  *   cc       — the cc_at_scale leg, with each round's edges and seconds
   *   hygiene  — phase split of the hygiene_at_scale leg
   *   crawl    — one 32c bench-config crawl with per-job-description time
   */
@@ -260,37 +260,10 @@ object BenchExtra {
                   (col("id") - off + pmod(xxhash64(col("id"), lit(41L)), off))
                     .as("id_b"))
         timeIt("cc-full", reps = 3) {
-          val (comp, rounds) =
-            graft.ops.ConnectedComponents.componentsWithRounds(edges)
+          val (comp, trace) = graft.ops.ConnectedComponents.componentsTraced(edges)
           val n = comp.groupBy("component_id").count().count()
-          println(s"  components=$n rounds=$rounds")
-        }
-        s.stop()
-
-      case "ccphases" =>
-        val s = session(cpus)
-        val nNodes = 10010000L
-        val groupLen = 1000L
-        val off = pmod(col("id"), lit(groupLen))
-        val edges0 = s.range(0, nNodes)
-          .filter(off =!= 0)
-          .select(col("id").as("id_a"),
-                  (col("id") - off + pmod(xxhash64(col("id"), lit(41L)), off))
-                    .as("id_b"))
-        var e = timeIt("cc-init(norm+distinct+ckpt)", 1)(
-          edges0
-            .select(greatest(col("id_a"), col("id_b")).as("u"),
-                    least(col("id_a"), col("id_b")).as("v"))
-            .filter(col("u") =!= col("v"))
-            .distinct().localCheckpoint(true))
-        (1 to 6).foreach { i =>
-          val ls = timeIt(s"round$i-largeStar(+ckpt)", 1)(
-            graft.ops.ConnectedComponents.largeStar(e).localCheckpoint(true))
-          val ss = timeIt(s"round$i-smallStar(+ckpt)", 1)(
-            graft.ops.ConnectedComponents.smallStar(ls).localCheckpoint(true))
-          timeIt(s"round$i-signature", 1)(
-            ss.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head())
-          e = ss
+          println(s"  components=$n rounds=${trace.last.round}")
+          trace.foreach(r => println(f"    round ${r.round}%2d: edges ${r.edges}%9d, ${r.seconds}%7.3f s"))
         }
         s.stop()
 

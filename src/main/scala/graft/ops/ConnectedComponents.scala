@@ -1,10 +1,14 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.Partitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
-import graft.util.Pinned
+import graft.synthweb.SyntheticWeb.mix64
 
 /** Distributed connected components over an undirected edge list —
   * the composition piece that turns near-duplicate PAIRS (MinHash /
@@ -16,25 +20,54 @@ import graft.util.Pinned
   * "Connected Components in MapReduce and Beyond", SoCC'14) — the
   * published shuffle-based formulation that converges in O(log n)
   * rounds on real graphs, vs O(diameter) for naive label propagation.
-  * Each half-round is ONE hash-shuffle on the node id (a window
-  * partition), carrying only (long, long) edge rows; neighbor lists are
-  * never collected into arrays, so a hub node of any degree streams
-  * through `min().over(partitionBy)` without materializing its
-  * neighborhood in task memory.
+  * Edges are kept as (u, v) with u > v throughout.
+  *
+  * Layout. Only the entry is a Catalyst step: one projection that
+  * normalises every edge to (greatest, least) longs and drops
+  * self-loops (`greatest`/`least` skip nulls, so an edge with a null id
+  * becomes a self-loop and drops out). From there the edge set is a
+  * packed block per partition — one `Array[Long]` holding (u, v) at
+  * (2i, 2i + 1), sorted and distinct, every u in the partition that a
+  * hash of u modulo `spark.sql.shuffle.partitions` names. Every shuffle
+  * carries (block index, packed pairs) records, plain `Int` and
+  * `Array[Long]`, which Spark serialises with Kryo; no boxed pair and no
+  * per-key collection is built, and the passes generate no classes
+  * (only the entry projection and the result frame's row conversion
+  * do).
+  *
+  * A round, one Spark job:
+  *   - large-star: a node x's neighbourhood minimum m(x) is the least of
+  *     x and its smaller neighbours, which are the v's of x's edges as
+  *     u, so the min table of a block is local; x's strictly larger
+  *     neighbours are the u's of edges where x is v, so the edges are
+  *     shuffled by v, zipped with the min table of their block and emit
+  *     (u, m(v)) — a node absent from the table has no smaller
+  *     neighbour, m = itself;
+  *   - small-star: the large-star output, shuffled by u, is grouped in
+  *     its partition: every u connects its smaller neighbours and itself
+  *     to the least of them;
+  *   - closing dedup: the small-star output, shuffled by its new u, is
+  *     sorted and its duplicates dropped — the next round's blocks;
+  *   - the job that materialises the blocks as an eager local checkpoint
+  *     also returns their count and the xor of `xxhash64(u, v)`; the
+  *     loop stops when both equal the previous round's, so no separate
+  *     signature job runs. The previous round's blocks are freed then;
+  *     the last round's stay pinned as the rows the result reads.
+  *
+  * Memory bound. A task holds one partition's edge block (16 bytes an
+  * edge; the small-star output before its dedup is up to twice the
+  * edges) plus a primitive open-addressing map of the same order (min
+  * per node, at most 0.75 full), and the per-target buffers of what it
+  * emits. None of it spills: the partition count must be large enough
+  * that a block fits a task's share of the heap and one Java array
+  * (2^31 longs). Nothing here reaches `ops.cc.spill_mb`.
   *
   * Scale notes:
-  *   - per round: 2 shuffles of the current edge set (skinny 16-byte
-  *     rows) + a distinct; lineage is truncated every round with an
-  *     eager `localCheckpoint` so the iterative plan never re-executes
-  *     from the source (on a multi-executor cluster prefer
-  *     `spark.sparkContext.setCheckpointDir` + `checkpoint()` for
-  *     fault-tolerant truncation — `localCheckpoint` pins blocks to
-  *     executors and does not survive executor loss). Each round frees
-  *     the previous round's checkpoint through its RDD (see
-  *     [[graft.util.Pinned]]), so at most one round's edges stay held;
-  *   - convergence is detected by an order-independent signature
-  *     (count + xor of xxhash64(u,v)) instead of a full diff — one
-  *     cheap aggregate per round;
+  *   - per round: three shuffles of the current edge set (16 bytes an
+  *     edge) and one job; lineage is cut every round by the local
+  *     checkpoint, so the iteration never re-executes from the source.
+  *     `localCheckpoint` pins blocks to executors and does not survive
+  *     executor loss;
   *   - the result maps every node that appears in an edge to
   *     component_id = MIN node id of its component (deterministic
   *     canonical representative); isolated nodes never enter the edge
@@ -43,90 +76,14 @@ import graft.util.Pinned
   */
 object ConnectedComponents {
 
-  /** One large-star round: every node connects its strictly-larger
-    * neighbors to the minimum of its neighborhood (including itself).
-    *
-    * REQUIRES the u > v invariant on the input (componentsWithRounds
-    * normalizes round 0 and every round preserves it). Under that
-    * invariant the whole star collapses to one aggregation plus one
-    * equi-join, with no symmetrized double-width window sort:
-    *
-    *   - a node x's neighborhood minimum is m(x) = least(x, min of its
-    *     SMALLER neighbors) — larger neighbors can never be the min —
-    *     and x's smaller neighbors are exactly the v's of edges where
-    *     x is u, so `groupBy(u).min(v)` (map-side partial aggregation)
-    *     computes every m;
-    *   - x's strictly-larger neighbors are exactly the u's of edges
-    *     where x is v, so the star's emissions are one row (u, m(v))
-    *     per input edge — the join of e (keyed on v) against the min
-    *     table. A node absent from the min table has no smaller
-    *     neighbor: m = itself.
-    *
-    * Output keeps u > v (u > x >= m(x)) and MAY contain duplicate rows
-    * — two edges (u, x1), (u, x2) can emit the same (u, m) — which the
-    * round's closing distinct (in [[smallStar]]) removes; duplicates
-    * never affect the min aggregations in between. The shuffled-hash
-    * hint avoids sorting both sides: the min table is the bounded build
-    * side (one row per distinct u).
+  /** One round of [[componentsTraced]]: the edges its closing dedup left
+    * and its wall seconds. Round 0 is the entry (normalise, dedup).
     */
-  private[graft] def largeStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy("u").agg(min("v").as("mv"))
-    e.join(mins.select(col("u").as("x"), col("mv")).hint("shuffle_hash"),
-           col("v") === col("x"), "left")
-      .select(col("u"),
-              least(col("v"), coalesce(col("mv"), col("v"))).as("v2"))
-      .filter(col("u") =!= col("v2"))
-      .select(col("u"), col("v2").as("v"))
-  }
+  final case class Round(round: Int, edges: Long, seconds: Double)
 
-  /** One small-star round over edges with the u > v invariant: every
-    * node connects its smaller neighbors AND itself to the minimum of
-    * that set. The two emissions per row ((v, m) and (u, m)) ride ONE
-    * window pass via a generator — the former union of two projections
-    * re-executed the whole exchange+sort+window subtree per branch.
-    * Closes the round with the canonicalizing dedup, keyed so the NEXT
-    * round reuses its exchange (see [[roundDedup]]).
-    */
-  private[graft] def smallStar(e: DataFrame): DataFrame = {
-    val withM = e.withColumn(
-      "m", least(col("u"), min(col("v")).over(Window.partitionBy("u"))))
-    roundDedup(
-      withM.select(explode(array(col("v"), col("u"))).as("u2"), col("m"))
-        .filter(col("u2") =!= col("m"))
-        .select(col("u2").as("u"), col("m").as("v")))
-  }
-
-  /** The round-closing (u, v) dedup, partitioned by `u` ALONE: a
-    * hash(u) layout co-locates equal (u, v) rows just as well as
-    * hash(u, v), so the dedup aggregate runs exchange-free on top of
-    * the explicit repartition — and, because `localCheckpoint`
-    * preserves the materialized partitioning, the NEXT round's
-    * `groupBy("u").min("v")` (in [[largeStar]]) needs NO exchange
-    * either: one full-edge-set shuffle per round is removed outright
-    * (guide §2.4 — two operations keyed the same way share one
-    * exchange). The explicit partition count pins plain
-    * HashPartitioning (AQE-coalesced output would still be valid but
-    * is harder to prove preserved through the checkpoint).
-    */
-  private def roundDedup(d: DataFrame): DataFrame = {
-    val p = d.sparkSession.sessionState.conf.numShufflePartitions
-    d.repartition(p, col("u")).dropDuplicates("u", "v")
-  }
-
-  /** The partition count [[roundDedup]] pinned, for the matching
-    * checkpoint claim.
-    */
-  private def dedupPartitions(d: DataFrame): Int =
-    d.sparkSession.sessionState.conf.numShufflePartitions
-
-  /** Eager lineage cut, pinned, that keeps the hash(u) layout [[roundDedup]]
-    * just established — plain `localCheckpoint` drops it under AQE
-    * (see [[org.apache.spark.sql.GraftCheckpoint]]), which would
-    * re-introduce the exchange this round structure removes.
-    */
-  private def checkpointKeyedU(d: DataFrame): Pinned =
-    Pinned.of(org.apache.spark.sql.GraftCheckpoint
-      .localCheckpointKeepHash(d, Seq("u"), dedupPartitions(d)))
+  private val ResultSchema = StructType(Seq(
+    StructField("id", LongType, nullable = false),
+    StructField("component_id", LongType, nullable = false)))
 
   /** Connected components of the undirected graph given by
     * `edges(idA, idB)`. Returns (id, component_id) for every distinct
@@ -149,40 +106,352 @@ object ConnectedComponents {
   def componentsWithRounds(edges: DataFrame, idA: String = "id_a",
                            idB: String = "id_b", maxIter: Int = 50)
       : (DataFrame, Int) = {
-    var e = checkpointKeyedU(roundDedup(edges
+    val (df, rounds) = componentsTraced(edges, idA, idB, maxIter)
+    (df, rounds.last.round)
+  }
+
+  /** [[components]] plus one [[Round]] per round, the entry first. */
+  def componentsTraced(edges: DataFrame, idA: String = "id_a",
+                       idB: String = "id_b", maxIter: Int = 50)
+      : (DataFrame, Seq[Round]) = {
+    val spark = edges.sparkSession
+    val p = spark.sessionState.conf.numShufflePartitions
+    val rounds = Seq.newBuilder[Round]
+    /** A round's blocks, pinned, and their signature; records the round. */
+    def pinRound(round: Int)(blocks: => RDD[Array[Long]]): (RDD[Array[Long]], (Long, Long)) = {
+      val t0 = System.nanoTime()
+      val b = blocks
+      val sig = pin(b)
+      rounds += Round(round, sig._1, (System.nanoTime() - t0) / 1e9)
+      (b, sig)
+    }
+
+    val norm = edges
       .select(greatest(col(idA).cast("long"), col(idB).cast("long")).as("u"),
               least(col(idA).cast("long"), col(idB).cast("long")).as("v"))
-      .filter(col("u") =!= col("v"))))
+      .filter(col("u") =!= col("v"))
+    var (e, sig) = pinRound(0)(dedup(norm.queryExecution.toRdd.mapPartitions { rows =>
+      val out = new Scatter(p)
+      rows.foreach(r => out.add(r.getLong(0), r.getLong(1), blockOf(r.getLong(0), p)))
+      out.records
+    }, p))
+    try {
+      var converged = sig._1 == 0L
+      var iter = 0
+      while (!converged) {
+        iter += 1
+        require(iter <= maxIter, s"connected components did not converge in $maxIter rounds")
+        val prev = e
+        val (next, nextSig) = pinRound(iter)(dedup(smallStar(largeStar(prev, p), p), p))
+        converged = nextSig == sig
+        e = next
+        sig = nextSig
+        // the previous round's edges are read by nothing from here on
+        prev.unpersist(blocking = false)
+      }
+    } catch {
+      case t: Throwable => e.unpersist(blocking = false); throw t
+    }
+    (spark.createDataFrame(result(e, p), ResultSchema), rounds.result())
+  }
 
-    // XOR fold: order-independent, overflow-free (ANSI-safe).
-    def signature(d: DataFrame): (Long, Long) = {
-      val r = d.agg(count(lit(1)), bit_xor(xxhash64(col("u"), col("v")))).head()
-      (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
+  /** Large-star over the blocks: every edge (u, v), shuffled to v's
+    * block, emits (u, m(v)) toward u's block. Output keeps u > v
+    * (u > v >= m(v)) and may repeat a pair: two edges (u, x1), (u, x2)
+    * can emit the same (u, m), which the round's closing dedup removes;
+    * repeats never change the mins in between.
+    */
+  private def largeStar(e: RDD[Array[Long]], p: Int): RDD[Array[Long]] = {
+    val byV = gather(e.mapPartitions(_.flatMap { b =>
+      val out = new Scatter(p)
+      forPairs(b)((u, v) => out.add(u, v, blockOf(v, p)))
+      out.records
+    }), p)
+    gather(e.zipPartitions(byV) { (own, shuffled) =>
+      val mins = minPerU(own.next())
+      val out = new Scatter(p)
+      forPairs(shuffled.next())((u, v) => out.add(u, mins.getOrElse(v, v), blockOf(u, p)))
+      out.records
+    }, p)
+  }
+
+  /** Small-star over pairs gathered by u: every u connects its smaller
+    * neighbours and itself to the least of them, m(u) — one pair (v, m)
+    * per neighbour v other than m, and (u, m). Each emission goes toward
+    * its first id's block; output keeps u > v.
+    */
+  private def smallStar(large: RDD[Array[Long]], p: Int): RDD[(Int, Array[Long])] =
+    large.mapPartitions(_.flatMap { b =>
+      val mins = minPerU(b)
+      val out = new Scatter(p)
+      forPairs(b) { (u, v) =>
+        val m = mins.getOrElse(u, u)
+        if (v != m) out.add(v, m, blockOf(v, p))
+      }
+      mins.foreach((u, m) => out.add(u, m, blockOf(u, p)))
+      out.records
+    })
+
+  /** The round-closing shuffle: each record's pairs to their block,
+    * where they are sorted and deduplicated — the next round's blocks.
+    */
+  private def dedup(records: RDD[(Int, Array[Long])], p: Int): RDD[Array[Long]] =
+    gather(records, p).map { b =>
+      val n = sortPairs(b)
+      var w = 0
+      var i = 0
+      while (i < n) {
+        if (w == 0 || b(2 * w - 2) != b(2 * i) || b(2 * w - 1) != b(2 * i + 1)) {
+          b(2 * w) = b(2 * i)
+          b(2 * w + 1) = b(2 * i + 1)
+          w += 1
+        }
+        i += 1
+      }
+      java.util.Arrays.copyOf(b, 2 * w)
     }
 
-    var sig = signature(e.df)
-    var converged = sig._1 == 0L
-    var iter = 0
-    while (!converged) {
-      iter += 1
-      require(iter <= maxIter, s"connected components did not converge in $maxIter rounds")
-      val prev = e
-      e = checkpointKeyedU(smallStar(largeStar(e.df)))
-      val next = signature(e.df)
-      converged = next == sig
-      sig = next
-      // the previous round's edges are read by nothing from here on; the
-      // last round's stay pinned as the result's rows
-      prev.release()
+  /** Pins `blocks` as an eager local checkpoint; the job that
+    * materialises them returns (edge count, xor of xxhash64(u, v)), the
+    * value Spark's `bit_xor(xxhash64(u, v))` gives.
+    */
+  private def pin(blocks: RDD[Array[Long]]): (Long, Long) = {
+    blocks.localCheckpoint()
+    try {
+      blocks.sparkContext.runJob(blocks, (it: Iterator[Array[Long]]) => {
+        var n = 0L
+        var x = 0L
+        it.foreach(b => forPairs(b) { (u, v) =>
+          n += 1
+          x ^= XXH64.hashLong(v, XXH64.hashLong(u, 42L))
+        })
+        (n, x)
+      }).foldLeft((0L, 0L)) { case ((n, x), (bn, bx)) => (n + bn, x ^ bx) }
+    } catch {
+      case t: Throwable => blocks.unpersist(blocking = false); throw t
+    }
+  }
+
+  /** The result's rows: (u, m(u)) for every u of a block — at the
+    * fixpoint every edge is a direct (node -> root) pointer, so m(u) is
+    * u's root — and (v, v) for every v that is no u: the roots, which
+    * travel to their own block to be told apart from the u's there.
+    */
+  private def result(e: RDD[Array[Long]], p: Int): RDD[Row] = {
+    val vs = gather(e.mapPartitions(_.flatMap { b =>
+      val out = new Scatter(p)
+      distinctSorted(Array.tabulate(b.length / 2)(i => b(2 * i + 1)))
+        .foreach(v => out.add(v, blockOf(v, p)))
+      out.records
+    }), p)
+    e.zipPartitions(vs) { (own, shuffled) =>
+      val b = own.next()
+      val n = b.length / 2
+      // the block's u's are sorted, so one forward pointer tells a v
+      // that is a u from one that is not
+      var j = 0
+      Iterator.range(0, n).filter(i => i == 0 || b(2 * i) != b(2 * i - 2))
+        .map(i => Row(b(2 * i), b(2 * i + 1))) ++
+        distinctSorted(shuffled.next()).iterator.filter { v =>
+          while (j < n && b(2 * j) < v) j += 1
+          !(j < n && b(2 * j) == v)
+        }.map(v => Row(v, v))
+    }
+  }
+
+  /** The block a node id's edges live in. */
+  private def blockOf(x: Long, p: Int): Int = java.lang.Math.floorMod(mix64(x), p.toLong).toInt
+
+  private def forPairs(b: Array[Long])(f: (Long, Long) => Unit): Unit = {
+    var i = 0
+    while (i < b.length) { f(b(i), b(i + 1)); i += 2 }
+  }
+
+  /** The sorted distinct values of `xs`, sorted in place. */
+  private def distinctSorted(xs: Array[Long]): Array[Long] = {
+    java.util.Arrays.sort(xs)
+    var w = 0
+    var i = 0
+    while (i < xs.length) {
+      if (w == 0 || xs(w - 1) != xs(i)) { xs(w) = xs(i); w += 1 }
+      i += 1
+    }
+    java.util.Arrays.copyOf(xs, w)
+  }
+
+  /** The least v of every u of the packed pairs `b`. */
+  private def minPerU(b: Array[Long]): LongMinMap = {
+    val m = new LongMinMap(b.length / 2)
+    forPairs(b)(m.update)
+    m
+  }
+
+  /** A shuffle of (block index, packed pairs) records: one block per
+    * partition, every record of it concatenated.
+    */
+  private def gather(records: RDD[(Int, Array[Long])], p: Int): RDD[Array[Long]] =
+    records.partitionBy(new ByBlock(p)).mapPartitions { it =>
+      val parts = it.map(_._2).toArray
+      val out = new Array[Long](parts.iterator.map(_.length).sum)
+      var at = 0
+      parts.foreach { a => System.arraycopy(a, 0, out, at, a.length); at += a.length }
+      Iterator.single(out)
     }
 
-    // At the fixpoint every edge is a direct (node -> root) pointer and
-    // every root appears only on the v side.
-    val last = e.df
-    (last.select(col("u").as("id"), col("v").as("component_id"))
-       .union(last.select(col("v").as("id"), col("v").as("component_id")))
-       .groupBy("id").agg(min("component_id").as("component_id")),
-     iter)
+  /** Routes a record to the block its key names. */
+  private final class ByBlock(val numPartitions: Int) extends Partitioner {
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
+  }
+
+  /** Packed longs on their way to a shuffle, one buffer per block. */
+  private final class Scatter(p: Int) {
+    private val bufs = new Array[Array[Long]](p)
+    private val used = new Array[Int](p)
+
+    /** Room for `k` more longs in `block`'s buffer; its fill before them. */
+    private def room(block: Int, k: Int): Int = {
+      val n = used(block)
+      if (bufs(block) == null) bufs(block) = new Array[Long](64)
+      else if (n + k > bufs(block).length) bufs(block) = java.util.Arrays.copyOf(bufs(block), n * 2)
+      used(block) = n + k
+      n
+    }
+
+    def add(x: Long, block: Int): Unit = {
+      val n = room(block, 1)
+      bufs(block)(n) = x
+    }
+
+    def add(u: Long, v: Long, block: Int): Unit = {
+      val n = room(block, 2)
+      bufs(block)(n) = u
+      bufs(block)(n + 1) = v
+    }
+
+    /** (block, packed longs) of every block that received one. */
+    def records: Iterator[(Int, Array[Long])] =
+      Iterator.range(0, p).filter(used(_) > 0).map { i =>
+        val a = java.util.Arrays.copyOf(bufs(i), used(i))
+        bufs(i) = null
+        (i, a)
+      }
+  }
+
+  /** Long keys to the least long value seen with each: open addressing
+    * with linear probing over primitive arrays, at most 0.75 full.
+    */
+  private final class LongMinMap(expected: Int) {
+    private val bits = math.max(4, 64 - java.lang.Long.numberOfLeadingZeros(
+      math.max(1L, expected.toLong * 4 / 3)))
+    private val mask = (1 << bits) - 1
+    private val keys = new Array[Long](1 << bits)
+    private val vals = new Array[Long](1 << bits)
+    private val used = new Array[Boolean](1 << bits)
+
+    // the top bits: a block's keys share their hash's residue modulo the
+    // block count, which the low bits would carry
+    private def slot(k: Long): Int = {
+      var i = (mix64(k) >>> (64 - bits)).toInt
+      while (used(i) && keys(i) != k) i = (i + 1) & mask
+      i
+    }
+
+    def update(k: Long, v: Long): Unit = {
+      val i = slot(k)
+      if (!used(i)) { used(i) = true; keys(i) = k; vals(i) = v }
+      else if (v < vals(i)) vals(i) = v
+    }
+
+    def getOrElse(k: Long, default: Long): Long = {
+      val i = slot(k)
+      if (used(i)) vals(i) else default
+    }
+
+    def foreach(f: (Long, Long) => Unit): Unit = {
+      var i = 0
+      while (i < used.length) { if (used(i)) f(keys(i), vals(i)); i += 1 }
+    }
+  }
+
+  /** Sorts the packed pairs of `a` by (u, v) in place; returns the pair
+    * count. Three-way quicksort (a run of equal pairs, as a hub's
+    * repeated (u, m) emissions make, is one partition step), heapsort
+    * below a depth limit.
+    */
+  private[ops] def sortPairs(a: Array[Long]): Int = {
+    val n = a.length / 2
+    if (n > 1) quick(a, 0, n - 1, 2 * (32 - Integer.numberOfLeadingZeros(n)))
+    n
+  }
+
+  private def cmp(a: Array[Long], i: Int, u: Long, v: Long): Int = {
+    val c = java.lang.Long.compare(a(2 * i), u)
+    if (c != 0) c else java.lang.Long.compare(a(2 * i + 1), v)
+  }
+
+  private def swap(a: Array[Long], i: Int, j: Int): Unit = {
+    val (u, v) = (a(2 * i), a(2 * i + 1))
+    a(2 * i) = a(2 * j); a(2 * i + 1) = a(2 * j + 1)
+    a(2 * j) = u; a(2 * j + 1) = v
+  }
+
+  private def quick(a: Array[Long], from: Int, to: Int, maxDepth: Int): Unit = {
+    var (lo, hi, depth) = (from, to, maxDepth)
+    while (hi - lo >= 16 && depth > 0) {
+      // median of three as the pivot
+      val mid = (lo + hi) >>> 1
+      if (cmp(a, mid, a(2 * lo), a(2 * lo + 1)) < 0) swap(a, mid, lo)
+      if (cmp(a, hi, a(2 * lo), a(2 * lo + 1)) < 0) swap(a, hi, lo)
+      if (cmp(a, hi, a(2 * mid), a(2 * mid + 1)) < 0) swap(a, hi, mid)
+      val (pu, pv) = (a(2 * mid), a(2 * mid + 1))
+      var (lt, i, gt) = (lo, lo, hi)
+      while (i <= gt) {
+        val c = cmp(a, i, pu, pv)
+        if (c < 0) { swap(a, lt, i); lt += 1; i += 1 }
+        else if (c > 0) { swap(a, i, gt); gt -= 1 }
+        else i += 1
+      }
+      // recurse into the smaller side, loop on the larger
+      depth -= 1
+      if (lt - lo < hi - gt) { quick(a, lo, lt - 1, depth); lo = gt + 1 }
+      else { quick(a, gt + 1, hi, depth); hi = lt - 1 }
+    }
+    if (hi - lo < 16) insertion(a, lo, hi) else heap(a, lo, hi)
+  }
+
+  private def insertion(a: Array[Long], lo: Int, hi: Int): Unit = {
+    var i = lo + 1
+    while (i <= hi) {
+      val (u, v) = (a(2 * i), a(2 * i + 1))
+      var j = i - 1
+      while (j >= lo && cmp(a, j, u, v) > 0) {
+        a(2 * j + 2) = a(2 * j); a(2 * j + 3) = a(2 * j + 1)
+        j -= 1
+      }
+      a(2 * j + 2) = u; a(2 * j + 3) = v
+      i += 1
+    }
+  }
+
+  private def heap(a: Array[Long], lo: Int, hi: Int): Unit = {
+    val n = hi - lo + 1
+    def sift(root0: Int, size: Int): Unit = {
+      var root = root0
+      var child = 2 * root + 1
+      while (child < size) {
+        if (child + 1 < size &&
+            cmp(a, lo + child + 1, a(2 * (lo + child)), a(2 * (lo + child) + 1)) > 0) child += 1
+        if (cmp(a, lo + child, a(2 * (lo + root)), a(2 * (lo + root) + 1)) > 0) {
+          swap(a, lo + root, lo + child)
+          root = child
+          child = 2 * root + 1
+        } else child = size
+      }
+    }
+    var i = n / 2 - 1
+    while (i >= 0) { sift(i, n); i -= 1 }
+    var end = n - 1
+    while (end > 0) { swap(a, lo, lo + end); sift(0, end); end -= 1 }
   }
 
   /** Near-dup cluster table: components of the pair graph plus the

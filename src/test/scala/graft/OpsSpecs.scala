@@ -1560,6 +1560,69 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(cc.as[(Long, Long)].collect().toMap == ufComponents(edges))
   }
 
+  test("null ids on either side or both yield no rows, as greatest/least make them") {
+    // greatest and least skip nulls, so a null id turns its edge into a
+    // self-loop, which drops out
+    val nulls = Seq[(Option[Long], Option[Long])](
+      (Some(1L), None), (None, Some(2L)), (None, None))
+    assert(ConnectedComponents.components(nulls.toDF("id_a", "id_b")).count() == 0)
+    val mixed = nulls ++ Seq((Some(3L), Some(4L)), (Some(4L), None), (Some(5L), Some(3L)))
+    val got = ConnectedComponents.components(mixed.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == ufComponents(Seq((3L, 4L), (5L, 3L))), s"got=$got")
+  }
+
+  test("negative ids, Long.MinValue and Long.MaxValue") {
+    check(Seq((Long.MinValue, Long.MaxValue), (-5L, Long.MinValue), (-1L, 0L),
+              (0L, Long.MaxValue), (-3L, -4L), (-4L, -7L), (Long.MaxValue - 1, -7L),
+              (Long.MinValue + 1, Long.MinValue + 2)))
+  }
+
+  test("INT and STRING id columns cast to long") {
+    val ints = Seq((1, 2), (2, 3), (10, 11), (-6, 10), (7, 7))
+    val got = ConnectedComponents.components(ints.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(got == ufComponents(Seq((1L, 2L), (2L, 3L), (10L, 11L), (-6L, 10L))))
+    val strs = Seq(("1", "2"), ("2", "3"), ("10", "11"), ("-6", "10"), ("7", "7"))
+    val fromStrings = ConnectedComponents.components(strs.toDF("id_a", "id_b"))
+      .as[(Long, Long)].collect().toMap
+    assert(fromStrings == got)
+  }
+
+  test("one hub node with 10,000 neighbours") {
+    check((0L to 10000L).filter(_ != 5000L).map(i => (5000L, i)) ++
+            Seq((20000L, 20001L), (20001L, 3L)))
+  }
+
+  test("componentsTraced: the entry then one record per round, with each round's edges") {
+    // two paths and a duplicate, reversed and self edge: the entry keeps
+    // 60 + 20 distinct edges; at the fixpoint every non-root node has one
+    val edges = (0L until 60L).map(i => (i, i + 1)) ++ (100L until 120L).map(i => (i + 1, i)) ++
+      Seq((5L, 6L), (6L, 5L), (7L, 7L))
+    val (cc, trace) = ConnectedComponents.componentsTraced(edges.toDF("id_a", "id_b"))
+    val (_, rounds) = ConnectedComponents.componentsWithRounds(edges.toDF("id_a", "id_b"))
+    assert(trace.map(_.round) == (0 to rounds), s"trace rounds ${trace.map(_.round)}")
+    assert(trace.head.edges == 80L && trace.last.edges == 61L + 21L - 2L)
+    assert(trace.forall(_.seconds > 0))
+    assert(cc.as[(Long, Long)].collect().toMap == ufComponents(edges))
+  }
+
+  test("a repeated call compiles no generated classes and runs at most rounds + 3 jobs") {
+    val edges = ((0L until 255L).map(i => (i, i + 1)) ++
+                   (1000L until 1040L).map(i => (1000L, i))).toDF("id_a", "id_b")
+    def call(): (Array[(Long, Long)], Int) = {
+      val (cc, rounds) = ConnectedComponents.componentsWithRounds(edges)
+      (cc.as[(Long, Long)].collect(), rounds)
+    }
+    val (want, _) = call()
+    var got: (Array[(Long, Long)], Int) = null
+    val counted = SteadyIngestPair.count(spark) { got = call() }
+    val (rows, rounds) = got
+    assert(rows.toMap == want.toMap && rounds == 9, s"rounds: $rounds")
+    assert(counted.compiles == 0, s"a repeated call compiled ${counted.compiles} classes")
+    assert(counted.jobs <= rounds + 3, s"$rounds rounds ran ${counted.jobs} jobs")
+  }
+
   test("clusters: size and canonical keep flag") {
     val pairs = Seq((10L, 11L), (11L, 12L), (20L, 21L)).toDF("id_a", "id_b")
     val got = ConnectedComponents.clusters(pairs)
@@ -1720,25 +1783,29 @@ class ComposeOpsSpec extends SparkSuite {
   }
 
 
+  /** Independent sequential recomputation of PageRank.ranks (same
+    * integer algebra).
+    */
+  private def seqRanks(edges: Set[(Long, Long)], iters: Int): Map[Long, Long] = {
+    import graft.ops.PageRank
+    val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
+    val n = nodes.size.toLong
+    val outDeg = edges.toSeq.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
+    var rank = nodes.map(_ -> PageRank.scale / n).toMap
+    val base = (PageRank.scale * 15L / 100L) / n
+    (1 to iters).foreach { _ =>
+      val sums = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
+      edges.foreach { case (s, d) => sums(d) += rank(s) / outDeg(s) }
+      rank = nodes.map(nd => nd -> (base + sums(nd) * 85L / 100L)).toMap
+    }
+    rank
+  }
+
   test("fixed-point PageRank: bit-exact vs an independent sequential run; hubs rank highest") {
     import graft.ops.PageRank
     // star graph: 1..8 <-> 0 (both directions, no dangling nodes)
     val star = (1L to 8L).flatMap(i => Seq((i, 0L), (0L, i))).toDF("src", "dst")
     val got = PageRank.ranks(star, 10).as[(Long, Long)].collect().toMap
-    // independent sequential recomputation (same integer algebra)
-    def seqRanks(edges: Set[(Long, Long)], iters: Int): Map[Long, Long] = {
-      val nodes = edges.flatMap(e => Seq(e._1, e._2)).toSeq.sorted
-      val n = nodes.size.toLong
-      val outDeg = edges.toSeq.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-      var rank = nodes.map(_ -> PageRank.scale / n).toMap
-      val base = (PageRank.scale * 15L / 100L) / n
-      (1 to iters).foreach { _ =>
-        val sums = scala.collection.mutable.Map.empty[Long, Long].withDefaultValue(0L)
-        edges.foreach { case (s, d) => sums(d) += rank(s) / outDeg(s) }
-        rank = nodes.map(nd => nd -> (base + sums(nd) * 85L / 100L)).toMap
-      }
-      rank
-    }
     val want = seqRanks((1L to 8L).flatMap(i => Seq((i, 0L), (0L, i))).toSet, 10)
     assert(got == want, s"spark $got != seq $want")
     // the hub dominates every spoke, spokes are symmetric
@@ -1756,6 +1823,19 @@ class ComposeOpsSpec extends SparkSuite {
     val total = g2.values.sum
     assert(total <= PageRank.scale && total > PageRank.scale * 97 / 100,
            s"mass off: $total")
+  }
+
+  test("PageRank frees every iteration's checkpoint but the last; ranks unchanged") {
+    import graft.ops.PageRank
+    // a checkpoint's blocks belong to its RDD: the call may leave only the
+    // last iteration's ranks, which its result reads
+    val sc = spark.sparkContext
+    val edges = (1L to 8L).flatMap(i => Seq((i, 0L), (0L, i)))
+    val before = sc.getPersistentRDDs.keySet
+    val ranks = PageRank.ranks(edges.toDF("src", "dst"), 10)
+    val held = sc.getPersistentRDDs.keySet -- before
+    assert(held.size == 1, s"10 iterations left ${held.size} checkpoints")
+    assert(ranks.as[(Long, Long)].collect().toMap == seqRanks(edges.toSet, 10))
   }
 
   test("decontaminate property: flagged iff a pure-Scala oracle finds shared n-grams") {
