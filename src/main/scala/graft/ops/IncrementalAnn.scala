@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.LongAccumulator
 
-import graft.ops.Similarity.{Scored, cosine, nearestCell, probeCells}
+import graft.ops.Similarity.Scored
 
 /** Incremental maintenance for the EMBEDDING indexes — the vector-side
   * analogue of [[IncrementalLsh]] (which maintains the text MinHash
@@ -168,17 +168,16 @@ object IncrementalAnn {
         .repartition(1)
         .write.mode("overwrite").parquet(centroidsDir(j))
 
-    private def assign(emb: DataFrame, idCol: String, vecCol: String,
-                       cs: Array[Array[Float]]): DataFrame = {
-      val bc = spark.sparkContext.broadcast(cs)
-      emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec"))
-        .as[(Long, Array[Float])]
-        .mapPartitions { it =>
-          val c = bc.value
-          it.map { case (id, v) => (nearestCell(v, c), id, v) }
-        }
-        .toDF("cell", "id", "vec")
-    }
+    /** Assign `emb`'s (idCol, vecCol) rows to cells of `cs` and write
+      * them as the postings slot r<k> of epoch `j`.
+      */
+    private def writeSlot(j: Int, k: Int, emb: DataFrame, idCol: String,
+                          vecCol: String, cs: Array[Array[Float]]): Unit =
+      Similarity.assignCells(
+          emb.select(col(idCol).cast("long").as("id"), col(vecCol).as("vec")),
+          spark.sparkContext.broadcast(cs))
+        .write.partitionBy("cell").mode("overwrite")
+        .parquet(s"${cellsDir(j)}/r$k")
 
     private def postings(j: Int): DataFrame = {
       val rs = RoundSlots.roundIdxs(cellsDir(j)).toSeq.sorted
@@ -269,9 +268,7 @@ object IncrementalAnn {
                     s"slot epoch=$slotEpoch round=$slot (only (0, 0))")
           val cs = Similarity.kmeansDistributed(spark, newEmb, idCol, vecCol,
                                                 nCells, iters)
-          assign(newEmb, idCol, vecCol, cs)
-            .write.partitionBy("cell").mode("overwrite")
-            .parquet(s"${cellsDir(0)}/r0")
+          writeSlot(0, 0, newEmb, idCol, vecCol, cs)
           writeCentroids(0, cs)
           return (0, 0)
         } else (j0, centroids())
@@ -299,9 +296,7 @@ object IncrementalAnn {
                     s"epoch $j, found $existing")
           kk
       }
-      assign(newEmb, idCol, vecCol, cs)
-        .write.partitionBy("cell").mode("overwrite")
-        .parquet(s"${cellsDir(j)}/r$k")
+      writeSlot(j, k, newEmb, idCol, vecCol, cs)
       if (retrainEvery > 0 && k + 1 >= retrainEvery) {
         // re-train into epoch j+1: assignments first, centroids LAST —
         // a death anywhere before the centroids commit leaves e(j+1)
@@ -309,9 +304,7 @@ object IncrementalAnn {
         val all = postings(j)
         val cs2 = Similarity.kmeansDistributed(spark, all, "id", "vec",
                                                nCells, iters)
-        assign(all, "id", "vec", cs2)
-          .write.partitionBy("cell").mode("overwrite")
-          .parquet(s"${cellsDir(j + 1)}/r0")
+        writeSlot(j + 1, 0, all, "id", "vec", cs2)
         writeCentroids(j + 1, cs2)
         (j + 1, 0)
       } else (j, k)
@@ -327,40 +320,15 @@ object IncrementalAnn {
     def topK(queryIds: Seq[Long], k: Int, nProbe: Int = 4): Dataset[Scored] = {
       val j = activeEpoch()
       require(j >= 0, s"IVF index at $indexDir has no committed epoch")
-      val cs = centroids()
-      val bc = spark.sparkContext.broadcast(cs)
       val all = postings(j)
-      val queries = all
-        .filter(col("id").isin(queryIds.map(Long.box): _*))
-        .select(col("id"), col("vec"))
-        .as[(Long, Array[Float])]
-        .flatMap { case (q, v) =>
-          probeCells(v, bc.value, nProbe).iterator.map(c => (c, q, v))
-        }
-        .toDF("cell", "query_id", "qvec")
-      val probedCells = queries.select("cell").distinct()
-        .as[Int].collect().toSeq
-      val qSet = queryIds.toSet
-      val scored = all
+      Similarity.probeAndRerank(
+          all.filter(col("id").isin(queryIds.map(Long.box): _*))
+            .select(col("id"), col("vec")).as[(Long, Array[Float])],
+          spark.sparkContext.broadcast(centroids()), nProbe, queryIds, k) { probes =>
+        val probedCells = probes.select("cell").distinct().as[Int].collect().toSeq
         // partition-pruned scan: only the probed cells' files are read
-        .filter(col("cell").isin(probedCells.map(Int.box): _*))
-        .join(broadcast(queries), Seq("cell"))
-        .filter(col("id") =!= col("query_id"))
-        .select(col("query_id"), col("id"), col("qvec"), col("vec"))
-        .as[(Long, Long, Array[Float], Array[Float])]
-        .filter(t => !qSet.contains(t._2))
-        .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-      implicit val ord: Ordering[Scored] =
-        Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-      scored.groupByKey(_.query_id)
-        .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-          val heap = scala.collection.mutable.PriorityQueue.empty[Scored](ord)
-          it.foreach { s =>
-            if (heap.size < k) heap.enqueue(s)
-            else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-          }
-          heap.dequeueAll.sorted(ord)
-        }
+        all.filter(col("cell").isin(probedCells.map(Int.box): _*))
+      }
     }
   }
 }

@@ -21,15 +21,15 @@ import graft.util.Pinned
   * pathological bucket: a corpus that is mostly near-identical (exactly
   * the input near-dup removal exists for) lands m rows in one (band,
   * bucket) and would yield m² candidate pairs in one task. The emitter
-  * bounds every bucket to its `cap` smallest ids — deterministic, O(cap)
-  * task memory, O(cap²) task output — and counts the rows it drops in a
-  * named `LongAccumulator` (visible in the Spark UI and to callers), so
-  * truncation is never silent — standard accumulator semantics apply:
-  * task retries and repeated actions over an un-cached result re-add
-  * their counts, so read it as a saw-truncation indicator and upper
-  * bound, not an exact tally. A row dropped from one oversized bucket
-  * can still pair through its other bands/tables, so recall degrades
-  * gracefully instead of the job dying.
+  * bounds every bucket to its `cap` smallest ids ([[BestK]]) —
+  * deterministic, O(cap) task memory, O(cap²) task output — and counts
+  * the rows it drops in a named `LongAccumulator` (visible in the Spark
+  * UI and to callers), so truncation is never silent — standard
+  * accumulator semantics apply: task retries and repeated actions over
+  * an un-cached result re-add their counts, so read it as a
+  * saw-truncation indicator and upper bound, not an exact tally. A row
+  * dropped from one oversized bucket can still pair through its other
+  * bands/tables, so recall degrades gracefully instead of the job dying.
   *
   * The banded input carries (band, bucket, id) ONLY: fat payloads
   * (shingle arrays, embeddings) are joined back per surviving candidate
@@ -147,7 +147,9 @@ object LshPairs {
   }
 
   /** The pairs of a bucket-sorted member stream: one bucket run at a
-    * time, split by band, each band's group capped on its own.
+    * time, split by band, each (band, bucket) group capped on its own to
+    * its `cap` smallest ids by a [[BestK]] on id alone (tag and new flag
+    * ride along); every member a group sheds counts in `dropped`.
     */
   private def bucketPairs(rows: Iterator[(Long, Array[Long])], cap: Int,
                           dropped: LongAccumulator): Iterator[(Long, Long)] = {
@@ -156,58 +158,29 @@ object LshPairs {
       def hasNext: Boolean = in.hasNext
       def next(): Iterator[(Long, Long)] = {
         val bucket = in.head._1
-        val bands = mutable.LongMap.empty[Capped]
+        val bands = mutable.LongMap.empty[BestK[Member]]
         while (in.hasNext && in.head._1 == bucket) {
           val m = in.next()._2
-          bands.getOrElseUpdate(m(0) >>> 1, new Capped(cap, dropped))
+          bands.getOrElseUpdate(m(0) >>> 1, new BestK(cap, ById))
             .add(Member(m(1), m(2), (m(0) & 1L) == 1L))
         }
-        bands.valuesIterator.flatMap(_.pairs)
+        bands.valuesIterator.flatMap { group =>
+          dropped.add(group.dropped)
+          keptPairs(group.result)
+        }
       }
     }.flatten
   }
 
-  /** One (band, bucket) group, capped to its `cap` smallest ids. The
-    * common bucket is tiny (a handful of ids): members collect into a
-    * flat buffer and only heapify ON overflow — allocating a
-    * PriorityQueue for every group was measurably the hot spot. The
-    * overflow path is a bounded max-heap keeping the cap smallest ids
-    * (ordering on id alone, tag and new flag ride along), deterministic
-    * regardless of shuffle arrival order; every member it sheds counts
-    * in `dropped`.
+  /** Pairs (id_a < id_b) of a group's kept members, ascending by id, with
+    * equal tags (0 == 0 untagged) and at least one new member.
     */
-  private final class Capped(cap: Int, dropped: LongAccumulator) {
-    private val buf = new mutable.ArrayBuffer[Member](4)
-    private var heap: mutable.PriorityQueue[Member] = null
-
-    def add(e: Member): Unit =
-      if (heap == null) {
-        buf += e
-        if (buf.length > cap) {
-          heap = mutable.PriorityQueue.empty[Member](ById)
-          heap ++= buf
-          heap.dequeue() // shed the max back down to cap
-          dropped.add(1L)
-        }
-      } else if (e.id < heap.head.id) {
-        heap.dequeue(); heap.enqueue(e); dropped.add(1L)
-      } else dropped.add(1L)
-
-    /** Kept pairs (id_a < id_b) with equal tags (0 == 0 untagged) and
-      * at least one new member.
-      */
-    def pairs: Iterator[(Long, Long)] = {
-      val ids: collection.Seq[Member] =
-        if (heap == null) {
-          val a = buf.toArray; java.util.Arrays.sort(a, ById); a // ascending
-        } else heap.dequeueAll.reverse // ascending
-      ids.indices.iterator.flatMap { i =>
-        (i + 1 until ids.length).iterator
-          .filter(j => (ids(i).isNew || ids(j).isNew) && ids(i).tag == ids(j).tag)
-          .map(j => (ids(i).id, ids(j).id))
-      }
+  private def keptPairs(ids: collection.Seq[Member]): Iterator[(Long, Long)] =
+    ids.indices.iterator.flatMap { i =>
+      (i + 1 until ids.length).iterator
+        .filter(j => (ids(i).isNew || ids(j).isNew) && ids(i).tag == ids(j).tag)
+        .map(j => (ids(i).id, ids(j).id))
     }
-  }
 
   /** Join `pairs` (id_a, id_b) back onto `lookup` (id, payload), adding
     * columns payload_a and payload_b; `side` wraps each lookup side (a

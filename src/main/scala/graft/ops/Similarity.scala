@@ -1,7 +1,6 @@
 package graft.ops
 
-import scala.collection.mutable
-
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -10,7 +9,7 @@ import graft.synthweb.SyntheticWeb.mix64
 /** Approximate-nearest-neighbor search over an embedding column
   * (array<float>).
   *
-  * Two paths:
+  * Three paths, plus a persisted index:
   *   - [[bruteForceTopK]] — exact cosine top-k. One pass over the corpus
   *     with the (small) query set broadcast; per-partition bounded heaps
   *     keep memory at O(queries × k); a final tiny per-query merge picks
@@ -25,8 +24,19 @@ import graft.synthweb.SyntheticWeb.mix64
   *     Hyperplane components are a pure seeded function of
   *     (seed, table, bit, dim) generated on the fly inside the task —
   *     no broadcast, no driver-side action, no dimension probe.
+  *   - [[ivfTopK]] — IVF: a seeded k-means quantizer assigns the corpus
+  *     to cells map-side; each query probes its `nProbe` nearest cells
+  *     and re-ranks exactly inside them.
+  *   - [[IncrementalAnn.IvfIndex]] — the same IVF search over persisted
+  *     postings appended per ingest round, its scan pruned to the
+  *     probed cells' files.
   *
-  * Query-exclusion semantics (both paths): ALL ids in `queryIds` are
+  * Every path keeps each query's k best through one bounded heap
+  * ([[BestK]], merged by [[topKPerQuery]]), and both IVF paths share one
+  * cell assignment ([[assignCells]]) and one probe-and-rerank
+  * ([[probeAndRerank]]).
+  *
+  * Query-exclusion semantics (every path): ALL ids in `queryIds` are
   * excluded from candidate neighbors — a query is never returned as
   * another query's neighbor. This keeps the query/corpus roles disjoint
   * (self-join semantics); pass a query's id outside `queryIds` via a
@@ -65,39 +75,40 @@ object Similarity {
       .collect()
       .sortBy(_._1)
     val bc = spark.sparkContext.broadcast(queries)
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-
     val partials = emb
       .select(col(idCol).cast("long"), col(vecCol))
       .as[(Long, Array[Float])]
       .mapPartitions { it =>
         val qs = bc.value
-        // one bounded heap per query; head = worst of the kept k
-        // (PriorityQueue dequeues the ord-max, and ord sorts best-first,
-        // so the ord-max IS the worst kept entry)
-        val heaps = qs.map(_ => mutable.PriorityQueue.empty[Scored](ord))
+        val best = qs.map(_ => new BestK(k, ByScore)) // one per query
         it.foreach { case (id, vec) =>
-          var qi = 0
-          while (qi < qs.length) {
-            val (qid, qvec) = qs(qi)
-            if (id != qid && !qSet.contains(id)) {
-              val s = Scored(qid, id, cosine(qvec, vec))
-              val h = heaps(qi)
-              if (h.size < k) h.enqueue(s)
-              else if (ord.lt(s, h.head)) { h.dequeue(); h.enqueue(s) }
+          if (!qSet.contains(id)) {
+            var qi = 0
+            while (qi < qs.length) {
+              best(qi).add(Scored(qs(qi)._1, id, cosine(qs(qi)._2, vec)))
+              qi += 1
             }
-            qi += 1
           }
         }
-        heaps.iterator.flatMap(_.iterator)
+        best.iterator.flatMap(_.result)
       }
-    partials
-      .groupByKey(_.query_id)
-      .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        it.toVector.sorted(ord).take(k)
-      }
+    topKPerQuery(partials, k)
+  }
+
+  /** Best first: higher sim, then lower neighbor id. */
+  private[ops] val ByScore: Ordering[Scored] =
+    Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
+
+  /** Each query's `k` best rows of `scored`, best first ([[BestK]] per
+    * query group) — the one merge of every top-k path.
+    */
+  private[ops] def topKPerQuery(scored: Dataset[Scored], k: Int): Dataset[Scored] = {
+    import scored.sparkSession.implicits._
+    scored.groupByKey(_.query_id).flatMapGroups { (_: Long, it: Iterator[Scored]) =>
+      val best = new BestK(k, ByScore)
+      it.foreach(best.add)
+      best.result
+    }
   }
 
   /** Deterministic hyperplane component for (seed, table, bit, dim) —
@@ -233,14 +244,10 @@ object Similarity {
       .as[(Long, Int, Long, Long)]
       .groupByKey(t => (t._1, t._2, t._3))
       .flatMapGroups { (key: (Long, Int, Long), it: Iterator[(Long, Int, Long, Long)]) =>
-        val heap = mutable.PriorityQueue.empty[Long] // max-heap: keep smallest
-        it.foreach { t =>
-          if (heap.size < bucketCap) heap.enqueue(t._4)
-          else if (t._4 < heap.head) {
-            heap.dequeue(); heap.enqueue(t._4); dropped.add(1L)
-          } else dropped.add(1L)
-        }
-        heap.dequeueAll.iterator.map((id: Long) => (key._1, id))
+        val ids = new BestK(bucketCap, Ordering.Long)
+        it.foreach(t => ids.add(t._4))
+        dropped.add(ids.dropped)
+        ids.result.iterator.map((id: Long) => (key._1, id))
       }
       .toDF("query_id", "id")
       .dropDuplicates("query_id", "id")
@@ -249,24 +256,12 @@ object Similarity {
     // (query vectors) — both joins map-side, corpus still unshuffled
     val qRows = idRows.filter(col("id").isin(queryIds.map(Long.box): _*))
       .select(col("id").as("query_id"), col("vec").as("qvec"))
-    val scored = idRows
+    topKPerQuery(idRows
       .join(broadcast(capped), Seq("id"))
       .join(broadcast(qRows), Seq("query_id"))
       .select(col("query_id"), col("id"), col("qvec"), col("vec"))
       .as[(Long, Long, Array[Float], Array[Float])]
-      .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-    scored.groupByKey(_.query_id)
-      .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        val heap = mutable.PriorityQueue.empty[Scored](ord)
-        it.foreach { s =>
-          if (heap.size < k) heap.enqueue(s)
-          else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-        }
-        heap.dequeueAll.sorted(ord)
-      }
+      .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }, k)
   }
 
   /** Deterministic seeded k-means (Lloyd) over a small driver-side
@@ -278,30 +273,44 @@ object Similarity {
   private[graft] def kmeans(sample: Array[Array[Float]], nCells: Int,
                             iters: Int, seed: Long): Array[Array[Float]] = {
     require(sample.nonEmpty, "kmeans needs a non-empty sample")
-    val dim = sample.head.length
     // seeded init: pick nCells sample points by splitmix64 order
-    var centroids = sample.zipWithIndex
+    val centroids = sample.zipWithIndex
       .sortBy { case (_, i) => mix64(seed ^ i.toLong) }
       .take(math.min(nCells, sample.length))
       .map(_._1.clone())
-    var it = 0
-    while (it < iters) {
-      val sums = Array.fill(centroids.length)(new Array[Double](dim))
-      val counts = new Array[Int](centroids.length)
-      sample.foreach { v =>
-        val c = nearestCell(v, centroids)
-        counts(c) += 1
-        var d = 0
-        while (d < dim) { sums(c)(d) += v(d); d += 1 }
-      }
-      centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-        else Array.tabulate(dim)(d => (sums(c)(d) / counts(c)).toFloat)
-      }.toArray
-      it += 1
+    (0 until iters).foldLeft(centroids) { (cs, _) =>
+      val (sums, counts) = cellSums(sample.iterator, cs)
+      means(cs, sums, counts)
     }
-    centroids
   }
+
+  /** Lloyd's assignment step over `vs`: per cell of `centroids`, the
+    * sum vector and count of the points nearest to it, summed in `vs`
+    * order — the one pass of [[kmeans]] and [[kmeansDistributed]].
+    */
+  private def cellSums(vs: Iterator[Array[Float]], centroids: Array[Array[Float]])
+      : (Array[Array[Double]], Array[Long]) = {
+    val dim = centroids(0).length
+    val sums = Array.fill(centroids.length)(new Array[Double](dim))
+    val counts = new Array[Long](centroids.length)
+    vs.foreach { v =>
+      val c = nearestCell(v, centroids)
+      counts(c) += 1
+      var d = 0
+      while (d < dim) { sums(c)(d) += v(d); d += 1 }
+    }
+    (sums, counts)
+  }
+
+  /** Lloyd's update step: each cell's mean of its points; an empty cell
+    * keeps its centroid.
+    */
+  private def means(centroids: Array[Array[Float]], sums: Array[Array[Double]],
+                    counts: Array[Long]): Array[Array[Float]] =
+    centroids.indices.map { c =>
+      if (counts(c) == 0) centroids(c)
+      else Array.tabulate(centroids(c).length)(d => (sums(c)(d) / counts(c)).toFloat)
+    }.toArray
 
   /** Index of the max-cosine centroid (ties -> lowest index). */
   private[graft] def nearestCell(v: Array[Float],
@@ -356,42 +365,53 @@ object Similarity {
       kmeans(sample, nCells, iters, seed)
     }
     val bc = spark.sparkContext.broadcast(centroids)
+    probeAndRerank(base.as[(Long, Array[Float])].filter(t => queryIds.contains(t._1)),
+                   bc, nProbe, queryIds, k)(_ => assignCells(base, bc))
+  }
 
-    val cells = base.as[(Long, Array[Float])]
+  /** `idVecs` (id, vec) with each row's nearest cell of the broadcast
+    * centroids, as (cell, id, vec): one map-side pass, no shuffle — the
+    * corpus assignment of [[ivfTopK]] and of the [[IncrementalAnn.IvfIndex]]
+    * postings.
+    */
+  private[ops] def assignCells(idVecs: DataFrame,
+                               bc: Broadcast[Array[Array[Float]]]): DataFrame = {
+    import idVecs.sparkSession.implicits._
+    idVecs.as[(Long, Array[Float])]
       .mapPartitions { it =>
         val cs = bc.value
         it.map { case (id, v) => (nearestCell(v, cs), id, v) }
       }
       .toDF("cell", "id", "vec")
+  }
 
-    val qProbes = base.as[(Long, Array[Float])]
-      .filter(t => queryIds.contains(t._1))
+  /** The probe-and-rerank of [[ivfTopK]] and [[IncrementalAnn.IvfIndex.topK]]:
+    * each query row (id, vec) expands to its `nProbe` nearest cells of
+    * the broadcast centroids, as (cell, query_id, qvec) rows;
+    * `candidates` maps that expansion to the (cell, id, vec) rows to
+    * search (the index prunes its postings scan to the probed cells).
+    * Candidates join the broadcast expansion on cell, every id of
+    * `queryIds` is excluded from neighbors, and an exact cosine re-rank
+    * keeps each query's `k` best ([[topKPerQuery]]).
+    */
+  private[ops] def probeAndRerank(queries: Dataset[(Long, Array[Float])],
+                                  bc: Broadcast[Array[Array[Float]]], nProbe: Int,
+                                  queryIds: Seq[Long], k: Int)(
+                                  candidates: DataFrame => DataFrame): Dataset[Scored] = {
+    import queries.sparkSession.implicits._
+    val probes = queries
       .flatMap { case (q, v) =>
         probeCells(v, bc.value, nProbe).iterator.map(c => (c, q, v))
       }
       .toDF("cell", "query_id", "qvec")
-
     val qSet = queryIds.toSet
-    val scored = cells
-      .join(broadcast(qProbes), Seq("cell"))
+    topKPerQuery(candidates(probes)
+      .join(broadcast(probes), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"), col("qvec"), col("vec"))
       .as[(Long, Long, Array[Float], Array[Float])]
       .filter(t => !qSet.contains(t._2))
-      .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }
-
-    implicit val ord: Ordering[Scored] =
-      Ordering.by((s: Scored) => (-s.sim, s.neighbor_id))
-    scored
-      .groupByKey(_.query_id)
-      .flatMapGroups { (_: Long, it: Iterator[Scored]) =>
-        val heap = mutable.PriorityQueue.empty[Scored](ord)
-        it.foreach { s =>
-          if (heap.size < k) heap.enqueue(s)
-          else if (ord.lt(s, heap.head)) { heap.dequeue(); heap.enqueue(s) }
-        }
-        heap.dequeueAll.sorted(ord)
-      }
+      .map { case (q, id, qv, v) => Scored(q, id, cosine(qv, v)) }, k)
   }
 
   /** Distributed Lloyd iterations over the FULL corpus — the
@@ -426,16 +446,7 @@ object Similarity {
       val bc = spark.sparkContext.broadcast(centroids)
       val partials = base
         .mapPartitions { rows =>
-          val cs = bc.value
-          val dim = cs(0).length
-          val sums = Array.fill(cs.length)(new Array[Double](dim))
-          val counts = new Array[Long](cs.length)
-          rows.foreach { case (_, v) =>
-            val c = nearestCell(v, cs)
-            counts(c) += 1
-            var d = 0
-            while (d < v.length) { sums(c)(d) += v(d); d += 1 }
-          }
+          val (sums, counts) = cellSums(rows.map(_._2), bc.value)
           Iterator.single(
             (org.apache.spark.TaskContext.getPartitionId(), sums, counts))
         }
@@ -453,10 +464,7 @@ object Similarity {
           c += 1
         }
       }
-      centroids = centroids.indices.map { c =>
-        if (counts(c) == 0) centroids(c) // empty cell keeps its centroid
-        else Array.tabulate(dim)(d => (sums(c)(d) / counts(c)).toFloat)
-      }.toArray
+      centroids = means(centroids, sums, counts)
       bc.destroy()
       it += 1
     }

@@ -218,7 +218,7 @@ final class CrawlOracle(cfg: CrawlConfig) {
               UrlCanon.urlHash(UrlCanon.canonicalize(u)))))
           }
         }
-        val ranks = seqRanks(edges, cfg.rankIters)
+        val ranks = seqRanks(edges, CrawlScheduler.RankIters)
         val maxRank = if (ranks.isEmpty) 0L else ranks.values.max
         cands.keys.toVector.foreach { h =>
           val c = cands(h)

@@ -33,14 +33,12 @@ final case class CrawlConfig(
     hostCapacity: Double = 8.0, // politeness token bucket capacity
     hostRefill: Double = 8.0, // tokens refilled per scheduling round
     bloomBits: Int = 1 << 21, // TOTAL bloom bits (sharded across buckets)
-    bloomHashes: Int = 5,
     compactEvery: Int = 8, // segment cadence: index and frontier segments merge every compactEvery rounds
     simulateLatency: Boolean = false,
     // opt-in rank-informed frontier priority: round k's cumulative link
     // graph feeds round k+1's sort key (deterministic integer PageRank —
     // see the candRanked step); off by default (discovery-order crawl)
     rankPriority: Boolean = false,
-    rankIters: Int = 4, // damped PR iterations per round when enabled
     // transport plug point (ST4): the default crawls the deterministic
     // synthetic web in-process; HttpFetcherFactory swaps in real HTTP
     // against a loopback SynthWebServer gateway — same fetch log
@@ -51,6 +49,11 @@ final case class CrawlConfig(
     * mergeable/incrementable.
     */
   def bloomShardBits: Int = math.max(1 << 14, bloomBits / nBuckets)
+
+  /** Hash functions of a new bloom shard: the constant
+    * [[CrawlScheduler.BloomHashes]], not a knob.
+    */
+  def bloomHashes: Int = CrawlScheduler.BloomHashes
 }
 
 final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
@@ -77,7 +80,7 @@ final case class RoundResult(round: Int, selected: Long, fetchedOk: Long,
   * frontier update: delta rows (fetched/blocked/selected hashes,
   *          retries, surviving candidates) ─▶ one task per touched
   *          url_hash bucket ─▶ exact exclusion + bucket-file rewrite
-  * commit: frontier bucket files, seen Δ, docs, metrics, host_state',
+  * commit: frontier bucket files, seen Δ, docs, host_state',
   *         robots', fetch_log, filter shards — one atomic manifest
   * }}}
   *
@@ -541,7 +544,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
         val ranks =
           if (all.isEmpty)
             spark.range(0).select(col("id").as("node"), col("id").as("rank"))
-          else graft.ops.PageRank.ranks(all, cfg.rankIters)
+          else graft.ops.PageRank.ranks(all, RankIters)
         // max-relative bucket (rankedPriority): integer max over the
         // rank table — one driver-scale scalar, exact at any parallelism
         val maxRank = ranks.agg(max(col("rank"))).head() match {
@@ -792,7 +795,6 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
       sc.setJobDescription(s"crawl r$r: filter shards")
       val idxMergeEvery = cfg.compactEvery
       val shardBits = cfg.bloomShardBits
-      val bloomK = cfg.bloomHashes
       val updates = collectInSqlJob(byBucket(seenDelta)(s => bucketOf(s.host_hash, nb))
         .map { case (b, deltaRows) =>
           val segRounds = seenIdxSegs.getOrElse(b, Nil)
@@ -801,7 +803,7 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
           // filters or indexes from empty state silently loses dedup.
           // A bucket without a shard has no segments either
           // (requireShardPerIndexedBucket): its filter starts empty
-          val bf = filterRounds.get(b).fold(new BloomFilter(shardBits, bloomK))(fr =>
+          val bf = filterRounds.get(b).fold(new BloomFilter(shardBits, BloomHashes))(fr =>
             BloomFilter.deserialize(
               Snapshots.requiredBytesAt(Snapshots.bloomShardPathAt(root, fr, b))))
           val deltaHashes = mutable.ArrayBuffer.empty[String]
@@ -1073,6 +1075,14 @@ final class CrawlScheduler(spark: SparkSession, cfg: CrawlConfig) {
 }
 
 object CrawlScheduler {
+  /** Hash functions of a new bloom shard. A shard stores its own k, so
+    * shards written under another k still read as written.
+    */
+  val BloomHashes = 5
+
+  /** Damped PageRank iterations per round under `rankPriority`. */
+  val RankIters = 4
+
   /** Thread pool for concurrent commit-write jobs (daemon threads: the
     * pool must never pin a JVM shutdown). Spark supports concurrent
     * job submission from multiple threads of one session.

@@ -15,7 +15,7 @@ import org.json4s.jackson.JsonMethods
   *
   * Layout:
   * {{{
-  *   <root>/r00003/{seen_delta,docs,metrics,host_state,robots,
+  *   <root>/r00003/{seen_delta,docs,host_state,robots,
   *                  fetch_log}/                  (parquet data files)
   *   <root>/r00004/seen_full/                    (a revocation's seen base)
   *   <root>/r00003/filters/bloom-0007.bin        (bloom shard per host bucket)
@@ -35,8 +35,6 @@ import org.json4s.jackson.JsonMethods
 final class Snapshots(val root: String) {
   private def dir(round: Int) = f"$root/r$round%05d"
   def tablePath(round: Int, name: String): String = s"${dir(round)}/$name"
-  def bloomShardPath(round: Int, bucket: Int): String =
-    Snapshots.bloomShardPathAt(root, round, bucket)
   private def manifestPath(round: Int) = f"$root/manifests/m-$round%05d.json"
 
   import Snapshots.Manifest
@@ -145,9 +143,6 @@ final class Snapshots(val root: String) {
     }
   }
 
-  def readBloomShard(round: Int, bucket: Int): Option[Array[Byte]] =
-    Snapshots.readBytesAt(bloomShardPath(round, bucket))
-
   /** All docs table paths up to and including `round` (docs append per
     * round; the union is the full corpus).
     */
@@ -157,10 +152,6 @@ final class Snapshots(val root: String) {
 
   def fetchLogPaths(upToRound: Int): Seq[String] =
     (0 to upToRound).map(r => tablePath(r, "fetch_log"))
-      .filter(p => Files.exists(Paths.get(p)))
-
-  def metricsPaths(upToRound: Int): Seq[String] =
-    (0 to upToRound).map(r => tablePath(r, "metrics"))
       .filter(p => Files.exists(Paths.get(p)))
 }
 

@@ -290,7 +290,8 @@ class CrawlSchedulerSpec extends SparkSuite {
     val fr = m.filterRounds(bucket)
     assert(fr == snaps.readManifest(r - 1).filterRounds(bucket),
            "revoke must leave the bucket's bloom shard round as it was")
-    val bf = BloomFilter.deserialize(snaps.readBloomShard(fr, bucket).get)
+    val bf = BloomFilter.deserialize(
+      Snapshots.readBytesAt(Snapshots.bloomShardPathAt(snaps.root, fr, bucket)).get)
     assert(bf.mightContain(hashOf(revokedUrl)), "bloom cannot delete (stale ok)")
 
     val last = sched.run()

@@ -405,6 +405,13 @@ class SimilaritySpec extends SparkSuite {
     assert(recallFull >= recall, s"more probes lost recall: $recallFull < $recall")
     // probing ALL cells IS brute force
     assert(recallFull == 1.0, s"all-cell probe should be exact: $recallFull")
+    // ... down to the re-rank's sims and each query's best-first order
+    def rows(ds: org.apache.spark.sql.Dataset[Similarity.Scored]) =
+      ds.collect().toSeq.map(s => (s.query_id, s.neighbor_id, s.sim)).groupBy(_._1)
+    assert(rows(Similarity.ivfTopK(spark, emb, "vec_id", "embedding", queries, 5,
+                                   nCells = 16, nProbe = 16)) ==
+             rows(Similarity.bruteForceTopK(spark, emb, "vec_id", "embedding",
+                                            queries, 5)))
   }
 
   test("distributed k-means: deterministic, no corpus collect, good IVF recall") {
